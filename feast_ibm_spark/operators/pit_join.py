@@ -79,7 +79,7 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql.types import TimestampNTZType
 
 
 @dataclass
@@ -144,17 +144,18 @@ def point_in_time_join(
     feature_views: list[FeatureViewSpec],
     spine_timestamp_field: str = "event_timestamp",
     full_feature_names: bool = False,
-    strategy: str = "broadcast",
-    persist_spine: bool = False,
+    strategy: str = "auto",
     time_range: tuple | None = None,
     auto_broadcast_rows: int = 5_000_000,
     salt_partition_budget_rows: int | None = 4_000_000,
 ) -> DataFrame:
     """Join every FeatureView onto the spine as-of the spine timestamp.
 
-    ``strategy``: ``broadcast`` | ``shuffle`` | ``union_window`` | ``auto``
-    (see module docstring). ``auto`` (re-derived round 4 from the skew
-    benchmark, NOTES.md "PIT strategy choice"): the melt is the winning
+    ``strategy``: ``auto`` (the default on every entry point) |
+    ``broadcast`` | ``shuffle`` | ``union_window`` |
+    ``union_window_salted`` (see module docstring). ``auto`` (re-derived
+    round 4 from the skew benchmark, NOTES.md "PIT strategy choice"):
+    the melt is the winning
     physical shape at every measured spine size — it never multiplies
     feature rows through a join and absorbs a 50%-hot key in one sorted
     partition — so auto always melts, and the spine row count (from the
@@ -174,19 +175,10 @@ def point_in_time_join(
     (including label/pass-through columns, reference
     ``tests/test_integration.py:160``) survive to the output.
 
-    ``persist_spine`` materializes the spine once: it is consumed by the
-    min/max range aggregate, each view's key-dedup, the final left
-    join, AND (under ``auto``, only when total rows exceed the salt
-    budget) one eager hot-key histogram probe per DISTINCT join-key
-    tuple — so the spine subtree is otherwise recomputed 2 + n_views
-    (+ n_probes) times — turn this on for spines that are EXPENSIVE to
-    derive. Off by default: the round-12 re-measurement first showed the
-    cache "winning" at bench scale, but that was Spark's CacheManager
-    substituting run 1's cache into later identical runs (cross-run
-    reuse, not within-query reuse); with the cache dropped between runs
-    the interleaved A/B is parity-to-slightly-worse (1.00 vs 1.12 s
-    trimmed means at sf0.1) because the one-time cache write costs about
-    what the cheap-spine recomputes save — confirming the round-4 call.
+    ``time_range`` is the spine's ``(min_ts, max_ts, n_rows)`` as
+    returned by ``_spine_time_range``; callers that already ran that
+    probe (the store facade, which also exposes the range as job
+    metadata) pass it in so the tiny aggregate runs once, not twice.
     """
     if strategy not in (
         "broadcast", "shuffle", "union_window", "union_window_salted", "auto"
@@ -198,21 +190,10 @@ def point_in_time_join(
             f"disable the hot-spine probe); got {salt_partition_budget_rows}"
         )
 
-    if persist_spine:
-        spine = spine.persist(StorageLevel.MEMORY_AND_DISK)
-    # Callers that already know the spine's (min, max) event timestamp —
-    # e.g. the store facade, which also exposes it as job metadata — pass
-    # it in so the tiny range aggregate runs once, not twice.
-    n_rows = None
+    lo, hi, n_rows = time_range or _spine_time_range(spine, spine_timestamp_field)
+    small_spine = n_rows <= auto_broadcast_rows
     salted_views: set[str] = set()
-    if time_range is not None:
-        lo, hi = time_range[0], time_range[1]
-        n_rows = time_range[2] if len(time_range) > 2 else None
-    else:
-        lo, hi, n_rows = _spine_time_range(spine, spine_timestamp_field)
     if strategy == "auto":
-        if n_rows is None:  # caller-supplied 2-tuple range: count separately
-            n_rows = spine.count()
         # bucketed carve-out: when every view's source is bucketed on its
         # join keys, the broadcast strategy's feature lineage needs no
         # exchange at all — strictly better than the melt, which unions
@@ -224,7 +205,7 @@ def point_in_time_join(
         # distribution beats a driver/executor OOM on the broadcast build.
         if (
             feature_views
-            and n_rows <= auto_broadcast_rows
+            and small_spine
             and all(
                 v.bucketed_on is not None
                 and set(v.bucketed_on) <= set(v.join_keys)
@@ -269,12 +250,12 @@ def point_in_time_join(
         if view_strategy == "union_window":
             out = _join_one_view_union_window(
                 out, view, spine_timestamp_field, full_feature_names, lo, hi,
-                prune_keys=(n_rows is not None and n_rows <= auto_broadcast_rows),
+                prune_keys=small_spine,
             )
         elif view_strategy == "union_window_salted":
             out = _join_one_view_union_window_salted(
                 out, view, spine_timestamp_field, full_feature_names, lo, hi,
-                prune_keys=(n_rows is not None and n_rows <= auto_broadcast_rows),
+                prune_keys=small_spine,
             )
         else:
             out = _join_one_view(
@@ -284,9 +265,7 @@ def point_in_time_join(
     return out
 
 
-def _prepared_feature_side(
-    view: FeatureViewSpec, lo, hi
-) -> tuple[DataFrame, list[str]]:
+def _prepared_feature_side(view: FeatureViewSpec, lo, hi) -> DataFrame:
     """Project + rename + TTL-bounded prefilter (reference subquery CTE
     ``:655-676``): upper bound ts <= max_spine_ts always; lower bound
     ts >= min_spine_ts - ttl only when TTL != 0. The range predicate is
@@ -313,17 +292,13 @@ def _prepared_feature_side(
         if lo_bound is not None:
             feat = feat.filter(dpc >= str(lo_bound)[:10])
     feat = filter_ts_range(feat, view.timestamp_field, lo_bound, hi)
-    cols = list(
-        dict.fromkeys(
-            [
-                *view.join_keys,
-                view.timestamp_field,
-                *([view.created_timestamp_column] if view.created_timestamp_column else []),
-                *view.features,
-            ]
-        )
-    )
-    return feat.select(*cols), cols
+    cols = [
+        *view.join_keys,
+        view.timestamp_field,
+        *([view.created_timestamp_column] if view.created_timestamp_column else []),
+        *view.features,
+    ]
+    return feat.select(*dict.fromkeys(cols))
 
 
 def _join_one_view(
@@ -335,7 +310,7 @@ def _join_one_view(
     hi,
     broadcast_spine: bool,
 ) -> DataFrame:
-    feat, _ = _prepared_feature_side(view, lo, hi)
+    feat = _prepared_feature_side(view, lo, hi)
 
     # Distinct (keys, ts) — the reference's per-view spine dedup CTE
     # (:626-636) — so the candidate join and window run once per unique
@@ -389,23 +364,13 @@ def _join_one_view(
     return spine.join(winners, on=key_ts, how="left")
 
 
-def _join_one_view_union_window(
-    spine: DataFrame,
-    view: FeatureViewSpec,
-    spine_ts: str,
-    full_feature_names: bool,
-    lo,
-    hi,
-    prune_keys: bool = False,
+def _melt(
+    spine: DataFrame, view: FeatureViewSpec, spine_ts: str, lo, hi, prune_keys: bool
 ) -> DataFrame:
-    """Melt as-of join: one equi-shuffle on the entity keys, no range join.
-
-    Union feature rows (tag 0) with distinct spine rows (tag 1), sort each
-    key partition by (ts, tag, created), and carry the latest feature row
-    forward with ``last(..., ignorenulls=True)``. A feature row at exactly
-    the spine timestamp sorts BEFORE the spine row (tag 0 < 1), preserving
-    the inclusive ``<=`` bound. TTL is enforced afterwards by nulling
-    matches whose timestamp is older than ``spine.ts - ttl``.
+    """The melt both union-window strategies sort: the view's feature rows
+    (tag 0, payload = matched ts + features) unioned with the spine's
+    distinct (keys, ts) rows (tag 1, null payload), the spine timestamp
+    and feature timestamp both renamed ``__ts``.
 
     ``prune_keys`` (round 4): broadcast LEFT SEMI the spine's key set onto
     the feature side before the melt. For a SELECTIVE spine (the typical
@@ -416,7 +381,7 @@ def _join_one_view_union_window(
     but a 100 TB cluster does not. Enabled automatically when the caller
     knows the spine is broadcast-sized; harmless semantically (rows of
     keys absent from the spine can never match)."""
-    feat, _ = _prepared_feature_side(view, lo, hi)
+    feat = _prepared_feature_side(view, lo, hi)
     if prune_keys:
         feat = feat.join(
             F.broadcast(spine.select(*view.join_keys).distinct()),
@@ -436,26 +401,68 @@ def _join_one_view_union_window(
             .drop("__rn", view.created_timestamp_column)
         )
 
-    key_ts = [*view.join_keys, spine_ts]
-    spine_keys = spine.select(*key_ts).distinct()
-
     feat_tagged = feat.select(
-        *[F.col(k) for k in view.join_keys],
+        *view.join_keys,
         F.col(view.timestamp_field).alias("__ts"),
         F.lit(0).alias("__tag"),
         F.struct(
-            F.col(view.timestamp_field).alias("__matched_ts"),
-            *[F.col(c) for c in view.features],
+            F.col(view.timestamp_field).alias("__matched_ts"), *view.features
         ).alias("__payload"),
     )
-    spine_tagged = spine_keys.select(
-        *[F.col(k) for k in view.join_keys],
+    spine_tagged = spine.select(*view.join_keys, spine_ts).distinct().select(
+        *view.join_keys,
         F.col(spine_ts).alias("__ts"),
         F.lit(1).alias("__tag"),
         F.lit(None).cast(feat_tagged.schema["__payload"].dataType).alias("__payload"),
     )
+    return feat_tagged.unionByName(spine_tagged)
 
-    melted = feat_tagged.unionByName(spine_tagged)
+
+def _melt_winners_joined(
+    spine: DataFrame,
+    view: FeatureViewSpec,
+    spine_ts: str,
+    full_feature_names: bool,
+    matched: DataFrame,
+) -> DataFrame:
+    """Finish a melt: ``matched`` holds one row per distinct spine
+    (keys, ``__ts``) with its carried ``__match`` payload. Null matches
+    older than ``spine.ts - ttl`` (TTL != 0 only), then left-join the
+    winners back onto the spine (reference :765-778)."""
+    if view.ttl_seconds:
+        in_ttl = F.col("__match.__matched_ts") >= (
+            F.col("__ts") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
+        )
+        matched = matched.withColumn("__match", F.when(in_ttl, F.col("__match")))
+    winners = matched.select(
+        *view.join_keys,
+        F.col("__ts").alias(spine_ts),
+        *[
+            F.col(f"__match.{c}").alias(_out_name(view, c, full_feature_names))
+            for c in view.features
+        ],
+    )
+    return spine.join(winners, on=[*view.join_keys, spine_ts], how="left")
+
+
+def _join_one_view_union_window(
+    spine: DataFrame,
+    view: FeatureViewSpec,
+    spine_ts: str,
+    full_feature_names: bool,
+    lo,
+    hi,
+    prune_keys: bool = False,
+) -> DataFrame:
+    """Melt as-of join: one equi-shuffle on the entity keys, no range join.
+
+    Sort each key partition of the melt (``_melt``) by (ts, tag) and carry
+    the latest feature row forward with ``last(..., ignorenulls=True)``. A
+    feature row at exactly the spine timestamp sorts BEFORE the spine row
+    (tag 0 < 1), preserving the inclusive ``<=`` bound. TTL is enforced
+    afterwards by nulling matches whose timestamp is older than
+    ``spine.ts - ttl``."""
+    melted = _melt(spine, view, spine_ts, lo, hi, prune_keys)
     w = (
         Window.partitionBy(*view.join_keys)
         .orderBy(F.col("__ts").asc(), F.col("__tag").asc())
@@ -464,24 +471,7 @@ def _join_one_view_union_window(
     carried = melted.withColumn(
         "__match", F.last("__payload", ignorenulls=True).over(w)
     ).filter(F.col("__tag") == 1)
-
-    if view.ttl_seconds:
-        in_ttl = F.col("__match.__matched_ts") >= (
-            F.col("__ts") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
-        )
-        carried = carried.withColumn(
-            "__match", F.when(in_ttl, F.col("__match"))
-        )
-
-    winners = carried.select(
-        *[F.col(k) for k in view.join_keys],
-        F.col("__ts").alias(spine_ts),
-        *[
-            F.col(f"__match.{c}").alias(_out_name(view, c, full_feature_names))
-            for c in view.features
-        ],
-    )
-    return spine.join(winners, on=key_ts, how="left")
+    return _melt_winners_joined(spine, view, spine_ts, full_feature_names, carried)
 
 
 def _join_one_view_union_window_salted(
@@ -518,26 +508,7 @@ def _join_one_view_union_window_salted(
     requested through a small spine still benefits — the prune drops
     every OTHER key's history before the bucketed shuffle).
     """
-    feat, _ = _prepared_feature_side(view, lo, hi)
-    if prune_keys:
-        feat = feat.join(
-            F.broadcast(spine.select(*view.join_keys).distinct()),
-            on=view.join_keys,
-            how="left_semi",
-        )
-
-    if view.created_timestamp_column:
-        wdup = Window.partitionBy(*view.join_keys, view.timestamp_field).orderBy(
-            F.col(view.created_timestamp_column).desc()
-        )
-        feat = (
-            feat.withColumn("__rn", F.row_number().over(wdup))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", view.created_timestamp_column)
-        )
-
-    key_ts = [*view.join_keys, spine_ts]
-    spine_keys = spine.select(*key_ts).distinct()
+    melted = _melt(spine, view, spine_ts, lo, hi, prune_keys)
     # NTZ-safe bucketing (round 7, hardened after review): TIMESTAMP
     # casts straight to double (epoch seconds, monotone). TIMESTAMP_NTZ
     # must NOT route through a session-zone cast — a DST spring-forward
@@ -549,44 +520,23 @@ def _join_one_view_union_window_salted(
     # m*60 + s) — non-decreasing in the NTZ value by construction
     # (sub-second values share a bucket second, which is fine: bucket
     # assignment only needs weak monotonicity; within-bucket ordering
-    # uses the full-precision __ts).
-    from pyspark.sql.types import TimestampNTZType
-
-    def bucket_of(c, is_ntz: bool):
-        if is_ntz:
-            secs = (
-                F.unix_date(F.to_date(c)).cast("bigint") * 86400
-                + F.hour(c) * 3600
-                + F.minute(c) * 60
-                + F.second(c)
-            )
-        else:
-            secs = c.cast("double")
-        return F.floor(secs / salt_bucket_seconds).cast("bigint")
-
-    feat_tagged = feat.select(
-        *[F.col(k) for k in view.join_keys],
-        F.col(view.timestamp_field).alias("__ts"),
-        F.lit(0).alias("__tag"),
-        F.struct(
-            F.col(view.timestamp_field).alias("__matched_ts"),
-            *[F.col(c) for c in view.features],
-        ).alias("__payload"),
-    )
-    spine_tagged = spine_keys.select(
-        *[F.col(k) for k in view.join_keys],
-        F.col(spine_ts).alias("__ts"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(feat_tagged.schema["__payload"].dataType).alias("__payload"),
-    )
-    melted = feat_tagged.unionByName(spine_tagged)
-    # one bucket expression over the POST-union dtype: if the two sides'
-    # timestamp types differ the union coerces them first, so bucketing
-    # melted (and deriving bucket_last from melted below) guarantees
-    # both passes see identical bucket boundaries
-    ts_is_ntz = isinstance(melted.schema["__ts"].dataType, TimestampNTZType)
+    # uses the full-precision __ts). The bucket is computed over the
+    # POST-union dtype: if the two sides' timestamp types differ the
+    # union coerces them first, so bucketing melted (and deriving
+    # bucket_last from melted below) guarantees both passes see
+    # identical bucket boundaries.
+    ts = F.col("__ts")
+    if isinstance(melted.schema["__ts"].dataType, TimestampNTZType):
+        secs = (
+            F.unix_date(F.to_date(ts)).cast("bigint") * 86400
+            + F.hour(ts) * 3600
+            + F.minute(ts) * 60
+            + F.second(ts)
+        )
+    else:
+        secs = ts.cast("double")
     melted = melted.withColumn(
-        "__bucket", bucket_of(F.col("__ts"), ts_is_ntz)
+        "__bucket", F.floor(secs / salt_bucket_seconds).cast("bigint")
     )
 
     # phase 1: within-bucket carry — partitions bounded by (key, bucket)
@@ -626,18 +576,4 @@ def _join_one_view_union_window_salted(
         .join(carry, [*view.join_keys, "__bucket"])
         .withColumn("__match", F.coalesce(F.col("__within"), F.col("__carry_in")))
     )
-    if view.ttl_seconds:
-        in_ttl = F.col("__match.__matched_ts") >= (
-            F.col("__ts") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
-        )
-        merged = merged.withColumn("__match", F.when(in_ttl, F.col("__match")))
-
-    winners = merged.select(
-        *[F.col(k) for k in view.join_keys],
-        F.col("__ts").alias(spine_ts),
-        *[
-            F.col(f"__match.{c}").alias(_out_name(view, c, full_feature_names))
-            for c in view.features
-        ],
-    )
-    return spine.join(winners, on=key_ts, how="left")
+    return _melt_winners_joined(spine, view, spine_ts, full_feature_names, merged)

@@ -9,12 +9,13 @@ query -> delete + DROP, ``:535-558``/``:526-532``) collapses into
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.pit_join import FeatureViewSpec, point_in_time_join
+from .operators.pit_join import FeatureViewSpec, _spine_time_range, point_in_time_join
 from .operators.pull_all import time_range_scan
 from .operators.pull_latest import latest_per_key
 from .retrieval import RetrievalMetadata, SparkRetrievalJob
@@ -59,6 +60,21 @@ def _infer_event_timestamp_col(columns: list[str]) -> str:
     )
 
 
+def _write_counted(out: DataFrame, write) -> int:
+    """Run ``write(out.write)`` and return the number of rows written.
+
+    Counts THIS increment's output, not the destination directory — with
+    mode="append" a re-read would count pre-existing snapshots too, and at
+    scale it is a full extra scan. Persisted so the write and the count
+    share one computation."""
+    out = out.persist()
+    try:
+        write(out.write)
+        return out.count()
+    finally:
+        out.unpersist()
+
+
 class SparkOfflineStore:
     """Batch retrieval API. All methods return a lazy SparkRetrievalJob
     (laziness contract: reference ``:313-348``, ``:381``, ``:416``)."""
@@ -75,8 +91,8 @@ class SparkOfflineStore:
         """Point-in-time join of every FeatureView onto the entity spine
         (reference ``get_historical_features``, ``:355-418``).
 
-        Default ``strategy="auto"`` since round 4: the key-pruned melt,
-        measured fastest at every spine shape incl. 50%-hot keys
+        ``strategy="auto"`` (the operator's default too): the key-pruned
+        melt, measured fastest at every spine shape incl. 50%-hot keys
         (NOTES.md "PIT strategy choice"); the explicit strategies remain
         for callers with known shapes."""
         spine = _ensure_spine(spark, entity_df, timestamp_field=spine_timestamp_field)
@@ -97,26 +113,12 @@ class SparkOfflineStore:
         ]
         keys = sorted({k for v in feature_views for k in v.join_keys})
 
-        # The spine min/max range feeds BOTH the job metadata and the PIT
-        # join's TTL prefilter. Compute it lazily (construction stays free
-        # of Spark actions — the reference's laziness contract, :313-348)
-        # and at most once, shared between the two consumers.
-        range_cache: dict = {}
-
-        def spine_range():
-            if "lo" not in range_cache:
-                import pyspark.sql.functions as F
-
-                row = spine.agg(
-                    F.min(ts_col).alias("lo"),
-                    F.max(ts_col).alias("hi"),
-                    F.count(F.lit(1)).alias("n"),
-                ).first()
-                range_cache["lo"], range_cache["hi"], range_cache["n"] = (
-                    row["lo"], row["hi"], row["n"]
-                )
-            # 3-tuple: the row count rides along for strategy="auto"
-            return range_cache["lo"], range_cache["hi"], range_cache["n"]
+        # The spine (min, max, n_rows) probe feeds BOTH the job metadata and
+        # the PIT join's TTL prefilter and strategy choice. It runs lazily
+        # (construction stays free of Spark actions — the reference's
+        # laziness contract, :313-348) and at most once, shared between the
+        # two consumers.
+        spine_range = functools.cache(lambda: _spine_time_range(spine, ts_col))
 
         def evaluate() -> DataFrame:
             return point_in_time_join(
@@ -250,16 +252,9 @@ class SparkOfflineStore:
             start_date,
             end_date,
         )
-        # Count THIS increment's output, not the destination directory —
-        # with mode="append" a re-read would count pre-existing snapshots
-        # too, and at scale it is a full extra scan. Persist so the write
-        # and the count share one computation.
-        out = job.to_spark_df().persist()
-        try:
-            out.write.mode(mode).parquet(dest_path)
-            return out.count()
-        finally:
-            out.unpersist()
+        return _write_counted(
+            job.to_spark_df(), lambda w: w.mode(mode).parquet(dest_path)
+        )
 
     @staticmethod
     def materialize_partitioned(
@@ -304,11 +299,13 @@ class SparkOfflineStore:
         out = job.to_spark_df().withColumn(
             day_col, F.date_format(F.col(timestamp_field), "yyyy-MM-dd")
         )
-        # dynamic: overwrite only the partitions this increment produces
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        out = out.persist()
-        try:
-            out.write.mode("overwrite").partitionBy(day_col).parquet(dest_path)
-            return out.count()
-        finally:
-            out.unpersist()
+        # dynamic: overwrite only the partitions this increment produces.
+        # A writer option, not the session conf, so later static overwrites
+        # in the same session still replace their whole directory.
+        return _write_counted(
+            out,
+            lambda w: w.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(day_col)
+            .parquet(dest_path),
+        )

@@ -9,7 +9,7 @@ disallows directly on a streaming DataFrame (no window functions, no
 arbitrary multi-join chains). The standard scale pattern is
 ``foreachBatch``: every micro-batch of spine rows is a *bounded batch
 DataFrame*, so the full batch engine — including the engine's own
-``point_in_time_join`` with its broadcast/shuffle/union_window
+``point_in_time_join`` with its auto/broadcast/shuffle/union_window
 strategies, TTL prefilter, and created-ts tiebreak — runs unchanged per
 trigger. Feature tables are re-resolved from source every batch, so a
 concurrent materialize job updating them is picked up on the next
@@ -17,7 +17,8 @@ trigger; no streaming state accumulates (state lives in the feature
 store, not the stream).
 
 At 100 TB / 1000 executors: each micro-batch PIT join plans exactly like
-the batch one (TTL-bounded feature scan, broadcast spine when small), so
+the batch one (TTL-bounded feature scan, key-pruned melt under the
+default ``auto``), so
 the per-trigger cost tracks the batch numbers in BENCH, and checkpointing
 gives exactly-once sink delivery for idempotent sinks.
 """
@@ -38,7 +39,7 @@ def streaming_pit_join(
     sink: Callable[[DataFrame, int], None],
     spine_timestamp_field: str = "event_timestamp",
     full_feature_names: bool = False,
-    strategy: str = "broadcast",
+    strategy: str = "auto",
 ) -> DataStreamWriter:
     """Return a ``DataStreamWriter`` that point-in-time-joins every
     micro-batch of ``spine_stream`` against the (static) feature views and

@@ -184,7 +184,19 @@ def _brute_force_pit(spine_rows, feat_rows, ttl):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle", "union_window", "union_window_salted"])
+# strategy="auto" forced down each of its branches through the existing
+# threshold arguments (spine: <= 40 distinct rows, repeated keys)
+_AUTO_BRANCHES = {
+    "auto": {},  # melt + broadcast key prune
+    "auto_no_prune": {"auto_broadcast_rows": 0},  # melt, no key prune
+    "auto_salted": {"salt_partition_budget_rows": 1},  # salted escalation
+}
+
+
+@pytest.mark.parametrize(
+    "strategy",
+    ["broadcast", "shuffle", "union_window", "union_window_salted", *_AUTO_BRANCHES],
+)
 @pytest.mark.parametrize("ttl", [0, 3600])
 def test_pit_join_randomized_against_brute_force(spark, strategy, ttl):
     import random
@@ -207,9 +219,14 @@ def test_pit_join_randomized_against_brute_force(spark, strategy, ttl):
     spine = spark.createDataFrame(spine_rows, "k bigint, event_timestamp timestamp")
     view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp",
                            created_timestamp_column="created", ttl_seconds=ttl)
+    kwargs = _AUTO_BRANCHES.get(strategy)
+    if kwargs is not None:
+        strategy = "auto"
     got = {
         (r.k, r.event_timestamp): r.v
-        for r in point_in_time_join(spine, [view], strategy=strategy).collect()
+        for r in point_in_time_join(
+            spine, [view], strategy=strategy, **(kwargs or {})
+        ).collect()
     }
     expected = _brute_force_pit(spine_rows, feat_rows, ttl)
     assert got == expected
@@ -465,6 +482,38 @@ def test_materialize_partitioned_retry_is_idempotent(spark, tmp_path):
     assert got == [(1, 1.0), (1, 2.0), (2, 5.0), (3, 7.0)]
 
 
+def test_materialize_partitioned_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic partition overwrite is scoped to materialize_partitioned's
+    own writer: the session conf is unchanged afterwards, so a later
+    partitioned overwrite through offline_write_batch still replaces the
+    whole directory instead of keeping stale partitions."""
+    import os
+
+    from datetime import datetime as TS
+
+    from feast_ibm_spark.sources.data_source import SparkDataSource
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.createDataFrame(
+        [(1, TS(2024, 1, 1, 10), 1.0)], "k bigint, ts timestamp, v double"
+    ).createOrReplaceTempView("mat_part_conf_src")
+    SparkOfflineStore.materialize_partitioned(
+        spark, SparkDataSource(table="mat_part_conf_src"), ["k"], ["v"], "ts",
+        None, TS(2024, 1, 1), TS(2024, 1, 1, 23, 59), str(tmp_path / "snap"),
+    )
+    assert spark.conf.get(key) == before
+
+    path = str(tmp_path / "batch")
+    df = spark.createDataFrame([(1, "d1"), (2, "d2")], "k bigint, day string")
+    SparkOfflineStore.offline_write_batch(
+        df, path, mode="overwrite", partition_by=["day"])
+    SparkOfflineStore.offline_write_batch(
+        df.filter("day = 'd2'"), path, mode="overwrite", partition_by=["day"])
+    assert sorted(d for d in os.listdir(path) if d.startswith("day=")) == ["day=d2"]
+
+
 @pytest.mark.parametrize("strategy", ["broadcast", "union_window"])
 def test_pit_join_composite_keys(spark, strategy):
     """Two-column entity keys: matches require BOTH keys equal."""
@@ -546,8 +595,10 @@ if _HAS_HYPOTHESIS:
 
 
 def test_pit_join_auto_strategy_picks_by_spine_size(spark):
-    """strategy='auto': broadcast under the row threshold, union_window
-    above it; results identical either way."""
+    """strategy='auto' always melts (unless every source is bucketed on
+    its join keys): at or under ``auto_broadcast_rows`` the melt adds a
+    broadcast LEFT SEMI key prune, above it the melt runs unpruned;
+    results identical either way."""
     from feast_ibm_spark.plans.inspect import explain_str, has_broadcast_join
 
     spine, view = _driver_stats(spark)

@@ -107,3 +107,52 @@ def test_tempdir_redirect_via_tmpdir_env(spark, sf_dir, monkeypatch, tmp_path):
         assert ckpts, "checkpoint did not land under the TMPDIR redirect"
     finally:
         monkeypatch.setattr(tempfile, "tempdir", None)
+
+
+def test_configure_runtime_matches_get_spark_defaults(spark):
+    """Both session paths apply one defaults table: a host session with
+    every table key unset gets, from configure_runtime, exactly the values
+    of the get_spark session (the listing cap derived from its task
+    slots), and keeps its own shuffle partition count."""
+    from feast_ibm_spark.session import (
+        ENGINE_DEFAULTS,
+        LISTING_PARALLELISM,
+        configure_runtime,
+    )
+
+    keys = [*ENGINE_DEFAULTS, LISTING_PARALLELISM, "spark.sql.shuffle.partitions"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    assert {k: saved[k] for k in ENGINE_DEFAULTS} == ENGINE_DEFAULTS
+    slots = spark.sparkContext.defaultParallelism
+    assert saved[LISTING_PARALLELISM] == str(min(10_000, 4 * slots))
+    try:
+        for k in [*ENGINE_DEFAULTS, LISTING_PARALLELISM]:
+            spark.conf.unset(k)
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        configure_runtime(spark)
+        got = {k: spark.conf.get(k) for k in keys}
+        assert got == {**saved, "spark.sql.shuffle.partitions": "3"}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_get_spark_extra_conf_wins_over_engine_defaults(spark):
+    """``extra_conf`` overrides a table default and the slot-derived
+    listing cap on the session get_spark returns."""
+    from feast_ibm_spark.session import LISTING_PARALLELISM, get_spark
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    keys = [threshold, LISTING_PARALLELISM, "spark.sql.shuffle.partitions"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        s = get_spark(
+            app_name=spark.sparkContext.appName,
+            shuffle_partitions=int(saved["spark.sql.shuffle.partitions"]),
+            extra_conf={threshold: "-1", LISTING_PARALLELISM: "7"},
+        )
+        assert s.conf.get(threshold) == "-1"
+        assert s.conf.get(LISTING_PARALLELISM) == "7"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
