@@ -35,6 +35,14 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
   ``last(features, ignorenulls=True)`` over an unbounded-preceding window;
   TTL enforced by post-checking the matched timestamp. No join blowup even
   when both sides are huge and many feature rows precede each spine row.
+  ONE melt per join-key set, not per view: views on the same keys union
+  into one melt (one exchange, one Window, one join-back). Views that
+  also share a source — equal timestamp/created/partition columns, equal
+  column names after ``field_mapping``, and ``sameResult`` analyzed
+  source plans — share one *arm*: one scan and one payload, prefiltered
+  to the widest range any of them needs (``min_spine_ts - max(ttl)``, no
+  lower bound if any has TTL 0); each view's own TTL post-check keeps
+  the result exact. Other sources on the key set add their own arm.
   Round-4 skew benchmark (NOTES.md "PIT strategy choice", 5M feature
   rows / 50%-hot key): melt beats broadcast/shuffle at BOTH a selective
   300-row spine (0.35s vs 0.85/0.75s) and a full-key 37.5k-row spine
@@ -49,12 +57,12 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
 - ``union_window_salted`` — the melt salted by time bucket: windows
   partition by (key, floor(ts/B)) plus a per-key carry pass over one-row
   bucket summaries, so even a single hot key's history splits across
-  buckets (see ``_join_one_view_union_window_salted``). Use when one key
+  buckets (see ``_salted_melt_winners``). Use when one key
   exceeds an executor's partition budget under the plain melt.
 
 The TTL prefilter rewrite (bound the feature side to
 ``[min_spine_ts - ttl, max_spine_ts]`` before the join, reference
-``:664-674``) is kept: Catalyst cannot derive it, and at 100 TB it is the
+``:664-674``; a shared melt arm takes its views' widest range) is kept: Catalyst cannot derive it, and at 100 TB it is the
 difference between scanning a day and scanning a decade. It needs the
 spine's min/max timestamp, computed with one tiny aggregate job.
 
@@ -75,6 +83,7 @@ exceed an executor's budget.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, Window
@@ -173,7 +182,17 @@ def point_in_time_join(
     crossover"). ``salt_partition_budget_rows=None`` disables the probe.
     All spine columns
     (including label/pass-through columns, reference
-    ``tests/test_integration.py:160``) survive to the output.
+    ``tests/test_integration.py:160``) survive to the output, followed by
+    the features in view order. An output name that repeats, or that
+    equals a spine column, raises ``ValueError`` (Feast's
+    ``FeatureNameCollisionError``).
+
+    The melt strategies run once per join-key set: every view on the
+    same keys goes through one union, one exchange, one Window (one
+    ``last`` per source arm) and one join-back. Views with the same
+    source share an arm — one scan prefiltered to their widest TTL range
+    — and each view then nulls matches outside its own TTL. The salted
+    melt stays per view.
 
     ``time_range`` is the spine's ``(min_ts, max_ts, n_rows)`` as
     returned by ``_spine_time_range``; callers that already ran that
@@ -190,9 +209,23 @@ def point_in_time_join(
             f"disable the hot-spine probe); got {salt_partition_budget_rows}"
         )
 
+    spine_cols = spine.columns
+    names = [
+        _out_name(v, f, full_feature_names) for v in feature_views for f in v.features
+    ]
+    collisions = sorted({n for n in names if names.count(n) > 1 or n in spine_cols})
+    if collisions:
+        # Feast's FeatureNameCollisionError: duplicate output columns would
+        # otherwise reach the caller (or fail later as an ambiguous ref).
+        raise ValueError(
+            f"feature output names collide with each other or with spine "
+            f"columns: {collisions} (set full_feature_names=True to prefix "
+            f"them with the view name)"
+        )
+
     lo, hi, n_rows = time_range or _spine_time_range(spine, spine_timestamp_field)
     small_spine = n_rows <= auto_broadcast_rows
-    salted_views: set[str] = set()
+    salted_keys: set[tuple] = set()
     if strategy == "auto":
         # bucketed carve-out: when every view's source is bucketed on its
         # join keys, the broadcast strategy's feature lineage needs no
@@ -221,7 +254,7 @@ def point_in_time_join(
             # OOM shape. Probe the spine's per-key histogram (one tiny
             # two-stage aggregate per distinct key set, skipped entirely
             # while total rows <= budget since no key can exceed the
-            # total) and escalate THAT view to the salted melt. Budget
+            # total) and escalate THAT key set to the salted melt. Budget
             # default is measurement-backed (NOTES.md round 7 "hot-SPINE
             # salted-melt crossover"): plain melt still wins at a 500k-row
             # hot key (~1.3x faster than salted); the salted melt's bound
@@ -232,55 +265,71 @@ def point_in_time_join(
                 salt_partition_budget_rows is not None
                 and n_rows > salt_partition_budget_rows
             ):
-                hot_cache: dict[tuple, int] = {}
-                for v in feature_views:
-                    kt = tuple(v.join_keys)
-                    if kt not in hot_cache:
-                        hot_cache[kt] = _spine_hot_key_max(spine, list(kt))
-                salted_views = {
-                    v.name
-                    for v in feature_views
-                    if hot_cache[tuple(v.join_keys)] > salt_partition_budget_rows
+                salted_keys = {
+                    kt
+                    for kt in dict.fromkeys(tuple(v.join_keys) for v in feature_views)
+                    if _spine_hot_key_max(spine, list(kt)) > salt_partition_budget_rows
                 }
-    out = spine
+    # Every builder reads the ORIGINAL spine and returns its winners (one
+    # row per distinct spine (keys, ts)); the join-backs happen here.
+    # Feeding one builder's joined output to the next as its spine would
+    # re-embed each earlier plan several times over: exponential in views.
+    winners: list[tuple[list[str], DataFrame]] = []
+    melt_groups: dict[tuple, list[FeatureViewSpec]] = {}
     for view in feature_views:
-        view_strategy = strategy
-        if strategy == "union_window" and view.name in salted_views:
-            view_strategy = "union_window_salted"
-        if view_strategy == "union_window":
-            out = _join_one_view_union_window(
-                out, view, spine_timestamp_field, full_feature_names, lo, hi,
+        kt = tuple(view.join_keys)
+        if strategy == "union_window_salted" or kt in salted_keys:
+            winners.append((view.join_keys, _salted_melt_winners(
+                spine, view, spine_timestamp_field, full_feature_names, lo, hi,
                 prune_keys=small_spine,
-            )
-        elif view_strategy == "union_window_salted":
-            out = _join_one_view_union_window_salted(
-                out, view, spine_timestamp_field, full_feature_names, lo, hi,
-                prune_keys=small_spine,
-            )
+            )))
+        elif strategy == "union_window":
+            melt_groups.setdefault(kt, []).append(view)
         else:
-            out = _join_one_view(
-                out, view, spine_timestamp_field, full_feature_names, lo, hi,
-                broadcast_spine=(view_strategy == "broadcast"),
-            )
-    return out
+            winners.append((view.join_keys, _join_winners(
+                spine, view, spine_timestamp_field, full_feature_names, lo, hi,
+                broadcast_spine=(strategy == "broadcast"),
+            )))
+    winners += [
+        (views[0].join_keys, _melt_winners(
+            spine, views, spine_timestamp_field, full_feature_names, lo, hi,
+            prune_keys=small_spine,
+        ))
+        for views in melt_groups.values()
+    ]
+    out = spine
+    # Final LEFT joins — spine is the source of truth (:765-778). Joining
+    # on the real (keys, ts) columns avoids the reference's synthetic
+    # concatenated row id and its collision hazard (:611-619).
+    for keys, w in winners:
+        out = out.join(w, on=[*keys, spine_timestamp_field], how="left")
+    # using-joins move join keys first and key-set groups join back in
+    # group order: restore spine columns, then features in view order
+    return out.select(
+        *[F.col("`" + c.replace("`", "``") + "`") for c in [*spine_cols, *names]]
+    )
 
 
-def _prepared_feature_side(view: FeatureViewSpec, lo, hi) -> DataFrame:
+def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
     """Project + rename + TTL-bounded prefilter (reference subquery CTE
-    ``:655-676``): upper bound ts <= max_spine_ts always; lower bound
-    ts >= min_spine_ts - ttl only when TTL != 0. The range predicate is
-    routed through filter_ts_range so it reaches the parquet scan even on
-    nanos-timestamp sources."""
+    ``:655-676``) of one melt arm — views that share a scan (``_arms``;
+    the other strategies pass one view): upper bound
+    ts <= max_spine_ts always; lower bound ts >= min_spine_ts - max(ttl)
+    only when no view in the arm has TTL 0. The widest view's range is
+    exact for every view because each one post-checks its own TTL. The
+    range predicate is routed through filter_ts_range so it reaches the
+    parquet scan even on nanos-timestamp sources."""
     import datetime as _dt
 
     from ..sources.reader import filter_ts_range
 
+    view = arm[0]
     feat = view.source
     if view.field_mapping:
         feat = feat.withColumnsRenamed(view.field_mapping)
     lo_bound = None
-    if view.ttl_seconds and lo is not None:
-        lo_bound = lo - _dt.timedelta(seconds=view.ttl_seconds)
+    if lo is not None and all(v.ttl_seconds for v in arm):
+        lo_bound = lo - _dt.timedelta(seconds=max(v.ttl_seconds for v in arm))
     if view.date_partition_column is not None:
         # Reference :665-667 / :671-673: string compare on the partition
         # column using the date slice ([:10]) of the timestamp bounds.
@@ -296,12 +345,12 @@ def _prepared_feature_side(view: FeatureViewSpec, lo, hi) -> DataFrame:
         *view.join_keys,
         view.timestamp_field,
         *([view.created_timestamp_column] if view.created_timestamp_column else []),
-        *view.features,
+        *_arm_features(arm),
     ]
     return feat.select(*dict.fromkeys(cols))
 
 
-def _join_one_view(
+def _join_winners(
     spine: DataFrame,
     view: FeatureViewSpec,
     spine_ts: str,
@@ -310,7 +359,8 @@ def _join_one_view(
     hi,
     broadcast_spine: bool,
 ) -> DataFrame:
-    feat = _prepared_feature_side(view, lo, hi)
+    """As-of winners of one view by range join (``broadcast``/``shuffle``)."""
+    feat = _prepared_feature_side([view], lo, hi)
 
     # Distinct (keys, ts) — the reference's per-view spine dedup CTE
     # (:626-636) — so the candidate join and window run once per unique
@@ -357,20 +407,57 @@ def _join_one_view(
     if broadcast_spine:
         # winners has at most one row per distinct spine (keys, ts): small.
         winners = F.broadcast(winners)
+    return winners
 
-    # Final LEFT join — spine is the source of truth (:765-778). Joining on
-    # the real (keys, ts) columns avoids the reference's synthetic
-    # concatenated row id and its collision hazard (:611-619).
-    return spine.join(winners, on=key_ts, how="left")
+
+def _arm_features(arm: list[FeatureViewSpec]) -> list[str]:
+    return list(dict.fromkeys(f for v in arm for f in v.features))
+
+
+def _arms(views: list[FeatureViewSpec]) -> list[list[FeatureViewSpec]]:
+    """Partition views on one join-key set into melt arms, in view order.
+    Views share an arm (one scan, one payload) when their time, created
+    and partition columns and their column names after ``field_mapping``
+    are equal, and their sources' analyzed plans produce the same result
+    (two loads of one path do; a pure rename does too, hence the
+    column-name check)."""
+
+    def layout(v: FeatureViewSpec) -> tuple:
+        return (
+            v.timestamp_field,
+            v.created_timestamp_column,
+            v.date_partition_column,
+            [v.field_mapping.get(c, c) for c in v.source.columns],
+        )
+
+    def plan(v: FeatureViewSpec):
+        return v.source._jdf.queryExecution().analyzed()
+
+    arms: list[list[FeatureViewSpec]] = []
+    for v in views:
+        for arm in arms:
+            if layout(arm[0]) == layout(v) and plan(arm[0]).sameResult(plan(v)):
+                arm.append(v)
+                break
+        else:
+            arms.append([v])
+    return arms
 
 
 def _melt(
-    spine: DataFrame, view: FeatureViewSpec, spine_ts: str, lo, hi, prune_keys: bool
+    spine: DataFrame,
+    arms: list[list[FeatureViewSpec]],
+    spine_ts: str,
+    lo,
+    hi,
+    prune_keys: bool,
 ) -> DataFrame:
-    """The melt both union-window strategies sort: the view's feature rows
-    (tag 0, payload = matched ts + features) unioned with the spine's
-    distinct (keys, ts) rows (tag 1, null payload), the spine timestamp
-    and feature timestamp both renamed ``__ts``.
+    """The melt both union-window strategies sort, for views on one
+    join-key set: one tagged *arm* per distinct source (tag 0, payload
+    ``__p<i>`` = matched ts + the arm's features, the other arms'
+    payloads null) unioned with the spine's distinct (keys, ts) rows
+    (tag 1, null payloads), the spine timestamp and feature timestamps
+    all renamed ``__ts``.
 
     ``prune_keys`` (round 4): broadcast LEFT SEMI the spine's key set onto
     the feature side before the melt. For a SELECTIVE spine (the typical
@@ -381,100 +468,113 @@ def _melt(
     but a 100 TB cluster does not. Enabled automatically when the caller
     knows the spine is broadcast-sized; harmless semantically (rows of
     keys absent from the spine can never match)."""
-    feat = _prepared_feature_side(view, lo, hi)
-    if prune_keys:
-        feat = feat.join(
-            F.broadcast(spine.select(*view.join_keys).distinct()),
-            on=view.join_keys,
-            how="left_semi",
-        )
+    keys = arms[0][0].join_keys
+    spine_keys = F.broadcast(spine.select(*keys).distinct())
+    parts = []
+    for i, arm in enumerate(arms):
+        view = arm[0]
+        feat = _prepared_feature_side(arm, lo, hi)
+        if prune_keys:
+            feat = feat.join(spine_keys, on=keys, how="left_semi")
 
-    # Pre-dedupe feature rows per (keys, ts): keep max created (folds the
-    # reference's dedup CTE :703-712 into the melt).
-    if view.created_timestamp_column:
-        wdup = Window.partitionBy(*view.join_keys, view.timestamp_field).orderBy(
-            F.col(view.created_timestamp_column).desc()
-        )
-        feat = (
-            feat.withColumn("__rn", F.row_number().over(wdup))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", view.created_timestamp_column)
-        )
+        # Pre-dedupe feature rows per (keys, ts): keep max created (folds
+        # the reference's dedup CTE :703-712 into the melt).
+        if view.created_timestamp_column:
+            wdup = Window.partitionBy(*keys, view.timestamp_field).orderBy(
+                F.col(view.created_timestamp_column).desc()
+            )
+            feat = (
+                feat.withColumn("__rn", F.row_number().over(wdup))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn", view.created_timestamp_column)
+            )
 
-    feat_tagged = feat.select(
-        *view.join_keys,
-        F.col(view.timestamp_field).alias("__ts"),
-        F.lit(0).alias("__tag"),
-        F.struct(
-            F.col(view.timestamp_field).alias("__matched_ts"), *view.features
-        ).alias("__payload"),
+        parts.append(feat.select(
+            *keys,
+            F.col(view.timestamp_field).alias("__ts"),
+            F.lit(0).alias("__tag"),
+            F.struct(
+                F.col(view.timestamp_field).alias("__matched_ts"),
+                *_arm_features(arm),
+            ).alias(f"__p{i}"),
+        ))
+    parts.append(spine.select(*keys, spine_ts).distinct().select(
+        *keys, F.col(spine_ts).alias("__ts"), F.lit(1).alias("__tag")
+    ))
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
     )
-    spine_tagged = spine.select(*view.join_keys, spine_ts).distinct().select(
-        *view.join_keys,
-        F.col(spine_ts).alias("__ts"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(feat_tagged.schema["__payload"].dataType).alias("__payload"),
-    )
-    return feat_tagged.unionByName(spine_tagged)
 
 
-def _melt_winners_joined(
-    spine: DataFrame,
-    view: FeatureViewSpec,
+def _ttl_checked_winners(
+    arms: list[list[FeatureViewSpec]],
     spine_ts: str,
     full_feature_names: bool,
     matched: DataFrame,
 ) -> DataFrame:
     """Finish a melt: ``matched`` holds one row per distinct spine
-    (keys, ``__ts``) with its carried ``__match`` payload. Null matches
-    older than ``spine.ts - ttl`` (TTL != 0 only), then left-join the
-    winners back onto the spine (reference :765-778)."""
-    if view.ttl_seconds:
-        in_ttl = F.col("__match.__matched_ts") >= (
-            F.col("__ts") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
-        )
-        matched = matched.withColumn("__match", F.when(in_ttl, F.col("__match")))
-    winners = matched.select(
-        *view.join_keys,
-        F.col("__ts").alias(spine_ts),
-        *[
-            F.col(f"__match.{c}").alias(_out_name(view, c, full_feature_names))
-            for c in view.features
-        ],
-    )
-    return spine.join(winners, on=[*view.join_keys, spine_ts], how="left")
+    (keys, ``__ts``) with each arm's carried match in ``__m<i>``. Each
+    view nulls its arm's match when older than ``spine.ts - ttl`` (TTL
+    != 0 only). Returns the winners: keys, spine ts, and every view's
+    features, for one join-back onto the spine."""
+    keys = arms[0][0].join_keys
+    feats = []
+    for i, arm in enumerate(arms):
+        match = F.col(f"__m{i}")
+        for view in arm:
+            m = match
+            if view.ttl_seconds:
+                in_ttl = match["__matched_ts"] >= (
+                    F.col("__ts") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
+                )
+                m = F.when(in_ttl, match)
+            feats += [
+                m[c].alias(_out_name(view, c, full_feature_names))
+                for c in view.features
+            ]
+    return matched.select(*keys, F.col("__ts").alias(spine_ts), *feats)
 
 
-def _join_one_view_union_window(
+def _melt_winners(
     spine: DataFrame,
-    view: FeatureViewSpec,
+    views: list[FeatureViewSpec],
     spine_ts: str,
     full_feature_names: bool,
     lo,
     hi,
     prune_keys: bool = False,
 ) -> DataFrame:
-    """Melt as-of join: one equi-shuffle on the entity keys, no range join.
+    """Melt as-of winners of every view on one join-key set: one
+    equi-shuffle on the entity keys, one window, no range join; the caller
+    joins them back onto the spine once.
 
     Sort each key partition of the melt (``_melt``) by (ts, tag) and carry
-    the latest feature row forward with ``last(..., ignorenulls=True)``. A
-    feature row at exactly the spine timestamp sorts BEFORE the spine row
-    (tag 0 < 1), preserving the inclusive ``<=`` bound. TTL is enforced
-    afterwards by nulling matches whose timestamp is older than
-    ``spine.ts - ttl``."""
-    melted = _melt(spine, view, spine_ts, lo, hi, prune_keys)
+    each arm's latest feature row forward with ``last(__p<i>,
+    ignorenulls=True)`` — all arms in one window spec, so Spark plans one
+    Window over one Exchange. A feature row at exactly the spine timestamp
+    sorts BEFORE the spine row (tag 0 < 1), preserving the inclusive
+    ``<=`` bound. TTL is enforced afterwards, per view, by nulling matches
+    whose timestamp is older than ``spine.ts - ttl``."""
+    arms = _arms(views)
+    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys)
     w = (
-        Window.partitionBy(*view.join_keys)
+        Window.partitionBy(*views[0].join_keys)
         .orderBy(F.col("__ts").asc(), F.col("__tag").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    carried = melted.withColumn(
-        "__match", F.last("__payload", ignorenulls=True).over(w)
+    carried = melted.select(
+        *views[0].join_keys,
+        "__ts",
+        "__tag",
+        *[
+            F.last(f"__p{i}", ignorenulls=True).over(w).alias(f"__m{i}")
+            for i in range(len(arms))
+        ],
     ).filter(F.col("__tag") == 1)
-    return _melt_winners_joined(spine, view, spine_ts, full_feature_names, carried)
+    return _ttl_checked_winners(arms, spine_ts, full_feature_names, carried)
 
 
-def _join_one_view_union_window_salted(
+def _salted_melt_winners(
     spine: DataFrame,
     view: FeatureViewSpec,
     spine_ts: str,
@@ -484,7 +584,8 @@ def _join_one_view_union_window_salted(
     salt_bucket_seconds: int = 86400,
     prune_keys: bool = False,
 ) -> DataFrame:
-    """Melt as-of join SALTED by time bucket — the hot-key scale path.
+    """Melt as-of winners of one view SALTED by time bucket — the hot-key
+    scale path.
 
     The plain melt (``union_window``) puts a key's entire history in ONE
     window partition, so a bot/power-user key becomes a straggler. Here
@@ -508,7 +609,8 @@ def _join_one_view_union_window_salted(
     requested through a small spine still benefits — the prune drops
     every OTHER key's history before the bucketed shuffle).
     """
-    melted = _melt(spine, view, spine_ts, lo, hi, prune_keys)
+    arms = [[view]]
+    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys)
     # NTZ-safe bucketing (round 7, hardened after review): TIMESTAMP
     # casts straight to double (epoch seconds, monotone). TIMESTAMP_NTZ
     # must NOT route through a session-zone cast — a DST spring-forward
@@ -546,7 +648,7 @@ def _join_one_view_union_window_salted(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     within = melted.withColumn(
-        "__within", F.last("__payload", ignorenulls=True).over(w_in)
+        "__within", F.last("__p0", ignorenulls=True).over(w_in)
     )
 
     # phase 2: one summary row per (key, bucket) = the bucket's last
@@ -554,7 +656,7 @@ def _join_one_view_union_window_salted(
     bucket_last = (
         melted.filter(F.col("__tag") == 0)
         .groupBy(*view.join_keys, "__bucket")
-        .agg(F.max_by("__payload", "__ts").alias("__bucket_payload"))
+        .agg(F.max_by("__p0", "__ts").alias("__bucket_payload"))
     )
     all_buckets = (
         melted.select(*view.join_keys, "__bucket")
@@ -574,6 +676,6 @@ def _join_one_view_union_window_salted(
     merged = (
         within.filter(F.col("__tag") == 1)
         .join(carry, [*view.join_keys, "__bucket"])
-        .withColumn("__match", F.coalesce(F.col("__within"), F.col("__carry_in")))
+        .withColumn("__m0", F.coalesce(F.col("__within"), F.col("__carry_in")))
     )
-    return _melt_winners_joined(spine, view, spine_ts, full_feature_names, merged)
+    return _ttl_checked_winners(arms, spine_ts, full_feature_names, merged)

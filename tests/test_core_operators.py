@@ -167,6 +167,30 @@ def test_pit_join_multiple_views(spark):
     assert by_id[1002].conv_rate == 2.5
 
 
+def test_pit_join_rejects_output_name_collisions(spark):
+    """Two views emitting the same output name, or a view emitting a spine
+    column's name, raise (Feast's FeatureNameCollisionError) instead of
+    returning duplicate columns; full feature names disambiguate."""
+    spine, view = _driver_stats(spark)
+    twin = FeatureViewSpec("twin", view.source, ["driver_id"], ["conv_rate"],
+                           "event_timestamp")
+    with pytest.raises(ValueError, match=r"\['conv_rate'\]"):
+        point_in_time_join(spine, [view, twin])
+    labels = view.source.withColumnRenamed(
+        "acc_rate", "label_driver_reported_satisfaction")
+    label_view = FeatureViewSpec("labels", labels, ["driver_id"],
+                                 ["label_driver_reported_satisfaction"],
+                                 "event_timestamp")
+    with pytest.raises(ValueError, match="label_driver_reported_satisfaction"):
+        point_in_time_join(spine, [label_view], strategy="broadcast")
+
+    out = point_in_time_join(spine, [view, twin], full_feature_names=True)
+    assert out.columns[-4:] == [
+        "driver_hourly_stats__conv_rate", "driver_hourly_stats__acc_rate",
+        "driver_hourly_stats__avg_daily_trips", "twin__conv_rate",
+    ]
+
+
 def _brute_force_pit(spine_rows, feat_rows, ttl):
     """Per-row oracle (FIXTURES.md §6)."""
     out = {}
@@ -233,6 +257,113 @@ def test_pit_join_randomized_against_brute_force(spark, strategy, ttl):
 
 
 @pytest.mark.parametrize(
+    "strategy", ["union_window", *_AUTO_BRANCHES, "broadcast", "shuffle"]
+)
+def test_pit_join_multiview_randomized_against_brute_force(spark, tmp_path, strategy):
+    """Five views in one join: two over the same feature table loaded twice
+    (TTL 0 and 3600, overlapping features: one shared melt arm), a
+    composite-key view between them (a second key set), a second source on
+    the first key set with a ``field_mapping`` (a second arm), and a
+    composite-key view with TTL 7200 (sharing an arm with TTL 3600). Spine
+    timestamps start after the feature history does, so a prefilter
+    narrower than an arm's widest TTL loses matches. Every view must match
+    its own brute-force as-of join, in view order."""
+    import random
+
+    rng = random.Random(11)
+    base = TS(2024, 1, 1)
+    instants = [base + timedelta(minutes=30 * i) for i in range(20)]
+
+    def created(i):
+        return rng.choice(instants) + timedelta(seconds=i)
+
+    # ~10 rows per key over 20 instants: matches often lie hours back
+    shared_rows = [
+        (rng.randint(1, 12), rng.randint(1, 2), rng.choice(instants), created(i),
+         float(i), f"w{i}")
+        for i in range(120)
+    ]
+    mapped_rows = [
+        (rng.randint(1, 12), rng.choice(instants), created(i), 1000.0 + i)
+        for i in range(80)
+    ]
+    spine_rows = list(dict.fromkeys(
+        (rng.randint(1, 13), rng.randint(1, 2), rng.choice(instants[6:]))
+        for _ in range(40)
+    ))
+    # Spine starts at instants[6]. Key 20's only row (3 h earlier) matches
+    # only the TTL-0 view; key 21's (1.5 h earlier) only the 7200 s view.
+    # A shared arm's prefilter narrower than its widest TTL drops them.
+    shared_rows += [(20, 1, instants[0], created(120), -1.0, "old"),
+                    (21, 1, instants[3], created(121), -2.0, "mid")]
+    spine_rows += [(20, 1, instants[6]), (21, 1, instants[6])]
+
+    path = str(tmp_path / "shared")
+    spark.createDataFrame(
+        shared_rows,
+        "k bigint, r bigint, event_timestamp timestamp, created timestamp, "
+        "v double, w string",
+    ).write.parquet(path)
+    mapped = spark.createDataFrame(
+        mapped_rows, "k bigint, t2 timestamp, created timestamp, x_raw double"
+    )
+    spine = spark.createDataFrame(
+        spine_rows, "k bigint, r bigint, event_timestamp timestamp"
+    )
+
+    def shared_view(name, keys, features, ttl):
+        return FeatureViewSpec(
+            name, spark.read.parquet(path), keys, features, "event_timestamp",
+            created_timestamp_column="created", ttl_seconds=ttl,
+        )
+
+    views = [
+        shared_view("a", ["k"], ["v", "w"], 0),
+        shared_view("c", ["k", "r"], ["v"], 3600),
+        shared_view("b", ["k"], ["w"], 3600),
+        FeatureViewSpec("d", mapped, ["k"], ["x"], "t2",
+                        created_timestamp_column="created", ttl_seconds=1800,
+                        field_mapping={"x_raw": "x"}),
+        shared_view("e", ["k", "r"], ["w"], 7200),
+    ]
+    kwargs = _AUTO_BRANCHES.get(strategy)
+    out = point_in_time_join(
+        spine, views, full_feature_names=True,
+        strategy="auto" if kwargs is not None else strategy, **(kwargs or {}),
+    )
+    assert out.columns == [
+        "k", "r", "event_timestamp", "a__v", "a__w", "c__v", "b__w", "d__x", "e__w"
+    ]
+
+    def brute(feat_rows, ttl, composite):
+        def key(k, r):
+            return (k, r) if composite else k
+
+        return _brute_force_pit(
+            [(key(k, r), ts) for k, r, ts in spine_rows],
+            [(key(k, r), ts, cr, rest) for k, r, ts, cr, *rest in feat_rows],
+            ttl,
+        )
+
+    shared_a = brute(shared_rows, 0, False)
+    shared_c = brute(shared_rows, 3600, True)
+    shared_b = brute(shared_rows, 3600, False)
+    mapped_d = brute([(k, 0, ts, cr, x) for k, ts, cr, x in mapped_rows], 1800, False)
+    shared_e = brute(shared_rows, 7200, True)
+    rows = out.collect()
+    assert len(rows) == len(spine_rows)
+    for row in rows:
+        k, r, ts = row.k, row.r, row.event_timestamp
+        a, b, d = shared_a[(k, ts)], shared_b[(k, ts)], mapped_d[(k, ts)]
+        c, e = shared_c[((k, r), ts)], shared_e[((k, r), ts)]
+        assert (row.a__v, row.a__w) == (tuple(a) if a else (None, None))
+        assert row.c__v == (c[0] if c else None)
+        assert row.b__w == (b[1] if b else None)
+        assert row.d__x == (d[0] if d else None)
+        assert row.e__w == (e[1] if e else None)
+
+
+@pytest.mark.parametrize(
     "strategy", ["broadcast", "shuffle", "union_window", "union_window_salted"]
 )
 def test_pit_join_strategies_on_ntz_timestamps(spark, strategy):
@@ -241,7 +372,7 @@ def test_pit_join_strategies_on_ntz_timestamps(spark, strategy):
     cast(ts as double), which is illegal on NTZ — found by the hot-spine
     bench, fixed by the zone-free wall-clock decomposition
     unix_date(to_date(c))*86400 + hour/minute/second in
-    _join_one_view_union_window_salted; a session-zone TIMESTAMP cast
+    _salted_melt_winners; a session-zone TIMESTAMP cast
     would be non-monotone across DST gaps, see the DST-gap test below).
     Same randomized brute-force oracle as the TZ test."""
     import random
@@ -650,7 +781,7 @@ def test_pit_salted_melt_multi_bucket_carry(spark, ttl):
     import random
 
     from feast_ibm_spark.operators.pit_join import (
-        _join_one_view_union_window_salted,
+        _salted_melt_winners,
     )
 
     rng = random.Random(7)
@@ -674,7 +805,7 @@ def test_pit_salted_melt_multi_bucket_carry(spark, ttl):
     lo, hi, _ = __import__(
         "feast_ibm_spark.operators.pit_join", fromlist=["_spine_time_range"]
     )._spine_time_range(spine, "event_timestamp")
-    salted = _join_one_view_union_window_salted(
+    salted = _salted_melt_winners(
         spine, view, "event_timestamp", False, lo, hi,
         salt_bucket_seconds=3600,  # 10+ buckets over the data span
     )
@@ -1143,7 +1274,7 @@ def test_pit_salted_melt_ntz_is_monotone_across_dst_gap(spark):
     carry pass. The zone-free wall-clock decomposition keeps bucketing
     monotone: the salted melt must match the plain melt exactly."""
     from feast_ibm_spark.operators.pit_join import (
-        _join_one_view_union_window_salted,
+        _salted_melt_winners,
         _spine_time_range,
     )
 
@@ -1163,7 +1294,7 @@ def test_pit_salted_melt_ntz_is_monotone_across_dst_gap(spark):
         view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp")
 
         lo, hi, _ = _spine_time_range(spine, "event_timestamp")
-        salted = _join_one_view_union_window_salted(
+        salted = _salted_melt_winners(
             spine, view, "event_timestamp", False, lo, hi,
             salt_bucket_seconds=900,  # buckets small enough to split the gap
         )

@@ -204,6 +204,53 @@ def test_pit_strategies_absorb_hot_key_skew(spark):
     assert "Partial" in plans["broadcast"], plans["broadcast"][:3000]
 
 
+def _melt_shape(df):
+    """(sorted keys of the exchanges that feed a melt union, Window nodes,
+    parquet FileScans) of ``df``'s physical plan."""
+    import re
+
+    text = explain_str(df, "simple")
+    union_keys = re.findall(
+        r"Exchange hashpartitioning\(([^)]*), \d+\)[^\n]*\n[ :+-]*Union\n", text
+    )
+    return (
+        sorted(re.sub(r"#\d+L?", "", k) for k in union_keys),
+        len(re.findall(r"\bWindow \[", text)),
+        text.count("FileScan parquet"),
+    )
+
+
+def test_pit_melt_one_exchange_per_key_set(spark, sf_dir):
+    """Views on one join-key set melt together: two views over two loads
+    of the same feature table plan ONE key exchange over the melt union,
+    ONE Window and ONE scan of the table; views on two key sets plan two
+    of each; a single view gains no exchange from the fusion."""
+    from datetime import datetime
+
+    from feast_ibm_spark.plans.inspect import count_shuffles
+
+    spine = spark.createDataFrame(
+        [(1, 5, datetime(2024, 1, 10)), (2, 9, datetime(2024, 1, 20))],
+        "user_id bigint, event_id bigint, event_timestamp timestamp",
+    )
+    ev_a, ev_b = (load_table(spark, sf_dir, "events") for _ in range(2))
+    a = FeatureViewSpec("a", ev_a, ["user_id"], ["value"], "ts")
+    b = FeatureViewSpec(
+        "b", ev_b, ["user_id"], ["event_type"], "ts", ttl_seconds=3 * 86400
+    )
+    c = FeatureViewSpec("c", ev_b, ["event_id"], ["event_type"], "ts")
+
+    single = point_in_time_join(spine, [a])
+    same_keys = point_in_time_join(spine, [a, b])
+    two_keys = point_in_time_join(spine, [a, c], full_feature_names=True)
+    assert _melt_shape(single) == (["user_id"], 1, 1)
+    assert _melt_shape(same_keys) == (["user_id"], 1, 1), explain_str(same_keys)
+    assert _melt_shape(two_keys) == (["event_id", "user_id"], 2, 2)
+    # the one-view melt plan: spine distinct, key-prune distinct, melt
+    # window, and the join-back's two sides
+    assert count_shuffles(single) == count_shuffles(same_keys) == 5
+
+
 def test_pit_join_views_with_distinct_timestamp_fields(spark, events):
     """Per-view timestamp_field: two views over sources whose event-time
     columns have different names join onto one spine correctly."""
