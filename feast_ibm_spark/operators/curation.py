@@ -150,20 +150,20 @@ def curate_corpus(
     a longer one — the containment shape) cut to empty and are DROPPED:
     they carry zero novel text. None (default) skips the stage.
 
-    ``persist_survivors`` caches the post-dedup post-floor frame before
-    the near-dup stage. OFF by default again since round 13: the round-12
-    ON default was justified by an A/B run on a degraded host where the
-    query cost 4.5-5.5 s; at the query's real ~1.3-1.7 s operating point
-    the per-run MEMORY_AND_DISK cache write is a net LOSS on both tiers
-    (round-13 interleaved medians at sf0.1, caches dropped between runs:
-    exact 2.73 s cached vs 1.69 s uncached on the r12 index shape and
-    parity-to-worse on the restored self-join shape; lsh 2.05 cached vs
-    1.69 uncached). The survivors subplan's repeated references mostly
-    resolve to ONE reused broadcast exchange at physical planning, so
-    the recompute the cache was buying off is far cheaper than assumed.
-    Pass True for nondeterministic upstreams (e.g. a sampled corpus),
-    where recompute would be WRONG, not just slow — that is the flag's
-    remaining contract."""
+    ``persist_survivors``: Default False since round 13 (was True). It
+    caches the post-dedup post-floor frame before the near-dup stage.
+    The round-12 True default was justified by an A/B run on a degraded
+    host where the query cost 4.5-5.5 s; at the query's real ~1.3-1.7 s
+    operating point the per-run MEMORY_AND_DISK cache write is a net
+    LOSS on both tiers (round-13 interleaved medians at sf0.1, caches
+    dropped between runs: exact 2.73 s cached vs 1.69 s uncached on the
+    r12 index shape and parity-to-worse on the restored self-join shape;
+    lsh 2.05 cached vs 1.69 uncached). The survivors subplan's repeated
+    references mostly resolve to ONE reused broadcast exchange at
+    physical planning, so the recompute the cache was buying off is far
+    cheaper than assumed. Pass True for nondeterministic upstreams (e.g.
+    a sampled corpus), where recompute would be WRONG, not just slow —
+    that is the flag's remaining contract."""
     if tier not in ("exact", "lsh", "auto"):
         raise ValueError(f"unknown tier: {tier}")
     if tier == "auto":

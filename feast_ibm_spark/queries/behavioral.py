@@ -5,7 +5,6 @@ from __future__ import annotations
 import math
 
 from ._shared import *  # noqa: F401,F403
-from ..streaming.run import hint_stream_source_bytes  # noqa: F401
 
 # Round 4: behavioral analytics + feature-engineering shapes. All money/
 # value math rides the scaled-integer cents discipline (see the Q1 note
@@ -544,7 +543,6 @@ def q_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(src_dir, ignore_errors=True)
     ev.repartition(4, "user_id").write.parquet(src_dir)
 
-    hint_stream_source_bytes(spark, src_dir)
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)

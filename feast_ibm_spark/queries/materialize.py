@@ -761,8 +761,6 @@ def q_streaming_snapshot_sink_stats(
         # selective
         ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(
             src_dir)
-        # no bytes hint here: this stream starts via foreachBatch below,
-        # not the drain helpers, so a stamp would leak to the next drain
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)

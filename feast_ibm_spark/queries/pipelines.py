@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
-from ..streaming.run import hint_stream_source_bytes  # noqa: F401
 from .behavioral import CHUNK_OVERLAP, CHUNK_TOKENS  # noqa: F401
 from .corpus import (  # noqa: F401
     CURATION_QUALITY_FLOOR,
@@ -3420,7 +3419,6 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
-    hint_stream_source_bytes(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     clicks = stream.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts")
@@ -3483,7 +3481,6 @@ def q_streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
-    hint_stream_source_bytes(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     clicks = stream.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts")
@@ -3557,7 +3554,6 @@ def q_streaming_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFram
     configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
-    hint_stream_source_bytes(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     clicks = stream.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts")
@@ -3618,7 +3614,6 @@ def q_streaming_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFram
     configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
-    hint_stream_source_bytes(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     clicks = stream.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts")

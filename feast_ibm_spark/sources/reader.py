@@ -212,12 +212,6 @@ def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
     oracle. Same session-wide conf caveat as :func:`read_parquet`.
     """
     nanos = _nano_timestamp_columns(path)
-    # advisory source-size hint for the drain helpers' state-partition
-    # heuristic (streaming/run.py) — driver-side metadata, no job
-    from ..streaming.run import hint_stream_source_bytes
-
-    hint_stream_source_bytes(spark, path)
-
     def _stream(schema) -> DataFrame:
         # FileStreamSource requires a DIRECTORY basePath; a single-file
         # table is streamed as its parent dir + a glob for just that file

@@ -26,9 +26,6 @@ def stream_parquet_source(
 ) -> DataFrame:
     """File-stream source over a parquet directory (schema must be
     supplied: streaming reads cannot infer)."""
-    from .run import hint_stream_source_bytes
-
-    hint_stream_source_bytes(spark, path)
     return spark.readStream.schema(schema).parquet(path)
 
 

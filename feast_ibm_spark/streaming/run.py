@@ -23,6 +23,7 @@ from __future__ import annotations
 import contextlib
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 ROCKSDB_PROVIDER = (
@@ -72,9 +73,6 @@ def rocksdb_state_store(spark: SparkSession, bounded_memory_mb: int | None = Non
             conf.set(k, old) if old is not None else conf.unset(k)
 
 
-STATE_PARTITIONS_CONF = "spark.feast_ibm_spark.streaming.statePartitions"
-SOURCE_BYTES_HINT_CONF = "spark.feast_ibm_spark.streaming.sourceBytesHint"
-
 # Input bytes each JVM-stateful state partition should be responsible
 # for, and the ceiling in units of task slots (round 13; derivation in
 # _stream_state_partitions). Both are heuristic TARGETS, not local
@@ -96,56 +94,46 @@ _PY_STATEFUL_MARKERS = (
 )
 
 
-def add_source_bytes_hint(spark: SparkSession, n_bytes: int) -> None:
-    """Accumulate the byte size of a bounded stream SOURCE into a
-    session-level hint. Called by the stream readers (which know their
-    paths); consumed — and cleared — by the drain helpers at ``start()``
-    to derive a state-partition count from the data actually arriving.
-    Purely advisory: losing or double-counting the hint only moves a
-    clamped partition heuristic whose fallback is today's behavior."""
-    prev = spark.conf.get(SOURCE_BYTES_HINT_CONF, None)
-    total = int(prev) + int(n_bytes) if prev else int(n_bytes)
-    spark.conf.set(SOURCE_BYTES_HINT_CONF, str(total))
+def _stream_source_bytes(spark: SparkSession, plan) -> int | None:
+    """Total bytes of the file-stream sources under an analyzed plan
+    (None when no source is file-backed — ``rate``, Python data
+    sources — or the files hold no bytes yet).
 
-
-def hint_stream_source_bytes(spark: SparkSession, path: str) -> None:
-    """Stamp the byte size of a bounded file-stream source directory (or
-    file) into the session hint — driver-side metadata only, no job.
-    Local paths walk the directory; other schemes go through the Hadoop
-    FS client. Failures are swallowed: the hint is advisory."""
-    import os as _os
-
+    Each ``StreamingRelation`` leaf is keyed on its ``path`` and
+    ``pathGlobFilter`` options, so a source read twice (a self-join) is
+    counted once. A glob is sized with ``globStatus(path/glob)`` — a
+    single-file table streams as its parent directory plus a glob, and
+    the directory's siblings are not its input — else with
+    ``getContentSummary(path)``. Driver-side Hadoop FS metadata only, no
+    job; a path the FS cannot size gives None."""
+    sources = set()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        opts = leaf.dataSource().options()
+        path, glob = opts.get("path"), opts.get("pathGlobFilter")
+        if path.isDefined():
+            sources.add((path.get(), glob.get() if glob.isDefined() else None))
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    total = 0
     try:
-        n = 0
-        if _os.path.isfile(path):
-            n = _os.path.getsize(path)
-        elif _os.path.isdir(path):
-            for root, _dirs, names in _os.walk(path):
-                for f in names:
-                    try:
-                        n += _os.path.getsize(_os.path.join(root, f))
-                    except OSError:
-                        pass
-        else:
-            jvm = spark.sparkContext._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            n = fs.getContentSummary(p).getLength()
-        if n:
-            add_source_bytes_hint(spark, n)
-    except Exception:
-        pass
+        for path, glob in sources:
+            p = Path(path)
+            fs = p.getFileSystem(hconf)
+            if glob is None:
+                total += fs.getContentSummary(p).getLength()
+            else:
+                hits = fs.globStatus(Path(p, glob))
+                total += sum(st.getLen() for st in hits or [])
+    except Py4JJavaError:  # e.g. a source path removed since the build
+        return None
+    return total or None
 
 
-def _take_source_bytes_hint(spark: SparkSession) -> int | None:
-    v = spark.conf.get(SOURCE_BYTES_HINT_CONF, None)
-    if v is not None:
-        spark.conf.unset(SOURCE_BYTES_HINT_CONF)
-        return int(v)
-    return None
-
-
-def _stream_state_partitions(spark: SparkSession, sdf: DataFrame | None) -> int:
+def _stream_state_partitions(spark: SparkSession, sdf: DataFrame) -> int:
     """Shuffle/state partition count for a NEW streaming query.
 
     Streaming plans never go through AQE, so every stateful operator
@@ -153,19 +141,17 @@ def _stream_state_partitions(spark: SparkSession, sdf: DataFrame | None) -> int:
     raw ``spark.sql.shuffle.partitions`` for the life of the query
     (the count is frozen into the checkpoint at the first batch), and
     every micro-batch pays one state-store commit PER PARTITION whether
-    or not rows arrived. The resolution order:
+    or not rows arrived. The count is derived from ``sdf``'s analyzed
+    plan alone — no session state, no hint, no override:
 
-    1. ``{STATE_PARTITIONS_CONF}`` — explicit override, always wins
-       (jobs whose state outgrows the heuristic bound per-partition
-       state here, ~100-200 MB each, like batch shuffle sizing).
-    2. Plans with PYTHON-stateful operators — one partition per task
+    1. Plans with PYTHON-stateful operators — one partition per task
        slot (``defaultParallelism``): their cost is per-row Python
        compute, so parallelism, not commit overhead, dominates
        (measured round 13: sessionize 3.4 s at slots vs 5.0 s at 4).
-    3. JVM-stateful plans with a known source size (the readers stamp
-       a bytes hint): one partition per
+    2. Plans over file-stream sources (the plan's ``StreamingRelation``
+       leaves, sized by :func:`_stream_source_bytes`): one partition per
        ``STATE_TARGET_BYTES_PER_PARTITION`` (16 MiB) of bounded input,
-       clamped to [4, {STATE_MAX_SLOT_MULTIPLE} x slots]. Production
+       clamped to [4, ``STATE_MAX_SLOT_MULTIPLE`` x slots]. Production
        justification: state is bounded by what arrives, and a state
        task on under ~16 MiB of input is commit-machinery-bound — the
        r12/r13 measurements (interval join at sf0.1: 15 s at 64
@@ -175,27 +161,21 @@ def _stream_state_partitions(spark: SparkSession, sdf: DataFrame | None) -> int:
        100 GB backfill on 32 slots gets the 8x-slots ceiling, not 4)
        and the ceiling scales with the cluster, so nothing here is a
        local-core constant.
-    4. Otherwise — one partition per task slot, the r12 default.
+    3. Otherwise (no file source) — one partition per task slot.
     """
-    v = spark.conf.get(STATE_PARTITIONS_CONF, None)
-    hint = _take_source_bytes_hint(spark)  # consume even when unused
-    if v is not None:
-        return int(v)
     slots = spark.sparkContext.defaultParallelism
-    if sdf is not None and hint is not None:
-        try:
-            plan = sdf._jdf.queryExecution().analyzed().toString()
-        except Exception:
-            plan = ""
-        if any(m in plan for m in _PY_STATEFUL_MARKERS):
-            return slots
-        per = -(-hint // STATE_TARGET_BYTES_PER_PARTITION)
-        return max(4, min(per, STATE_MAX_SLOT_MULTIPLE * slots))
-    return slots
+    plan = sdf._jdf.queryExecution().analyzed()
+    if any(m in plan.toString() for m in _PY_STATEFUL_MARKERS):
+        return slots
+    n_bytes = _stream_source_bytes(spark, plan)
+    if n_bytes is None:
+        return slots
+    per = -(-n_bytes // STATE_TARGET_BYTES_PER_PARTITION)
+    return max(4, min(per, STATE_MAX_SLOT_MULTIPLE * slots))
 
 
 @contextlib.contextmanager
-def _state_partitions_for_start(spark: SparkSession, sdf: DataFrame | None):
+def _state_partitions_for_start(spark: SparkSession, sdf: DataFrame):
     """Pin ``spark.sql.shuffle.partitions`` around a stream ``start()``:
     the query snapshots the conf into its own cloned session (and its
     checkpoint) at start, so the parent session's value can be restored

@@ -156,3 +156,51 @@ def test_get_spark_extra_conf_wins_over_engine_defaults(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_session_paths_plan_tpch_joins_alike(spark, sf_dir):
+    """The plan-level twin of the defaults-table pin: two de-hinted TPC-H
+    joins, whose broadcast-or-shuffle choice rests on the session's
+    broadcast threshold, plan the same join operators on the get_spark
+    session and after configure_runtime re-applies the defaults to a
+    session with every table key unset. The query bodies call
+    configure_runtime themselves, so the frames are built once, the
+    get_spark values are put back, and each path re-plans the frames
+    through a fresh ``select``; nothing is executed."""
+    import re
+
+    from feast_ibm_spark.queries import QUERIES
+    from feast_ibm_spark.session import (
+        ENGINE_DEFAULTS,
+        LISTING_PARALLELISM,
+        configure_runtime,
+    )
+
+    def join_ops(frames):
+        return {
+            name: re.findall(
+                r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
+                r"BroadcastNestedLoopJoin|CartesianProduct)\b",
+                df.select("*")._jdf.queryExecution().executedPlan().toString(),
+            )
+            for name, df in frames.items()
+        }
+
+    keys = [*ENGINE_DEFAULTS, LISTING_PARALLELISM]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        frames = {
+            name: QUERIES[name].fn(spark, sf_dir)
+            for name in ["join_top_orders", "join_region_revenue"]
+        }
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        before = join_ops(frames)
+        assert all(len(ops) >= 2 for ops in before.values()), before
+        for k in keys:
+            spark.conf.unset(k)
+        configure_runtime(spark)
+        assert join_ops(frames) == before
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

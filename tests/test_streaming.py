@@ -1,6 +1,8 @@
 """Structured Streaming extension tests (availableNow trigger + memory
 sink over a temp parquet directory)."""
 
+import os
+import shutil
 import tempfile
 from datetime import datetime as TS
 
@@ -41,11 +43,12 @@ def _run_stream(sdf, query_name, mode):
     drain_available_now(sdf, query_name, output_mode=mode, timeout_s=120)
 
 
-def test_state_partition_heuristic_resolution(spark, event_dir):
-    """r13 state-partition derivation: explicit conf wins; Python-stateful
-    plans keep one partition per task slot; JVM-stateful plans with a
-    stamped source-bytes hint get bytes/16MiB clamped to [4, 8x slots];
-    no hint falls back to slots. The hint is consumed on read."""
+def test_state_partition_heuristic_resolution(spark, event_dir, monkeypatch):
+    """State-partition derivation from the query plan: JVM-stateful plans
+    over a file-stream source get source bytes/16MiB clamped to [4, 8x
+    slots]; Python-stateful plans keep one partition per task slot. The
+    count depends on the plan alone, so resolving twice gives the same
+    count."""
     from feast_ibm_spark.streaming import run as srun
     from feast_ibm_spark.streaming import stream_parquet_source
     from feast_ibm_spark.streaming.stateful import streaming_sessionize
@@ -53,33 +56,109 @@ def test_state_partition_heuristic_resolution(spark, event_dir):
     d, schema = event_dir
     slots = spark.sparkContext.defaultParallelism
 
-    # tiny source -> hint stamped by the reader -> clamped floor of 4
-    sdf = stream_parquet_source(spark, d, schema)
-    agg = sdf.groupBy("user_id").count()
+    # tiny source -> clamped floor of 4, the same on every resolution
+    agg = stream_parquet_source(spark, d, schema).groupBy("user_id").count()
     assert srun._stream_state_partitions(spark, agg) == 4
-    # hint consumed: a second resolution without a fresh reader falls back
-    assert srun._stream_state_partitions(spark, agg) == slots
+    assert srun._stream_state_partitions(spark, agg) == 4
 
-    # bytes scale the count: 100 GiB of input -> 8x-slots ceiling
-    srun.add_source_bytes_hint(spark, 100 << 30)
-    assert srun._stream_state_partitions(spark, agg) == min(
-        -(-(100 << 30) // srun.STATE_TARGET_BYTES_PER_PARTITION),
-        srun.STATE_MAX_SLOT_MULTIPLE * slots,
+    # bytes scale the count: at 1 byte per partition the source reaches
+    # the 8x-slots ceiling
+    monkeypatch.setattr(srun, "STATE_TARGET_BYTES_PER_PARTITION", 1)
+    assert srun._stream_state_partitions(spark, agg) == (
+        srun.STATE_MAX_SLOT_MULTIPLE * slots
     )
 
-    # python-stateful plans ignore the bytes hint and keep the slots
+    # python-stateful plans ignore the source bytes and keep the slots
     sdf2 = stream_parquet_source(spark, d, schema).withColumn(
         "event_id", F.monotonically_increasing_id()
     )
     sess = streaming_sessionize(sdf2, ["user_id"], "ts")
     assert srun._stream_state_partitions(spark, sess) == slots
 
-    # explicit conf always wins
-    spark.conf.set(srun.STATE_PARTITIONS_CONF, "7")
+
+def test_state_partitions_ignore_other_streams(
+    spark, event_dir, tmp_path, monkeypatch
+):
+    """A stream's state-partition count comes from its own sources only.
+    A parquet stream built and never drained does not move a later
+    rate-source aggregate off the slots default, and two parquet streams
+    built before either drains each resolve from their own bytes."""
+    from feast_ibm_spark.streaming import run as srun
+
+    d, schema = event_dir
+    slots = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(srun, "STATE_TARGET_BYTES_PER_PARTITION", 1)
+
+    stream_parquet_source(spark, d, schema)  # built, never drained
+    rate = spark.readStream.format("rate").load().groupBy().count()
+    assert srun._stream_state_partitions(spark, rate) == slots
+
+    # the big source holds three copies of the small one's file
+    df = spark.read.parquet(d).coalesce(1)
+    small, big = str(tmp_path / "small"), str(tmp_path / "big")
+    df.write.parquet(small)
+    for _ in range(3):
+        df.write.mode("append").parquet(big)
+
+    def data_bytes(path):
+        return sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path) if not f.startswith(".")
+        )
+
+    n_small, n_big = data_bytes(small), data_bytes(big)
+    target = -(-n_small // 4)
+    monkeypatch.setattr(srun, "STATE_TARGET_BYTES_PER_PARTITION", target)
+
+    def expected(n):
+        per = -(-n // target)
+        return max(4, min(per, srun.STATE_MAX_SLOT_MULTIPLE * slots))
+
+    s_small, s_big = (
+        stream_parquet_source(spark, p, schema).groupBy("user_id").count()
+        for p in (small, big)
+    )
+    # a shared session total (or none) would give a different count
+    assert expected(n_small) != expected(n_small + n_big)
+    assert expected(n_big) != slots
+    assert srun._stream_state_partitions(spark, s_small) == expected(n_small)
+    assert srun._stream_state_partitions(spark, s_big) == expected(n_big)
+
+
+def test_stream_source_bytes_from_plan(spark, sf_dir, tmp_path):
+    """Source bytes are read from the plan's file-stream leaves. A
+    single-file table, streamed as its directory plus a glob, counts that
+    file and not its larger sibling; a self-join counts its one source
+    once; a rate source has no file bytes; and resolving the partition
+    count runs no Spark job."""
+    from feast_ibm_spark.sources.reader import load_stream
+    from feast_ibm_spark.streaming import run as srun
+
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+    n_events = os.path.getsize(tmp_path / "events.parquet")
+    (tmp_path / "sibling.bin").write_bytes(b"\0" * (2 * n_events))
+
+    def source_bytes(sdf):
+        return srun._stream_source_bytes(
+            spark, sdf._jdf.queryExecution().analyzed()
+        )
+
+    events = load_stream(spark, str(tmp_path), "events")
+    assert source_bytes(events) == n_events
+    self_join = events.alias("a").join(events.alias("b"), "user_id")
+    assert source_bytes(self_join) == n_events
+    assert source_bytes(spark.readStream.format("rate").load()) is None
+
+    sc = spark.sparkContext
+    group = "test_stream_source_bytes_from_plan"
+    sc.setJobGroup(group, "state-partition resolution")
     try:
-        assert srun._stream_state_partitions(spark, sess) == 7
+        agg = self_join.groupBy("user_id").count()
+        assert srun._stream_state_partitions(spark, agg) == 4
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
-        spark.conf.unset(srun.STATE_PARTITIONS_CONF)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_streaming_latest_per_key(spark, event_dir):
