@@ -56,7 +56,6 @@ from ..operators.similarity import (
     near_dup_pairs,
     near_dup_pairs_lsh,
 )
-from ..session import configure_runtime
 from ..sources.reader import load_table
 
 
@@ -68,7 +67,6 @@ class QueryDef:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_runtime(spark)
     return load_table(spark, sf_dir, name)
 
 
@@ -120,7 +118,7 @@ __all__ = [
     "_hyperplanes", "ivfpq_cosine_topk", "pq_cosine_topk", "cosine_topk",
     "ivf_cosine_topk", "lsh_cosine_topk", "near_dup_pairs",
     "near_dup_pairs_lsh",
-    "configure_runtime", "load_table",
+    "load_table",
     "QueryDef", "_t", "_DUCK_TOKENS", "_DUCK_EN_STOPS",
     "_cents", "_partitioned_events_path",
 ]

@@ -475,13 +475,10 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow; the result hash-matches the batch DISTINCT oracle.
     Fourth streaming class at the gate (stateful sessionize, windowed
     agg, interval join, now dedup)."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream
     from ..streaming.run import drain_available_now
-
-    configure_runtime(spark)
 
     def one():
         return load_stream(spark, sf_dir, "events").select(
@@ -494,9 +491,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        deduped, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(deduped, sink)
     return out.select(
         "event_id", "user_id", "ts", "event_type",
         (F.col("__c").cast("double") / 100.0).alias("value"),
@@ -527,34 +522,27 @@ def q_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     property holds whenever ingestion files are key-partitioned (the
     standard compacted-upstream layout); otherwise first-batch-wins
     applies, documented on the kernel."""
-    import shutil
     import tempfile
     import uuid
 
     from ..streaming.run import drain_available_now
     from ..streaming.stateful import streaming_first_seen
 
-    configure_runtime(spark)
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    src_dir = tempfile.mkdtemp(prefix="fis_first_seen_src_")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    ev.repartition(4, "user_id").write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out = streaming_first_seen(
-        stream, ["user_id"], order_cols=["event_id"]
-    )
     sink = f"stream_first_seen_{uuid.uuid4().hex[:8]}"
-    return drain_available_now(
-        out, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    with tempfile.TemporaryDirectory(prefix="fis_first_seen_src_") as src_dir:
+        ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        out = streaming_first_seen(
+            stream, ["user_id"], order_cols=["event_id"]
+        )
+        return drain_available_now(out, sink)
 
 
 ORACLE_STREAM_FIRST_SEEN = """

@@ -349,7 +349,6 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly absent); this is the north-star continuous-ingestion twin
     of ``sessionize_events``.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import Window
@@ -358,15 +357,12 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.run import drain_available_now
     from ..streaming.stateful import streaming_sessionize
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select("user_id", "ts")
     sessions = streaming_sessionize(
         stream, ["user_id"], "ts", SESSION_GAP_S, idle_timeout_seconds=0.001
     )
     sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        sessions, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(sessions, sink)
     w = Window.partitionBy("user_id").orderBy("session_start")
     return (
         out.withColumn("session_id", F.row_number().over(w).cast("bigint"))
@@ -382,7 +378,6 @@ def q_streaming_sessionize_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE_SESSIONIZE, so the file-sink round-trip itself is under the
     value-hash gate."""
     import tempfile
-    import uuid
 
     from pyspark.sql import Window
 
@@ -390,16 +385,12 @@ def q_streaming_sessionize_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.run import drain_available_now_to_files
     from ..streaming.stateful import streaming_sessionize
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select("user_id", "ts")
     sessions = streaming_sessionize(
         stream, ["user_id"], "ts", SESSION_GAP_S, idle_timeout_seconds=0.001
     )
-    run_id = uuid.uuid4().hex[:8]
     out = drain_available_now_to_files(
-        sessions,
-        output_dir=tempfile.mkdtemp(prefix=f"fis_sink_{run_id}_"),
-        checkpoint_dir=tempfile.mkdtemp(prefix=f"fis_ckpt_{run_id}_"),
+        sessions, output_dir=tempfile.mkdtemp(prefix="fis_sink_")
     )
     w = Window.partitionBy("user_id").orderBy("session_start")
     return (
@@ -431,21 +422,11 @@ def q_streaming_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.pit_join import FeatureViewSpec
-    from ..sources.reader import load_table
     from ..streaming.pit import streaming_pit_join
+    from ..streaming.run import drain_writer
 
-    configure_runtime(spark)
     ev = _t(spark, sf_dir, "events")
     spine = _pit_spine(ev)
-
-    spine_dir = tempfile.mkdtemp(prefix="fis_pit_spine_")
-    spine.repartition(4).write.mode("overwrite").parquet(spine_dir)
-    spine_stream = (
-        spark.readStream.schema(spine.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(spine_dir)
-    )
-
     view = FeatureViewSpec(
         name="user_events",
         source=ev,
@@ -460,17 +441,18 @@ def q_streaming_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
-        streaming_pit_join(spine_stream, [view], sink=_sink,
-                           strategy="broadcast")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fis_pit_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    if q.isActive:  # pragma: no cover - defensive
-        q.stop()
-        raise TimeoutError("streaming PIT join did not drain in 600s")
+    with tempfile.TemporaryDirectory(prefix="fis_pit_spine_") as spine_dir:
+        spine.repartition(4).write.mode("overwrite").parquet(spine_dir)
+        spine_stream = (
+            spark.readStream.schema(spine.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(spine_dir)
+        )
+        drain_writer(
+            streaming_pit_join(spine_stream, [view], sink=_sink,
+                               strategy="broadcast"),
+            "streaming_pit_join",
+        )
     return spark.read.parquet(out_dir)
 
 # --------------------------------------------------------------------------

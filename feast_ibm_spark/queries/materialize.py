@@ -28,7 +28,6 @@ def q_materialize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.reader import read_parquet
     from ..store import SparkOfflineStore
 
-    configure_runtime(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     dest = os.path.join(tempfile.gettempdir(), f"fis_materialize_{tag}")
     shutil.rmtree(dest, ignore_errors=True)  # fresh increments every run
@@ -346,7 +345,6 @@ def q_materialize_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.reader import read_parquet
     from ..store import SparkOfflineStore
 
-    configure_runtime(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     dest = os.path.join(tempfile.gettempdir(), f"fis_mat_part_{tag}")
     shutil.rmtree(dest, ignore_errors=True)  # fresh layout every run
@@ -464,8 +462,7 @@ def q_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..streaming.cdc import streaming_cdc_merge
-
-    configure_runtime(spark)
+    from ..streaming.run import drain_writer
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "value", "event_id", "event_type"
@@ -490,30 +487,22 @@ def q_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    src_dir = tempfile.mkdtemp(prefix="fis_cdc_src_")
-    changes.repartition(4).write.mode("overwrite").parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    writer, state_path = streaming_cdc_merge(
-        stream,
-        snapshot,
-        tempfile.mkdtemp(prefix="fis_cdc_state_"),
-        key_cols=["user_id"],
-        ts_col="ts",
-        tiebreak_cols=["event_id"],
-    )
-    q = (
-        writer.option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="fis_cdc_ckpt_")
+    with tempfile.TemporaryDirectory(prefix="fis_cdc_src_") as src_dir:
+        changes.repartition(4).write.mode("overwrite").parquet(src_dir)
+        stream = (
+            spark.readStream.schema(changes.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+        writer, state_path = streaming_cdc_merge(
+            stream,
+            snapshot,
+            tempfile.mkdtemp(prefix="fis_cdc_state_"),
+            key_cols=["user_id"],
+            ts_col="ts",
+            tiebreak_cols=["event_id"],
+        )
+        drain_writer(writer, "streaming_cdc_merge")
     return (
         spark.read.parquet(state_path())
         .where(F.col("op") != "delete")
@@ -669,31 +658,25 @@ def q_streaming_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_versions,
         write_snapshot_batch,
     )
-
-    configure_runtime(spark)
+    from ..streaming.run import drain_writer
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", _cents("value").alias("cents"), "ts"
     )
-    src_dir = tempfile.mkdtemp(prefix="fis_snapsink_src_")
-    ev.repartition(4).write.mode("overwrite").parquet(src_dir)
     dest = tempfile.mkdtemp(prefix="fis_snapsink_tbl_")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: write_snapshot_batch(batch, dest, bid)
+    with tempfile.TemporaryDirectory(prefix="fis_snapsink_src_") as src_dir:
+        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
         )
-        .option("checkpointLocation",
-                tempfile.mkdtemp(prefix="fis_snapsink_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+        drain_writer(
+            stream.writeStream.foreachBatch(
+                lambda batch, bid: write_snapshot_batch(batch, dest, bid)
+            ),
+            "streaming_snapshot_sink",
+        )
     n_versions = len(snapshot_versions(dest))
     return (
         read_snapshot(spark, dest)
@@ -725,6 +708,9 @@ def q_streaming_snapshot_sink_stats(
     content, and the plan subset is pinned in tests/test_plans.py for
     the batch twin (same operator)."""
     import datetime
+    import hashlib
+    import os
+    import shutil
     import tempfile
 
     from ..sources.snapshots import (
@@ -734,13 +720,7 @@ def q_streaming_snapshot_sink_stats(
         snapshot_versions,
         write_snapshot_batch,
     )
-
-    configure_runtime(spark)
-
-    import hashlib
-    import os
-    import shutil
-
+    from ..streaming.run import drain_writer
     from .pipelines import _chain_needs_build
 
     ev = _t(spark, sf_dir, "events").select(
@@ -766,17 +746,13 @@ def q_streaming_snapshot_sink_stats(
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = (
+        drain_writer(
             stream.writeStream.foreachBatch(
                 lambda batch, bid: write_snapshot_batch(
                     batch, dest, bid, stats_cols=["ts"])
-            )
-            .option("checkpointLocation",
-                    tempfile.mkdtemp(prefix="fis_snapzm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "streaming_snapshot_sink_stats",
         )
-        q.awaitTermination(600)
     n_versions = len(snapshot_versions(dest))
 
     def prof(df: DataFrame, phase: int) -> DataFrame:

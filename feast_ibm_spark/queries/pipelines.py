@@ -21,13 +21,11 @@ def q_streaming_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete mode and hash-compared to the batch latest-per-key oracle.
     The winner orders by (ts, event_id) so ties are deterministic.
     Fifth streaming class at the gate."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", _cents("value").alias("__c")
     )
@@ -42,10 +40,7 @@ def q_streaming_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__w.__c").alias("__c"),
     )
     sink = f"stream_latest_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        agg, sink, output_mode="complete",
-        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
-    )
+    out = drain_available_now(agg, sink, output_mode="complete")
     return out.select(
         "user_id", "ts", "event_id",
         (F.col("__c").cast("double") / 100.0).alias("value"),
@@ -71,13 +66,11 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch latest_per_key operator — no streaming state from the join, so
     it runs forever at O(1) state. Oracle: the batch join of the same
     filter against the same latest snapshot. Sixth streaming class."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream, load_table
     from ..streaming.enrich import enrich_stream
 
-    configure_runtime(spark)
     stream = (
         load_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -95,9 +88,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.run import drain_available_now
 
     sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        enriched, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(enriched, sink)
     return out.select(
         "event_id", "user_id", "ts",
         (F.col("__c").cast("double") / 100.0).alias("value"),
@@ -2317,13 +2308,11 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-compared to the batch GROUP BY oracle — the watermark-windowed
     twin of the sessionize gate row. Counts and cent sums are integers;
     the one double is the final /100 scale."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select(
         "event_type", "ts", _cents("value").alias("__c")
     )
@@ -2340,10 +2329,7 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table at the last commit — the right drain semantics for a bounded
     # comparison run; a production continuous run would use append +
     # watermark and emit each window once finalized.
-    out = drain_available_now(
-        agg, sink, output_mode="complete",
-        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
-    )
+    out = drain_available_now(agg, sink, output_mode="complete")
     return out.select(
         F.col("win.start").alias("window_start"),
         "event_type",
@@ -2368,7 +2354,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     final watermark has not passed); ``session_id`` is re-derived per
     user by start order AFTER the drain — a batch window over the tiny
     session table, not streaming state."""
-    import tempfile
     import uuid
 
     from pyspark.sql import Window
@@ -2377,7 +2362,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.run import drain_available_now
     from .core import SESSION_GAP_S
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select("user_id", "ts")
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -2391,10 +2375,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sesswin_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        agg, sink, output_mode="complete",
-        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
-    )
+    out = drain_available_now(agg, sink, output_mode="complete")
     w = Window.partitionBy("user_id").orderBy("session_start")
     return out.withColumn(
         "session_id", F.row_number().over(w).cast("bigint")
@@ -2424,7 +2405,6 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.state_reader import read_session_window_state
     from .core import SESSION_GAP_S
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select("user_id", "ts")
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -2480,13 +2460,11 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, not event volume; the sort after the agg sees one row per user
     per trigger and the limit prunes it to k (TakeOrderedAndProject, no
     global sort materialization). Tenth streaming class at the gate."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select(
         "user_id", _cents("value").alias("__c")
     )
@@ -2497,10 +2475,7 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(STREAM_TOPK_K)
     )
     sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        board, sink, output_mode="complete",
-        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
-    )
+    out = drain_available_now(board, sink, output_mode="complete")
     return out.select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -2526,14 +2501,12 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-compared to the batch interval-join oracle. The third streaming
     class at the gate (stateful sessionize, windowed agg, now a binary
     stateful join)."""
-    import tempfile
     import uuid
 
     from ..sources.reader import load_stream
     from ..streaming.interval_join import streaming_interval_join
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     purchases = (
         load_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -2551,9 +2524,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         before_seconds=1800, after_seconds=0,
     )
     sink = f"stream_ivj_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        joined, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(joined, sink)
     return out.select(
         "user_id", "purchase_ts", "click_ts",
         (F.col("__c").cast("double") / 100.0).alias("purchase_value"),
@@ -3084,7 +3055,6 @@ def q_streaming_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.reader import load_stream
     from ..streaming.router import route_stream
 
-    configure_runtime(spark)
     stream = load_stream(spark, sf_dir, "events").select(
         "event_id", "event_type", _cents("value").alias("__c")
     )
@@ -3096,7 +3066,6 @@ def q_streaming_router(spark: SparkSession, sf_dir: str) -> DataFrame:
             "standard": F.col("event_type") != "purchase",
         },
         base_dir=base,
-        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
     )
     lanes = [
         spark.read.parquet(d).withColumn("lane", F.lit(name))
@@ -3144,7 +3113,6 @@ def q_streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.python_source import register_stream
     from ..streaming.run import drain_available_now_to_files
 
-    configure_runtime(spark)
     register_stream(spark)
     base = tempfile.mkdtemp(prefix=f"fis_pystream_{uuid.uuid4().hex[:8]}_")
     out_dir, ckpt = base + "/out", base + "/ckpt"
@@ -3410,13 +3378,11 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     result and absent from the oracle's view of the real table); its
     only job is to push the final watermark past all real data. A live
     deployment needs none of this — the next real event does it."""
-    import tempfile
     import uuid
 
     from ..streaming.interval_join import streaming_interval_join
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
     stream = spark.readStream.schema(schema).parquet(src)
@@ -3434,9 +3400,7 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
         how="left_outer",
     )
     sink = f"stream_ivjo_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        joined, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(joined, sink)
     return out.filter(F.col("user_id") >= 0).select(
         "user_id", "click_ts", "purchase_ts",
         (F.col("__c").cast("double") / 100.0).alias("purchase_value"),
@@ -3472,13 +3436,11 @@ def q_streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(ts) + 1 h) all flush; daily windows would strand the final day.
     A live deployment needs neither sentinel nor the width constraint —
     the next real event advances the watermark."""
-    import tempfile
     import uuid
 
     from ..streaming.interval_join import streaming_interval_join
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
     stream = spark.readStream.schema(schema).parquet(src)
@@ -3501,9 +3463,7 @@ def q_streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_pairs"), F.sum("__c").alias("__s"))
     )
     sink = f"stream_jtw_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        agg, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(agg, sink)
     return out.filter(F.col("user_id") >= 0).select(
         F.col("win.start").alias("window_start"),
         "user_id",
@@ -3545,13 +3505,11 @@ def q_streaming_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFram
     materialized events slice is cached per sf_dir across both interval
     join queries); the sentinel rows are filtered like every other
     synthetic id."""
-    import tempfile
     import uuid
 
     from ..streaming.interval_join import streaming_interval_join
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
     stream = spark.readStream.schema(schema).parquet(src)
@@ -3568,9 +3526,7 @@ def q_streaming_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFram
         how="left_semi",
     )
     sink = f"stream_ivjs_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        joined, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(joined, sink)
     return out.filter(F.col("user_id") >= 0).select("user_id", "click_ts")
 
 
@@ -3605,13 +3561,11 @@ def q_streaming_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFram
     bounded-drain sentinel mechanics as the outer twin (far-future
     sentinel rows push the final watermark past all real data; they are
     filtered from the result and absent from the oracle's view)."""
-    import tempfile
     import uuid
 
     from ..streaming.interval_join import streaming_interval_join
     from ..streaming.run import drain_available_now
 
-    configure_runtime(spark)
     src = _events_sentinel_path(spark, sf_dir)
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
     stream = spark.readStream.schema(schema).parquet(src)
@@ -3631,9 +3585,7 @@ def q_streaming_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFram
         "user_id", "click_ts"
     )
     sink = f"stream_ivja_{uuid.uuid4().hex[:8]}"
-    out = drain_available_now(
-        orphans, sink, checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_")
-    )
+    out = drain_available_now(orphans, sink)
     return out.filter(F.col("user_id") >= 0).select("user_id", "click_ts")
 
 

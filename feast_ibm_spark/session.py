@@ -41,6 +41,10 @@ ENGINE_DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # TIMESTAMP(NANOS) parquet columns read as raw INT64, which
+    # sources/reader.py projects back to microsecond timestamps; without
+    # it Spark fails the scan with PARQUET_TYPE_ILLEGAL
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 # Partition-discovery listing tasks capped at a multiple of task slots
@@ -95,11 +99,15 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine defaults to an externally created
     session.
 
-    Used when a host (driver harness, notebook, Feast) hands us its own
-    SparkSession: we cannot change JVM-start settings, but the
+    Call it ONCE when a host (driver harness, notebook, Feast) hands us
+    its own SparkSession: we cannot change JVM-start settings, but the
     ``ENGINE_DEFAULTS`` table is runtime-settable, and the timezone and AQE
     entries are required for reproducible timestamp semantics. The host's
-    ``spark.sql.shuffle.partitions`` is left alone.
+    ``spark.sql.shuffle.partitions`` is left alone. Sessions from
+    :func:`get_spark` already carry the table. The engine never re-applies
+    it after that: queries, operators and readers leave the session
+    config as they found it, so a later override (by the host, or through
+    ``get_spark(extra_conf=...)``) stays in force.
     """
     for k, v in ENGINE_DEFAULTS.items():
         spark.conf.set(k, v)

@@ -2,13 +2,13 @@
 
 Spark (through 4.x) cannot represent nanosecond parquet timestamps and
 fails the scan with ``PARQUET_TYPE_ILLEGAL: INT64 (TIMESTAMP(NANOS))``.
-The driver's synthetic tables (and plenty of real-world pandas/polars
-output) store nanos. The shim here:
+Plenty of real-world pandas/polars output stores nanos. The shim here:
 
 1. inspects the parquet footer (metadata-only, no data read) with pyarrow
    to find nanosecond timestamp columns,
-2. reads them as raw INT64 via the runtime-settable
-   ``spark.sql.legacy.parquet.nanosAsLong`` conf, and
+2. reads them as raw INT64 under the runtime-settable
+   ``spark.sql.legacy.parquet.nanosAsLong`` conf, which the engine's
+   session defaults (``session.ENGINE_DEFAULTS``) switch on, and
 3. projects them back to ``TimestampType`` with integer division
    (``ts div 1000`` — integer, not double, so 19-digit nanos don't lose
    precision) + ``timestamp_micros``.
@@ -29,8 +29,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _first_parquet_file(path: str) -> str | None:
@@ -74,22 +72,13 @@ def _nano_timestamp_columns(path: str) -> list[str]:
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` that transparently fixes nanos timestamps.
 
-    .. warning:: **Session-wide side effect.** When a nanos column is
-       detected this sets ``spark.sql.legacy.parquet.nanosAsLong=true``
-       for the whole session and never restores it (the conf must stay
-       enabled through action time — executors re-read footers when the
-       scan runs). Any *later* plain ``spark.read.parquet`` on a nanos
-       file in the same session will then silently yield raw ``bigint``
-       columns instead of the loud ``PARQUET_TYPE_ILLEGAL`` error. Route
-       all parquet reads through this function (as the engine itself
-       does) so nanos columns are always converted back to timestamps.
+    Nanos columns arrive as raw ``bigint`` under the session's
+    ``nanosAsLong`` default and are converted back to timestamps here;
+    a plain ``spark.read.parquet`` of the same file keeps them raw.
     """
     nanos = _nano_timestamp_columns(path)
     if not nanos:
         return spark.read.parquet(path)
-    # Must stay enabled through action time: executors re-read footers when
-    # the scan actually runs, so restoring the conf here would break the job.
-    spark.conf.set(_NANOS_CONF, "true")
     raw = spark.read.parquet(path)
     df = _convert_nanos(raw, nanos)
     # stash the pre-conversion frame so filter_ts_range can push range
@@ -209,7 +198,7 @@ def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
     timestamps exactly like the batch path — the streaming and batch
     reads of one table therefore see bit-identical timestamps, which is
     what lets a deterministic streaming query share its batch twin's
-    oracle. Same session-wide conf caveat as :func:`read_parquet`.
+    oracle.
     """
     nanos = _nano_timestamp_columns(path)
     def _stream(schema) -> DataFrame:
@@ -223,7 +212,6 @@ def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
 
     if not nanos:
         return _stream(spark.read.parquet(path).schema)
-    spark.conf.set(_NANOS_CONF, "true")
     raw = _stream(spark.read.parquet(path).schema)
     return _convert_nanos(raw, nanos)
 

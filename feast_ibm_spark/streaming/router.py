@@ -29,18 +29,19 @@ def route_stream(
     stream: DataFrame,
     routes: dict[str, Column],
     base_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     timeout_s: float = 600.0,
 ) -> dict[str, str]:
     """Drain ``stream`` (availableNow) once, routing rows into one
     parquet directory per entry of ``routes`` (name -> boolean Column).
     Routes may overlap or not cover every row — the router imposes no
     partition contract beyond the predicates given. Returns
-    {route_name: output_dir}.
+    {route_name: output_dir}. Pass ``checkpoint_dir`` only to resume the
+    routing later; otherwise the drain owns its checkpoint.
     """
     import os
 
-    from .run import _run_to_fixed_point
+    from .run import drain_writer
 
     dirs = {name: os.path.join(base_dir, name) for name in routes}
 
@@ -56,11 +57,6 @@ def route_stream(
         finally:
             batch.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_to_fixed_point(q, base_dir, timeout_s, 0.1)
+    drain_writer(stream.writeStream.foreachBatch(write_batch), base_dir,
+                 checkpoint_dir, timeout_s)
     return dirs

@@ -21,6 +21,8 @@ here cannot lose emitted rows.
 from __future__ import annotations
 
 import contextlib
+import shutil
+import tempfile
 import time
 
 from py4j.protocol import Py4JJavaError
@@ -192,6 +194,42 @@ def _state_partitions_for_start(spark: SparkSession, sdf: DataFrame):
             spark.conf.unset(key)
 
 
+def drain_writer(
+    writer,
+    query_name: str,
+    checkpoint_dir: str | None = None,
+    timeout_s: float = 600.0,
+    poll_s: float = 0.1,
+    sdf: DataFrame | None = None,
+) -> None:
+    """Start a caller-built ``writer`` (its sink is the caller's, e.g. a
+    ``foreachBatch``) with availableNow and run it to the drained fixed
+    point. Hitting ``timeout_s`` stops the query and raises
+    ``TimeoutError`` — a partial sink is never returned while the query
+    runs on. With ``sdf``, the frame being written, the start is pinned
+    to its plan-derived state partition count.
+
+    A caller-given ``checkpoint_dir`` is the caller's to keep (it reads
+    or resumes it afterwards). Without one the drain owns a fresh
+    ``tempfile`` directory (so a TMPDIR redirect moves it) and removes
+    it once the run has returned or raised: no sink's read-back reads it.
+    """
+    owned = checkpoint_dir is None
+    ckpt = tempfile.mkdtemp(prefix="fis_ckpt_") if owned else checkpoint_dir
+    try:
+        writer = writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True)
+        if sdf is None:
+            q = writer.start()
+        else:
+            with _state_partitions_for_start(sdf.sparkSession, sdf):
+                q = writer.start()
+        _run_to_fixed_point(q, query_name, timeout_s, poll_s)
+    finally:
+        if owned:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def drain_available_now(
     sdf: DataFrame,
     query_name: str,
@@ -206,21 +244,17 @@ def drain_available_now(
     plans, or stateful plans without processing-time timers), or (b) a
     committed batch had 0 input rows and the state store holds 0 rows —
     the fixed point for timer-flushed stateful plans on bounded input.
-    Returns the sink as a DataFrame.
+    Returns the sink as a DataFrame. Pass ``checkpoint_dir`` only to
+    read or resume the checkpoint afterwards; otherwise the drain owns
+    one and removes it.
     """
-    spark: SparkSession = sdf.sparkSession
     writer = (
         sdf.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    with _state_partitions_for_start(spark, sdf):
-        q = writer.start()
-    _run_to_fixed_point(q, query_name, timeout_s, poll_s)
-    return spark.table(query_name)
+    drain_writer(writer, query_name, checkpoint_dir, timeout_s, poll_s, sdf)
+    return sdf.sparkSession.table(query_name)
 
 
 def _run_to_fixed_point(q, query_name: str, timeout_s: float, poll_s: float):
@@ -251,7 +285,7 @@ def _run_to_fixed_point(q, query_name: str, timeout_s: float, poll_s: float):
 def drain_available_now_to_files(
     sdf: DataFrame,
     output_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     fmt: str = "parquet",
     timeout_s: float = 600.0,
     poll_s: float = 0.1,
@@ -263,19 +297,16 @@ def drain_available_now_to_files(
     semantics via the sink's ``_spark_metadata`` commit log, which the
     read-back below consults so uncommitted files from an interrupted
     run are never read. File sinks are append-only, hence no
-    ``output_mode`` knob. Same drained-fixed-point termination rule.
+    ``output_mode`` knob. Same drained-fixed-point termination rule and
+    the same checkpoint ownership (the read-back needs only the sink's
+    own commit log).
 
     Returns the committed sink contents as a batch DataFrame.
     """
-    spark: SparkSession = sdf.sparkSession
     writer = (
         sdf.writeStream.format(fmt)
         .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
     )
-    with _state_partitions_for_start(spark, sdf):
-        q = writer.start()
-    _run_to_fixed_point(q, output_dir, timeout_s, poll_s)
-    return spark.read.format(fmt).load(output_dir)
+    drain_writer(writer, output_dir, checkpoint_dir, timeout_s, poll_s, sdf)
+    return sdf.sparkSession.read.format(fmt).load(output_dir)

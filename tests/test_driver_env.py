@@ -85,26 +85,55 @@ def test_drain_empty_batch_fixed_point_exits_early(spark, tiny_event_dir):
     assert elapsed < 60
 
 
-def test_tempdir_redirect_via_tmpdir_env(spark, sf_dir, monkeypatch, tmp_path):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_latest",
+        "streaming_first_seen",
+        "streaming_sessionize_files",
+        "streaming_cdc_merge",
+        "streaming_router",
+    ],
+)
+def test_tempdir_redirect_via_tmpdir_env(
+    spark, sf_dir, monkeypatch, tmp_path, name
+):
     """Every scratch path (streaming checkpoints included) flows through
     ``tempfile``; pointing TMPDIR at a writable directory must be enough
     to run a streaming gate query when /tmp is unusable. Pin: with the
-    redirect active, a full gate streaming query runs green and its
-    checkpoint actually lands under the redirected root (nothing in the
-    repo hardcodes /tmp — grep-pinned by review, behavior-pinned here)."""
+    redirect active, every directory the query makes lands under the
+    redirected root, its drain checkpoint existed there, and after
+    ``collect()`` only the directories the returned frame reads are
+    left — checkpoints and per-run source copies are removed."""
+    from urllib.parse import urlparse
+
     redirect = tmp_path / "scratch"
     redirect.mkdir()
     monkeypatch.setenv("TMPDIR", str(redirect))
     # tempfile caches the resolved tempdir at first use; force re-resolve
     monkeypatch.setattr(tempfile, "tempdir", None)
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
     try:
         assert tempfile.gettempdir() == str(redirect)
         from feast_ibm_spark.queries import QUERIES
 
-        out = QUERIES["streaming_latest"].fn(spark, sf_dir)
-        assert out.count() > 0
-        ckpts = [p for p in os.listdir(redirect) if p.startswith("fis_ckpt_")]
-        assert ckpts, "checkpoint did not land under the TMPDIR redirect"
+        out = QUERIES[name].fn(spark, sf_dir)
+        assert out.collect()
+        read = [urlparse(f).path for f in out.inputFiles()]
+        assert made and all(d.startswith(f"{redirect}/") for d in made), made
+        ckpts = [d for d in made if os.path.basename(d).startswith("fis_ckpt_")]
+        assert ckpts, "no drain checkpoint landed under the TMPDIR redirect"
+        left = [d for d in made if os.path.exists(d)]
+        assert all(
+            any(f.startswith(f"{d}/") for f in read) for d in left
+        ), (left, read)
     finally:
         monkeypatch.setattr(tempfile, "tempdir", None)
 
@@ -158,15 +187,68 @@ def test_get_spark_extra_conf_wins_over_engine_defaults(spark):
             spark.conf.set(k, v)
 
 
+def test_query_build_keeps_host_conf_override(spark, sf_dir):
+    """Building a query leaves the session config as the host set it:
+    with broadcast joins switched off, ``join_top_orders`` is built, the
+    threshold still reads -1, and its de-hinted joins plan as sort-merge
+    joins only."""
+    from feast_ibm_spark.queries import QUERIES
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        df = QUERIES["join_top_orders"].fn(spark, sf_dir)
+        assert spark.conf.get(key) == "-1"
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "BroadcastHashJoin" not in plan
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_driver_entry_applies_engine_defaults(spark, sf_dir, monkeypatch):
+    """The driver contract is the one entry that applies the engine
+    config to a host session: with every table key unset, a function
+    from ``__spark_entry__.queries()`` restores the table (and the
+    listing cap) before the query body runs."""
+    import sys
+
+    from feast_ibm_spark.queries import DRIVER_QUERIES
+    from feast_ibm_spark.session import ENGINE_DEFAULTS, LISTING_PARALLELISM
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry_mod
+
+    keys = [*ENGINE_DEFAULTS, LISTING_PARALLELISM]
+    saved = {k: spark.conf.get(k) for k in keys}
+    seen = {}
+
+    def body(s, d):
+        seen.update({k: s.conf.get(k, None) for k in keys})
+        return s.range(1)
+
+    name, qd = next(iter(DRIVER_QUERIES.items()))
+    monkeypatch.setattr(qd, "fn", body)
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        entry_mod.queries()[name](spark, sf_dir)
+        assert seen == saved
+        assert {k: spark.conf.get(k) for k in ENGINE_DEFAULTS} == ENGINE_DEFAULTS
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_session_paths_plan_tpch_joins_alike(spark, sf_dir):
     """The plan-level twin of the defaults-table pin: two de-hinted TPC-H
     joins, whose broadcast-or-shuffle choice rests on the session's
     broadcast threshold, plan the same join operators on the get_spark
     session and after configure_runtime re-applies the defaults to a
-    session with every table key unset. The query bodies call
-    configure_runtime themselves, so the frames are built once, the
-    get_spark values are put back, and each path re-plans the frames
-    through a fresh ``select``; nothing is executed."""
+    session with every table key unset. The frames are built once and
+    each path re-plans them through a fresh ``select``; nothing is
+    executed."""
     import re
 
     from feast_ibm_spark.queries import QUERIES
@@ -188,15 +270,13 @@ def test_session_paths_plan_tpch_joins_alike(spark, sf_dir):
 
     keys = [*ENGINE_DEFAULTS, LISTING_PARALLELISM]
     saved = {k: spark.conf.get(k) for k in keys}
+    frames = {
+        name: QUERIES[name].fn(spark, sf_dir)
+        for name in ["join_top_orders", "join_region_revenue"]
+    }
+    before = join_ops(frames)
+    assert all(len(ops) >= 2 for ops in before.values()), before
     try:
-        frames = {
-            name: QUERIES[name].fn(spark, sf_dir)
-            for name in ["join_top_orders", "join_region_revenue"]
-        }
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        before = join_ops(frames)
-        assert all(len(ops) >= 2 for ops in before.values()), before
         for k in keys:
             spark.conf.unset(k)
         configure_runtime(spark)

@@ -376,7 +376,10 @@ def test_filter_ts_range_nanos_boundaries_randomized(spark, tmp_path):
     p = str(tmp_path / "nanos.parquet")
     pq.write_table(tbl, p, version="2.6", coerce_timestamps=None)
 
+    conf = spark.conf.getAll
     df = read_parquet(spark, p)
+    # the nanos read rides the session default; it sets no conf itself
+    assert spark.conf.getAll == conf
     import pandas as pd
 
     for _ in range(10):
