@@ -13,7 +13,8 @@ import functools
 from datetime import datetime
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .operators.pit_join import FeatureViewSpec, _spine_time_range, point_in_time_join
 from .operators.pull_all import time_range_scan
@@ -63,16 +64,15 @@ def _infer_event_timestamp_col(columns: list[str]) -> str:
 def _write_counted(out: DataFrame, write) -> int:
     """Run ``write(out.write)`` and return the number of rows written.
 
-    Counts THIS increment's output, not the destination directory — with
-    mode="append" a re-read would count pre-existing snapshots too, and at
-    scale it is a full extra scan. Persisted so the write and the count
-    share one computation."""
-    out = out.persist()
-    try:
-        write(out.write)
-        return out.count()
-    finally:
-        out.unpersist()
+    The count is an observed metric of the write job itself: no second
+    pass and nothing cached, so AQE is free to coalesce the output into
+    fewer files. It counts THIS increment's output, not the destination
+    directory — with mode="append" a re-read would count pre-existing
+    snapshots too. A write that raises never reaches ``obs.get``, so it
+    cannot block there."""
+    obs = Observation()
+    write(out.observe(obs, F.count(F.lit(1)).alias("n")).write)
+    return obs.get["n"]
 
 
 class SparkOfflineStore:
@@ -284,8 +284,6 @@ class SparkOfflineStore:
 
         Returns the number of rows written by this increment.
         """
-        import pyspark.sql.functions as F
-
         job = SparkOfflineStore.pull_latest_from_table_or_query(
             spark,
             data_source,

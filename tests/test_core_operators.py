@@ -574,6 +574,126 @@ def test_materialize_increment(spark, tmp_path):
     assert got == {1: 2.0, 2: 5.0}
 
 
+def _materialize_mat_src(spark, dest, start, end, mode="overwrite"):
+    from feast_ibm_spark.sources.data_source import SparkDataSource
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    return SparkOfflineStore.materialize(
+        spark, SparkDataSource(table="mat_src"), ["k"], ["v"], "ts",
+        "created", start, end, dest, mode=mode,
+    )
+
+
+def test_materialize_empty_increment_counts_zero(spark, tmp_path):
+    """A window with no rows: the observed count is 0 (no hang waiting
+    for a metric) and the destination reads back empty."""
+    from datetime import datetime as TS
+
+    spark.createDataFrame(
+        [(1, TS(2024, 1, 1, 10), TS(2024, 1, 1, 10), 1.0)],
+        "k bigint, ts timestamp, created timestamp, v double",
+    ).createOrReplaceTempView("mat_src")
+    dest = str(tmp_path / "empty_snapshot")
+    assert _materialize_mat_src(spark, dest, TS(2025, 1, 1), TS(2025, 1, 31)) == 0
+    assert spark.read.parquet(dest).count() == 0
+
+
+def test_materialize_append_counts_this_increment_only(spark, tmp_path):
+    """mode="append" into a non-empty destination returns only this
+    increment's row count, while the directory holds both increments."""
+    from datetime import datetime as TS
+
+    spark.createDataFrame(
+        [
+            (1, TS(2024, 1, 1, 10), TS(2024, 1, 1, 10), 1.0),
+            (2, TS(2024, 1, 1, 9), TS(2024, 1, 1, 9), 5.0),
+            (3, TS(2024, 1, 2, 9), TS(2024, 1, 2, 9), 7.0),
+        ],
+        "k bigint, ts timestamp, created timestamp, v double",
+    ).createOrReplaceTempView("mat_src")
+    dest = str(tmp_path / "append_snapshot")
+    assert _materialize_mat_src(spark, dest, TS(2024, 1, 1), TS(2024, 1, 1, 23)) == 2
+    n = _materialize_mat_src(
+        spark, dest, TS(2024, 1, 2), TS(2024, 1, 2, 23), mode="append"
+    )
+    assert n == 1
+    assert spark.read.parquet(dest).count() == 3
+
+
+def test_materialize_failed_write_raises_without_blocking(spark, tmp_path):
+    """A write that raises (mode="error" into an existing destination)
+    propagates its exception instead of waiting on the row-count metric.
+    Run in a daemon thread with a bounded join so a hang fails the test
+    rather than stalling the suite."""
+    import threading
+    from datetime import datetime as TS
+
+    from pyspark.errors import AnalysisException
+
+    spark.createDataFrame(
+        [(1, TS(2024, 1, 1, 10), TS(2024, 1, 1, 10), 1.0)],
+        "k bigint, ts timestamp, created timestamp, v double",
+    ).createOrReplaceTempView("mat_src")
+    dest = str(tmp_path / "existing_snapshot")
+    assert _materialize_mat_src(spark, dest, TS(2024, 1, 1), TS(2024, 1, 31)) == 1
+
+    outcome = {}
+
+    def run():
+        try:
+            outcome["n"] = _materialize_mat_src(
+                spark, dest, TS(2024, 1, 1), TS(2024, 1, 31), mode="error"
+            )
+        except Exception as e:
+            outcome["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(60)
+    assert not t.is_alive(), "materialize blocked after a failed write"
+    assert "n" not in outcome
+    assert isinstance(outcome["error"], AnalysisException)
+    assert spark.read.parquet(dest).count() == 1
+
+
+def test_materialize_runs_three_jobs_and_caches_nothing(spark, tmp_path):
+    """One materialize increment is three Spark jobs: the source schema
+    read, the latest-per-key shuffle map stage and the write, which also
+    carries the row count. No re-read of the output counts it and nothing
+    is left in the cache."""
+    from datetime import datetime as TS
+
+    from feast_ibm_spark.sources.data_source import SparkDataSource
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    src = str(tmp_path / "src.parquet")
+    spark.createDataFrame(
+        [
+            (1, TS(2024, 1, 1, 10), 1.0),
+            (1, TS(2024, 1, 2, 10), 2.0),
+            (2, TS(2024, 1, 1, 9), 5.0),
+        ],
+        "k bigint, ts timestamp, v double",
+    ).write.parquet(src)
+    dest = str(tmp_path / "snapshot")
+    sc = spark.sparkContext
+    try:
+        for i in range(3):
+            group = f"test_materialize_job_count_{i}"
+            sc.setJobGroup(group, "materialize job count")
+            n = SparkOfflineStore.materialize(
+                spark, SparkDataSource(path=src, timestamp_field="ts"), ["k"],
+                ["v"], "ts", None, TS(2024, 1, 1), TS(2024, 1, 31), dest,
+            )
+            assert n == 2
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_materialize_partitioned_retry_is_idempotent(spark, tmp_path):
     """Day-partitioned materialize: a verbatim re-run of a slice replaces
     its day directories (dynamic partition overwrite) instead of

@@ -25,8 +25,8 @@ from feast_ibm_spark.streaming import (
 
 
 @pytest.fixture(scope="module")
-def tiny_event_dir(spark):
-    d = tempfile.mkdtemp(prefix="fis_driver_env_")
+def tiny_event_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("driver_env"))
     df = spark.createDataFrame(
         [
             (1, TS(2024, 1, 1, 10, 0), 1.0),

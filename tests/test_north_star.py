@@ -3588,7 +3588,7 @@ if _HAS_HYP_DEDUP:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_cms_heavy_hitters_property_matches_python(spark, docs):
+    def test_cms_heavy_hitters_property_matches_python(spark, tmp_path_factory, docs):
         """The CMS pipeline (poly token hash -> d x w integer counters
         -> min-over-rows estimate) vs a pure-Python replica of the
         full pipeline at the query's real parameters, driven from the
@@ -3632,9 +3632,8 @@ if _HAS_HYP_DEDUP:
             assert est >= n  # CMS one-sided error
 
         import os
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="fis_cms_net_")
+        d = str(tmp_path_factory.mktemp("cms_net"))
         spark.createDataFrame(
             [(i, x, "en", "net", len(x)) for i, x in enumerate(texts)],
             "doc_id bigint, text string, lang string, source string, "
@@ -3753,14 +3752,13 @@ if _HAS_HYP_DEDUP:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_cusum_changepoint_property_matches_python(spark, rows):
+    def test_cusum_changepoint_property_matches_python(spark, tmp_path_factory, rows):
         """The CUSUM argmax |n*S_k - k*S_n| (earliest k on exact ties)
         replayed in pure Python integers on random per-key series. The
         query under test is the registered one run over a parquet
         events fixture, so the whole chain — cents cast, windows,
         tie-break — is exercised, not just the formula."""
         import shutil
-        import tempfile
 
         from feast_ibm_spark.queries import QUERIES
 
@@ -3783,7 +3781,7 @@ if _HAS_HYP_DEDUP:
                     best = (idx, dev)
             want[k] = (n, best[0], best[1])
 
-        d = tempfile.mkdtemp(prefix="fis_cusum_net_")
+        d = str(tmp_path_factory.mktemp("cusum_net"))
         try:
             spark.createDataFrame(
                 data, "user_id bigint, event_id bigint, ts string, "
@@ -3818,12 +3816,11 @@ if _HAS_HYP_DEDUP:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_mode_exact_property_matches_python(spark, rows):
+    def test_mode_exact_property_matches_python(spark, tmp_path_factory, rows):
         """agg_mode_exact's tie rule (highest count, lexicographically
         smallest value) replayed in Python on random multisets — SQL's
         mode() leaves ties undefined; this one must not."""
         import shutil
-        import tempfile
 
         from feast_ibm_spark.queries import QUERIES
 
@@ -3836,7 +3833,7 @@ if _HAS_HYP_DEDUP:
             mode = min(cnt, key=lambda v: (-cnt[v], v))
             want[k] = (mode, cnt[mode], sum(cnt.values()))
 
-        d = tempfile.mkdtemp(prefix="fis_mode_net_")
+        d = str(tmp_path_factory.mktemp("mode_net"))
         try:
             spark.createDataFrame(
                 [(k, i, "2024-01-01 00:00:00", 1.0, v)
@@ -3875,7 +3872,7 @@ if _HAS_HYP_DEDUP:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_snapshot_lifecycle_property_matches_replay(spark, ops):
+    def test_snapshot_lifecycle_property_matches_replay(spark, tmp_path_factory, ops):
         """VERDICT r11 item 7: brute-force replay net for the snapshot
         table's full mutation surface. Random op sequences —
         append / MOR key-tombstone delete / copy-on-write MERGE
@@ -3887,7 +3884,6 @@ if _HAS_HYP_DEDUP:
         Final read_snapshot content must equal the model's visible
         view exactly."""
         import shutil
-        import tempfile
 
         from feast_ibm_spark.sources.snapshots import (
             compact_snapshots,
@@ -3904,7 +3900,7 @@ if _HAS_HYP_DEDUP:
         def visible() -> dict[int, int]:
             return {k: v for k, v in physical.items() if k not in tombs}
 
-        d = tempfile.mkdtemp(prefix="fis_snap_net_")
+        d = str(tmp_path_factory.mktemp("snap_net"))
         tbl = d + "/tbl"
         mk = lambda rows, schema="k bigint, v bigint": spark.createDataFrame(
             rows, schema)
@@ -3976,7 +3972,7 @@ if _HAS_HYP_DEDUP:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_mann_kendall_property_matches_replay(spark, rows):
+    def test_mann_kendall_property_matches_replay(spark, tmp_path_factory, rows):
         """trend_mann_kendall must reproduce a brute-force Python
         Mann-Kendall over the daily count series exactly — S, the
         concordant/discordant/tied pair counts, and the identity
@@ -3984,7 +3980,6 @@ if _HAS_HYP_DEDUP:
         with repeated days (the daily aggregation collapses them) and
         single-day users (no pairs: absent from the output)."""
         import shutil
-        import tempfile
 
         from feast_ibm_spark.queries import QUERIES
 
@@ -4015,7 +4010,7 @@ if _HAS_HYP_DEDUP:
                         t += 1
             want[u] = (c - d_, c, d_, t)
 
-        d = tempfile.mkdtemp(prefix="fis_mk_net_")
+        d = str(tmp_path_factory.mktemp("mk_net"))
         try:
             spark.createDataFrame(
                 [(u, eid, ts, v, et) for (u, eid, ts, v, et) in

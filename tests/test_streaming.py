@@ -3,7 +3,6 @@ sink over a temp parquet directory)."""
 
 import os
 import shutil
-import tempfile
 from datetime import datetime as TS
 
 import pytest
@@ -17,8 +16,8 @@ from feast_ibm_spark.streaming import (
 
 
 @pytest.fixture(scope="module")
-def event_dir(spark):
-    d = tempfile.mkdtemp(prefix="fis_stream_")
+def event_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("stream"))
     df = spark.createDataFrame(
         [
             (1, TS(2024, 1, 1, 10, 0), 1.0),
@@ -171,7 +170,7 @@ def test_streaming_latest_per_key(spark, event_dir):
     assert got == {1: 2.0, 2: 5.0, 3: 9.0}
 
 
-def test_streaming_sessionize_across_batches(spark):
+def test_streaming_sessionize_across_batches(spark, tmp_path):
     """Gap sessionization with REAL cross-batch state: two parquet files
     processed as separate micro-batches (maxFilesPerTrigger=1), sessions
     closed in either batch are emitted exactly once."""
@@ -179,7 +178,7 @@ def test_streaming_sessionize_across_batches(spark):
 
     from feast_ibm_spark.streaming import streaming_sessionize
 
-    d = tempfile.mkdtemp(prefix="fis_sess_")
+    d = str(tmp_path)
     schema = "user_id bigint, ts timestamp"
     batch1 = spark.createDataFrame(
         [
@@ -219,12 +218,12 @@ def test_streaming_sessionize_across_batches(spark):
     }
 
 
-def test_streaming_first_seen_dedup_across_batches(spark):
+def test_streaming_first_seen_dedup_across_batches(spark, tmp_path):
     import os
 
     from feast_ibm_spark.streaming import streaming_first_seen
 
-    d = tempfile.mkdtemp(prefix="fis_seen_")
+    d = str(tmp_path)
     schema = "user_id bigint, ts timestamp, value double"
     b1 = spark.createDataFrame(
         [(1, TS(2024, 1, 1, 10, 0), 1.0), (1, TS(2024, 1, 1, 11, 0), 2.0),
@@ -269,7 +268,7 @@ def test_streaming_window_counts(spark, event_dir):
     }
 
 
-def test_streaming_pit_join_per_microbatch(spark):
+def test_streaming_pit_join_per_microbatch(spark, tmp_path):
     """Streaming PIT join: each micro-batch of spine rows is as-of joined
     against the static feature table via foreachBatch, reusing the batch
     operator (TTL + latest-row semantics identical to the batch path)."""
@@ -292,7 +291,7 @@ def test_streaming_pit_join_per_microbatch(spark):
         ttl_seconds=86400,
     )
 
-    d = tempfile.mkdtemp(prefix="fis_spit_")
+    d = str(tmp_path)
     schema = "user_id bigint, event_timestamp timestamp"
     b1 = spark.createDataFrame(
         [(1, TS(2024, 1, 1, 12, 0)), (2, TS(2024, 1, 1, 12, 0))], schema
@@ -354,7 +353,7 @@ def test_enrich_stream_with_latest_features(spark, event_dir):
     assert by_user[3] == {(None, None)}
 
 
-def test_streaming_sessionize_idle_timeout_flushes_open_session(spark):
+def test_streaming_sessionize_idle_timeout_flushes_open_session(spark, tmp_path):
     """idle_timeout_seconds: a key that goes quiet has its OPEN session
     flushed by the processing-time timeout (and its state evicted) —
     without the timeout that session would never be emitted."""
@@ -362,7 +361,7 @@ def test_streaming_sessionize_idle_timeout_flushes_open_session(spark):
 
     from feast_ibm_spark.streaming import streaming_sessionize
 
-    d = tempfile.mkdtemp(prefix="fis_sess_timeout_")
+    d = str(tmp_path)
     schema = "user_id bigint, ts timestamp"
     b1 = spark.createDataFrame(
         [(2, TS(2024, 1, 1, 10, 0)), (2, TS(2024, 1, 1, 10, 10)),
@@ -398,7 +397,7 @@ def test_streaming_sessionize_idle_timeout_flushes_open_session(spark):
     }
 
 
-def test_streaming_first_seen_state_ttl_readmits_key(spark):
+def test_streaming_first_seen_state_ttl_readmits_key(spark, tmp_path):
     """state_ttl_seconds: a key's dedup flag is evicted after the TTL, so
     the key is re-emitted when it recurs later (bounded state for
     unbounded key universes); a key that keeps recurring within the TTL
@@ -407,7 +406,7 @@ def test_streaming_first_seen_state_ttl_readmits_key(spark):
 
     from feast_ibm_spark.streaming import streaming_first_seen
 
-    d = tempfile.mkdtemp(prefix="fis_seen_ttl_")
+    d = str(tmp_path)
     schema = "k string, v bigint"
     b1 = spark.createDataFrame([("a", 1), ("b", 10)], schema)
     b2 = spark.createDataFrame([("b", 11)], schema)   # a's flag times out here
@@ -575,7 +574,7 @@ def test_streaming_cdc_merge_survives_restart(spark, tmp_path):
     assert final == {1: 10.0, 2: 20.0, 3: 30.0}
 
 
-def test_route_stream_multi_sink_and_rerun_stability(spark):
+def test_route_stream_multi_sink_and_rerun_stability(spark, tmp_path_factory):
     """One pass, two sinks: rows land in every route whose predicate
     they satisfy (overlap allowed), multi-batch input produces one
     batch=<id> dir per micro-batch, and re-running against the SAME
@@ -585,7 +584,7 @@ def test_route_stream_multi_sink_and_rerun_stability(spark):
 
     from feast_ibm_spark.streaming.router import route_stream
 
-    src = tempfile.mkdtemp(prefix="fis_route_src_")
+    src = str(tmp_path_factory.mktemp("route_src"))
     rows = [(i, "purchase" if i % 2 == 0 else "click", i * 10)
             for i in range(8)]
     df = spark.createDataFrame(rows, "id bigint, et string, c bigint")
@@ -600,8 +599,8 @@ def test_route_stream_multi_sink_and_rerun_stability(spark):
             .parquet(src + "/*")
         )
 
-    base = tempfile.mkdtemp(prefix="fis_route_out_")
-    ckpt = tempfile.mkdtemp(prefix="fis_route_ckpt_")
+    base = str(tmp_path_factory.mktemp("route_out"))
+    ckpt = str(tmp_path_factory.mktemp("route_ckpt"))
     routes = {
         "purchases": F.col("et") == "purchase",
         "big": F.col("c") >= 30,  # overlaps purchases for id in {4, 6}
@@ -623,12 +622,11 @@ def test_route_stream_multi_sink_and_rerun_stability(spark):
     assert {r.id for r in spark.read.parquet(dirs["big"]).collect()} == got_b
 
 
-def test_state_reader_decodes_and_time_travels(spark):
+def test_state_reader_decodes_and_time_travels(spark, tmp_path_factory):
     """The statestore reader decodes a session-window aggregation's
     checkpoint faithfully (counts match the sink) and batchId time
     travel reads an EARLIER batch's smaller state."""
     import os
-    import tempfile
 
     from feast_ibm_spark.streaming import drain_available_now
     from feast_ibm_spark.streaming.state_reader import (
@@ -636,7 +634,7 @@ def test_state_reader_decodes_and_time_travels(spark):
         read_state,
     )
 
-    d = tempfile.mkdtemp(prefix="fis_ssr_src_")
+    d = str(tmp_path_factory.mktemp("ssr_src"))
     rows1 = [(1, TS(2024, 1, 1, 10, 0)), (1, TS(2024, 1, 1, 10, 5)),
              (2, TS(2024, 1, 1, 11, 0))]
     rows2 = [(1, TS(2024, 1, 1, 14, 0)), (3, TS(2024, 1, 1, 9, 0))]
@@ -653,7 +651,7 @@ def test_state_reader_decodes_and_time_travels(spark):
            .agg(F.min("ts").alias("session_start"),
                 F.max("ts").alias("session_end"),
                 F.count(F.lit(1)).alias("n_events")))
-    ckpt = tempfile.mkdtemp(prefix="fis_ssr_ckpt_")
+    ckpt = str(tmp_path_factory.mktemp("ssr_ckpt"))
     drain_available_now(agg, "t_state_reader", output_mode="complete",
                         checkpoint_dir=ckpt, timeout_s=120)
 
@@ -671,14 +669,13 @@ def test_state_reader_decodes_and_time_travels(spark):
     assert read_state(spark, ckpt).select("partition_id").distinct().count() >= 1
 
 
-def test_state_api_v2_user_profile(spark):
+def test_state_api_v2_user_profile(spark, tmp_path_factory):
     """State API v2 (transformWithStateInPandas): drained per-user
     profile (ValueState counters + MapState type set) equals the batch
     aggregate. ENV-GATED: the v2 driver worker needs google.protobuf,
     which this container does not ship (see stateful_v2.py docstring) —
     skips until the image carries it."""
     pytest.importorskip("google.protobuf")
-    import tempfile
 
     from feast_ibm_spark.streaming import drain_available_now
     from feast_ibm_spark.streaming.stateful_v2 import streaming_user_profile
@@ -690,20 +687,20 @@ def test_state_api_v2_user_profile(spark):
         (2, TS(2024, 1, 1, 10, 30), "purchase", 999),
     ]
     schema = "user_id bigint, ts timestamp, event_type string, cents bigint"
-    d = tempfile.mkdtemp(prefix="fis_twsp_src_")
+    d = str(tmp_path_factory.mktemp("twsp_src"))
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d, mode="overwrite")
     src = spark.readStream.schema(schema).parquet(d).select(
         "user_id", "cents", "event_type")
     out = streaming_user_profile(src)
     drain_available_now(out, "t_twsp", output_mode="update",
-                        checkpoint_dir=tempfile.mkdtemp(prefix="fis_ckpt_"),
+                        checkpoint_dir=str(tmp_path_factory.mktemp("twsp_ckpt")),
                         timeout_s=120)
     got = {(r.user_id): (r.n_events, r.total_cents, r.n_types)
            for r in spark.table("t_twsp").collect()}
     assert got[1] == (3, 400, 2) and got[2] == (1, 999, 1)
 
 
-def test_streaming_interval_join_left_semi_exactly_once(spark):
+def test_streaming_interval_join_left_semi_exactly_once(spark, tmp_path):
     """LEFT SEMI stream-stream interval join (15th drained class):
     a left row with >= 1 match in [its ts, ts + 30 min] emits EXACTLY
     once with only the left side's columns, however many right rows
@@ -713,7 +710,7 @@ def test_streaming_interval_join_left_semi_exactly_once(spark):
 
     from feast_ibm_spark.streaming.interval_join import streaming_interval_join
 
-    d = tempfile.mkdtemp(prefix="fis_semi_")
+    d = str(tmp_path)
     left = spark.createDataFrame(
         [
             (1, TS(2024, 1, 1, 10, 0)),   # 2 matches -> emits once
