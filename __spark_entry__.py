@@ -14,7 +14,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from feast_ibm_spark.queries import DRIVER_QUERIES, GATE_ROWS_ONLY, QUERIES
+from feast_ibm_spark.queries import DRIVER_QUERIES, QUERIES
 from feast_ibm_spark.session import configure_runtime
 
 
@@ -58,9 +58,8 @@ def oracle_sql() -> dict[str, str]:
     # queries stay out of the gate entirely — the rtol ln() queries are
     # represented by hash-stable integer-ingredient *_counts twins and
     # keep their local rtol pins; sketches keep local exact-twin pins.
-    # GATE_ROWS_ONLY is retained (empty) for the export-shape contract.
     return {
         name: qd.oracle
         for name, qd in DRIVER_QUERIES.items()
-        if qd.oracle is not None and name not in GATE_ROWS_ONLY
+        if qd.oracle is not None
     }

@@ -11,7 +11,8 @@ count()-style materialization. Reported per-query time is the MEDIAN of
 the runs — single runs on this box swing ±30-50% with machine load
 (NOTES.md), which made round-over-round deltas undiagnosable; the
 min/max across runs is recorded under "spread" so variance stays
-visible.
+visible, and the median run's build time and Spark counters under
+"layers" (``time_query``).
 """
 
 from __future__ import annotations
@@ -135,11 +136,52 @@ def _calibrate(seconds: float = 1.0) -> int:
     return count
 
 
+def time_query(spark, name: str, sf_dir: str, n_runs: int):
+    """Times ``n_runs`` runs of ``name``, each a build (``qd.fn``) plus a
+    ``count()`` inside its own Spark job group. Returns the sorted run
+    wall times, the row count and the median run's layer record: its
+    build time plus the job group's counters from perfbench/layers.py
+    (jobs, stages, tasks, executor time, shuffle bytes, spill), read
+    from the status store after the timed interval, so no Spark job
+    runs for them. Jobs of a streaming query's micro-batches run in the
+    stream's own job group and are not counted."""
+    from feast_ibm_spark.queries import QUERIES
+    from perfbench.layers import spark_counters
+
+    qd = QUERIES[name]
+    runs = []
+    for i in range(n_runs):
+        if name in _PRE_RUN:
+            _PRE_RUN[name](sf_dir)
+        # Round 12 (measurement honesty, not a speedup): several
+        # operators now persist a reused intermediate INSIDE the
+        # query (PIT spine, curation survivors) — a within-query
+        # win. Spark's CacheManager would silently substitute that
+        # cache into the IDENTICAL plan of the next timed run, so
+        # runs 2..n would skip the recompute and the median would
+        # measure warm-cache behavior rounds 1-11 never had. Drop
+        # all cached data before every timed run so each run
+        # computes from the parquet inputs (cache writes included),
+        # keeping medians comparable round-over-round.
+        spark.catalog.clearCache()
+        group = f"bench-{name}-{i}"
+        spark.sparkContext.setJobGroup(group, f"bench {name} run {i}")
+        t0 = time.time()
+        df = qd.fn(spark, sf_dir)
+        build_s = time.time() - t0
+        # full materialization without driver transfer of payloads
+        n = df.count()
+        wall = time.time() - t0
+        runs.append((wall, {"build_s": build_s, **spark_counters(spark, group)}))
+    runs.sort(key=lambda r: r[0])
+    layer = {k: round(v, 3) for k, v in runs[len(runs) // 2][1].items()}
+    return [wall for wall, _ in runs], n, layer
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     loadavg_start = os.getloadavg()
     calibration_start = _calibrate()
-    from feast_ibm_spark.queries import QUERIES
     from feast_ibm_spark.session import get_spark
 
     spark = get_spark(app_name="feast-ibm-spark-bench")
@@ -191,28 +233,9 @@ def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
+    layers: dict[str, dict[str, float]] = {}
     for name in BENCH_QUERIES:
-        qd = QUERIES[name]
-        runs = []
-        for _ in range(n_runs):
-            if name in _PRE_RUN:
-                _PRE_RUN[name](sf_dir)
-            # Round 12 (measurement honesty, not a speedup): several
-            # operators now persist a reused intermediate INSIDE the
-            # query (PIT spine, curation survivors) — a within-query
-            # win. Spark's CacheManager would silently substitute that
-            # cache into the IDENTICAL plan of the next timed run, so
-            # runs 2..n would skip the recompute and the median would
-            # measure warm-cache behavior rounds 1-11 never had. Drop
-            # all cached data before every timed run so each run
-            # computes from the parquet inputs (cache writes included),
-            # keeping medians comparable round-over-round.
-            spark.catalog.clearCache()
-            t0 = time.time()
-            # full materialization without driver transfer of payloads
-            n = qd.fn(spark, sf_dir).count()
-            runs.append(time.time() - t0)
-        runs.sort()
+        runs, n, layers[name] = time_query(spark, name, sf_dir, n_runs)
         timings[name] = round(runs[len(runs) // 2], 3)
         spread[name] = [round(runs[0], 3), round(runs[-1], 3)]
         print(
@@ -230,9 +253,11 @@ def main() -> None:
     # Whatever happens to the detail line, the machine-readable headline
     # (metric/value/unit/queries/sf) must survive the tail capture.
     detail = {
-        "detail": "spread [min,max] per query + host state; headline on last line",
+        "detail": "spread [min,max] + median-run layers per query + host "
+        "state; headline on last line",
         "runs": n_runs,
         "spread": spread,
+        "layers": layers,
         # host-state context (VERDICT r6 item 7): 1/5/15-min loadavg at
         # start/end + single-thread fixed-work spin counts. Normalize
         # cross-round comparisons by the calibration ratio before

@@ -310,8 +310,8 @@ def duplicated_spans(
     spill-safe like sessionize — measured: a fully-duplicated 32 MB
     document pair completes exactly on an 8 GB heap (549s, worst task
     spills 5.75 GB); the 3 GB/32-thread edge is ~8 MB (93 MB/task fair
-    share). Full table: NOTES.md "ExactSubstr whale document",
-    scripts/exact_substr_whale.py.
+    share). Full table: NOTES.md "ExactSubstr whale document" and
+    "ExactSubstr whale guard — 32 MB datapoint".
 
     Fair-share guard (round 10, VERDICT r9 item 4): when the session's
     per-task fair share (unified pool / task slots) sits BELOW the

@@ -29,7 +29,7 @@ over all strictly cheaper prices`` (the running max).
   running max a window PARTITIONED by bucket. No unpartitioned window
   anywhere; parallelism B-way. Identical output (pinned by the shared
   oracle and a property net). The trade, measured
-  (scripts/skyline_whale.py, all-distinct minimize values, 3g heap):
+  (NOTES.md "Skyline whale datapoint", all-distinct minimize values):
   bucketed pays two extra full-input passes (bounds + bucket maxima),
   so BELOW the whale threshold global_window wins (1M rows: 5.6s vs
   17.4s); at 20M rows the unpartitioned sort is the straggler (worst
@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 # auto-tier switch point: |distinct minimize| above which the bucketed
 # tier's two extra passes beat the unpartitioned window's single-sorted-
-# partition straggler. Measured band (scripts/skyline_whale.py, 3g):
+# partition straggler. Measured band (NOTES.md "Skyline whale datapoint"):
 # global_window wins at 1M distinct (5.6s vs 17.4s), bucketed at 20M
 # (17s vs 23-33s, worst task 3.5s vs 18-26s); 4M sits inside the
 # crossover region with the pit_join-auto style of a deliberately

@@ -1050,15 +1050,6 @@ QUERIES: dict[str, QueryDef] = {
 #     text_token_count
 # --------------------------------------------------------------------------
 
-# In the gate for a ROWS-ONLY row: exported by ``queries()`` but withheld
-# from ``oracle_sql()``. EMPTY since round 9: round 8 proved the driver
-# does NOT perform rows-only checks (oracle withheld => err:"no_oracle",
-# no verification at all), so unhashable queries never take gate slots
-# again. The 4 rtol ln() queries stay local (rtol pin in
-# tests/test_oracle_parity.py) with hash-stable *_counts twins at the
-# gate instead; approximate sketches stay local with exact-twin pins.
-GATE_ROWS_ONLY: frozenset[str] = frozenset()
-
 _DRIVER_GATE_R12 = (
     # (a) the 11 queued r11 registrations (_QUEUED_FOR_R12_GATE:
     # first in line by contract — each carried 3-scale local pins and
@@ -1129,8 +1120,4 @@ DRIVER_QUERIES: dict[str, QueryDef] = {
 assert len(DRIVER_QUERIES) == 50, (
     f"driver gate records at most 50 rows; got {len(DRIVER_QUERIES)} — "
     "rebalance _DRIVER_GATE_R12 when rotating"
-)
-assert GATE_ROWS_ONLY <= set(_DRIVER_GATE_R12), (
-    "GATE_ROWS_ONLY entries must be gate members — they exist to shape "
-    "the oracle_sql() export of the CURRENT gate"
 )

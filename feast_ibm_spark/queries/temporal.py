@@ -160,8 +160,8 @@ def q_range_join_auto_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     set: the bucket width is a physical knob, never a semantic one —
     both the explode factor and the candidate set change, the exact
     containment filter keeps the answer fixed. The A/B against
-    deliberately bad manual widths is measured in
-    scripts/interval_bucket_ab.py."""
+    deliberately bad manual widths is in NOTES.md "Measured artifacts
+    (whale/flood taxonomy additions)"."""
     from ..operators.interval import range_join
 
     epoch = F.lit("1970-01-01")

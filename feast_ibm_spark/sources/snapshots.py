@@ -50,7 +50,7 @@ metadata bytes per commit, with a FULL checkpoint every ``_FULL_EVERY``
 commits bounding any version's resolution to a short manifest walk
 (the Iceberg manifest-list idea reduced to this format's needs;
 measured on a 2,000-commit chain: ~20x less amortized manifest bytes
-per commit, 16x less total metadata — scripts/snapshot_chain_10x.py).
+per commit, 16x less total metadata — NOTES.md "Measured artifacts").
 The read plan stays a plain multi-directory parquet scan (partition
 pruning, pushdown, and column pruning all intact). At 100 TB the same
 design holds; the residual O(segments) cost is the periodic full
@@ -1057,8 +1057,8 @@ def read_snapshot_changes(
     # ONE scan over every added segment, version derived from the
     # segment name via the scanned file's path — a per-version
     # read+union built 500 separate scans whose schema/file-listing
-    # analysis alone cost ~37 s on a 500-commit chain (measured,
-    # scripts/snapshot_chain_10x.py); one multi-dir scan plans in
+    # analysis alone cost ~37 s on a 500-commit chain (measured, NOTES.md
+    # "Snapshot manifest-chain scaling"); one multi-dir scan plans in
     # ~1 s. The name IS the introducing version by construction
     # (_commit_version writes data/seg-{version:06d}); the shared
     # _added_segments walk re-validates that for every added directory,

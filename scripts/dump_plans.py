@@ -149,7 +149,7 @@ SHOWCASE: list[tuple[str, str]] = [
         "is why the SPAN tier (operators/exact_substr.duplicated_spans, the\n"
         "production cut list) replaces the self-join with a per-gram\n"
         "min!=max aggregate and stays LINEAR in the flood (measured:\n"
-        "scripts/exact_substr_flood_10x.py, NOTES 'ExactSubstr flood 10x').",
+        "NOTES 'ExactSubstr flood 10x').",
     ),
     (
         "dedup_exact_substr_cut",
@@ -447,7 +447,7 @@ SHOWCASE: list[tuple[str, str]] = [
         "turns the warehouse's biggest recurring all-to-all into a local\n"
         "merge per bucket. Measured: 0.000 GB shuffle write per query vs\n"
         "0.099 GB for the identical query over raw parquet\n"
-        "(scripts/bucketed_join_ab.py, 20M rows).",
+        "(NOTES 'Bucketed-vs-raw A/B', 20M rows).",
     ),
     (
         "agg_weighted_median",
@@ -467,7 +467,7 @@ SHOWCASE: list[tuple[str, str]] = [
         "Level-synchronous BFS: each round is one equi-join of the\n"
         "CURRENT FRONTIER (not the visited set) against the edge list,\n"
         "one distinct (hash agg, hub burst absorbed map-side — measured\n"
-        "2M-fan-out hub, zero spill, scripts/bfs_hub_10x.py), one\n"
+        "2M-fan-out hub, zero spill, NOTES 'BFS hub datapoint'), one\n"
         "left-anti probe of the visited set, and a localCheckpoint that\n"
         "keeps the unrolled plan tree flat. Work per round is\n"
         "O(frontier-adjacent edges); at 100 TB the cost driver is\n"
@@ -482,7 +482,7 @@ SHOWCASE: list[tuple[str, str]] = [
         "localCheckpoints to keep the unrolled tree flat. Integer weights\n"
         "keep the min-plus algebra exact; per-round cost matches BFS\n"
         "(measured 0.69 s/extra hop over 10M edges,\n"
-        "scripts/bfs_deep_10x.py) — rounds x edge-scan, never skew.",
+        "NOTES 'BFS deep-hops datapoint') — rounds x edge-scan, never skew.",
     ),
     (
         "interval_coverage",

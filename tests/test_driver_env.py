@@ -138,6 +138,32 @@ def test_tempdir_redirect_via_tmpdir_env(
         monkeypatch.setattr(tempfile, "tempdir", None)
 
 
+@pytest.mark.parametrize("name", ["scan_merge_schema", "scan_csv_quarantine"])
+def test_scan_scratch_is_built_once_per_sf(
+    spark, sf_dir, monkeypatch, tmp_path, name
+):
+    """The files these scans read are a function of ``sf_dir``: a second
+    run reuses the first run's directories instead of leaving another
+    copy under the temp root, and returns the same rows."""
+    redirect = tmp_path / "scratch"
+    redirect.mkdir()
+    monkeypatch.setenv("TMPDIR", str(redirect))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    try:
+        from feast_ibm_spark.queries import QUERIES
+
+        results, entries = [], []
+        for _ in range(2):
+            results.append(sorted(QUERIES[name].fn(spark, sf_dir).collect()))
+            entries.append(
+                sorted(e for e in os.listdir(redirect) if e.startswith("fis_"))
+            )
+        assert entries[0] and entries[1] == entries[0], entries
+        assert results[1] == results[0]
+    finally:
+        monkeypatch.setattr(tempfile, "tempdir", None)
+
+
 def test_configure_runtime_matches_get_spark_defaults(spark):
     """Both session paths apply one defaults table: a host session with
     every table key unset gets, from configure_runtime, exactly the values

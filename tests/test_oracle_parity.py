@@ -97,14 +97,10 @@ def test_driver_export_r12_rotation_invariants():
     their first driver hashes and the remaining 39 slots go to the
     stalest-hash refresh pool (the r11 twin of this test retired with
     its gate; history in NOTES.md 'Gate rotation ledger'). Invariants:
-    every slot carries a full oracle; GATE_ROWS_ONLY is empty; all 11
-    queued queries are in the gate; every refresh slot has its last
-    driver hash in r7 exactly (nothing recently-hashed wastes a slot);
-    and the entire r7 pool is taken except the 4 documented
-    same-family-sibling leave-outs."""
-    from feast_ibm_spark.queries import GATE_ROWS_ONLY
-
-    assert GATE_ROWS_ONLY == frozenset()
+    every slot carries a full oracle; all 11 queued queries are in the
+    gate; every refresh slot has its last driver hash in r7 exactly
+    (nothing recently-hashed wastes a slot); and the entire r7 pool is
+    taken except the 4 documented same-family-sibling leave-outs."""
     no_oracle = [n for n, qd in DRIVER_QUERIES.items() if qd.oracle is None]
     assert no_oracle == []
 
@@ -170,7 +166,7 @@ _QUEUED_FOR_R13_GATE: frozenset[str] = frozenset({
     "range_join_auto_bucket",           # data-driven bucket width
                                         # (~p95 sampled interval length);
                                         # A/B vs bad manual widths in
-                                        # scripts/interval_bucket_ab.py;
+                                        # NOTES.md "Measured artifacts";
                                         # 3-scale pins from day one
     "layout_snapshot_compact_consume",  # CDF across a certified
                                         # compaction: fresh + lagging +
@@ -510,23 +506,15 @@ def test_exclusions_partition_correctly():
     assert not set(_RTOL_LOCAL) & set(DRIVER_QUERIES)
 
 
-def test_gate_rows_only_export_shape():
-    """GATE_ROWS_ONLY members are exported by ``queries()`` but withheld
-    from ``oracle_sql()``. The set is EMPTY since round 9 (the driver
-    performs no check at all on oracle-withheld slots), so this now pins
-    that every exported query ships its oracle — the export-shape
-    contract survives should the set ever be repopulated."""
-    from feast_ibm_spark.queries import GATE_ROWS_ONLY
-
+def test_every_exported_query_ships_its_oracle():
+    """``oracle_sql()`` exports an oracle for every query ``queries()``
+    exports: the gate performs no check at all on an oracle-withheld
+    slot, so every gate member carries one."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, root)
     import __spark_entry__ as entry_mod
 
-    q = entry_mod.queries()
-    o = entry_mod.oracle_sql()
-    assert set(GATE_ROWS_ONLY) <= set(q)
-    assert not (set(GATE_ROWS_ONLY) & set(o))
-    assert set(o) == set(q) - set(GATE_ROWS_ONLY)
+    assert set(entry_mod.oracle_sql()) == set(entry_mod.queries())
 
 
 @pytest.mark.sweep
@@ -590,3 +578,33 @@ def test_coverage_generated_index_is_current():
         "COVERAGE.md generated index is stale — run "
         "`python scripts/gen_coverage.py --write`"
     )
+
+
+def test_harness_query_lists_are_registered_once():
+    """bench.py and scripts/sf1_smoke.py select queries by name; a rename
+    must fail here, not as a KeyError partway through a bench run."""
+    import importlib.util
+
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "sf1_smoke", os.path.join(root, "scripts", "sf1_smoke.py")
+    )
+    smoke = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(smoke)
+
+    for names in (bench.BENCH_QUERIES, smoke.SMOKE_QUERIES):
+        assert len(set(names)) == len(names)
+        assert [n for n in names if n not in QUERIES] == []
+
+
+def test_bench_time_query_records_layers(spark, sf_dir):
+    """One timed run yields the median run's layer record: its Spark jobs
+    and a build time inside the run's wall time."""
+    import bench
+
+    runs, n, layer = bench.time_query(spark, "pull_all_time_range", sf_dir, 1)
+    assert n > 0 and len(runs) == 1
+    assert layer["jobs"] >= 1
+    assert 0 <= layer["build_s"] <= runs[0]
