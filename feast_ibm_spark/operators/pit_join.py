@@ -64,7 +64,8 @@ The TTL prefilter rewrite (bound the feature side to
 ``[min_spine_ts - ttl, max_spine_ts]`` before the join, reference
 ``:664-674``; a shared melt arm takes its views' widest range) is kept: Catalyst cannot derive it, and at 100 TB it is the
 difference between scanning a day and scanning a decade. It needs the
-spine's min/max timestamp, computed with one tiny aggregate job.
+spine's min/max timestamp (``SpineFacts``): one tiny aggregate job, or
+none when the caller holds the spine's rows (a pandas spine).
 
 Hot-key skew (measured; pinned by test_plans.py::
 test_pit_strategies_absorb_hot_key_skew): AQE's OptimizeSkewedJoin never
@@ -148,13 +149,54 @@ def _spine_hot_key_max(spine: DataFrame, keys: list[str]) -> int:
     return int(row["m"] or 0)
 
 
+class SpineFacts:
+    """What the as-of join needs to know about its spine: ``lo``/``hi``
+    (min/max spine timestamp, for the TTL prefilter), ``n_rows`` (the key
+    prune and salt gates), ``hot_key_max(keys)`` (the salt gate) and
+    ``distinct(cols)`` (the spine's distinct ``cols`` rows, which every
+    builder melts or joins against).
+
+    This form asks Spark: ``lo``, ``hi`` and ``n_rows`` come from one
+    ``_spine_time_range`` aggregate, run on first use and at most once;
+    ``hot_key_max`` runs ``_spine_hot_key_max``; ``distinct`` is
+    ``spine.select(*cols).distinct()``, planned into the join. A caller
+    that already holds the spine's rows (``store._ensure_spine`` for a
+    pandas spine) passes a subclass that answers from them instead."""
+
+    def __init__(self, spine: DataFrame, ts_col: str):
+        self.spine = spine
+        self.ts_col = ts_col
+
+    @functools.cached_property
+    def _range(self) -> tuple:
+        return _spine_time_range(self.spine, self.ts_col)
+
+    @property
+    def lo(self):
+        return self._range[0]
+
+    @property
+    def hi(self):
+        return self._range[1]
+
+    @property
+    def n_rows(self) -> int:
+        return self._range[2]
+
+    def hot_key_max(self, keys: list[str]) -> int:
+        return _spine_hot_key_max(self.spine, keys)
+
+    def distinct(self, cols: list[str]) -> DataFrame:
+        return self.spine.select(*cols).distinct()
+
+
 def point_in_time_join(
     spine: DataFrame,
     feature_views: list[FeatureViewSpec],
     spine_timestamp_field: str = "event_timestamp",
     full_feature_names: bool = False,
     strategy: str = "auto",
-    time_range: tuple | None = None,
+    facts: SpineFacts | None = None,
     auto_broadcast_rows: int = 5_000_000,
     salt_partition_budget_rows: int | None = 4_000_000,
 ) -> DataFrame:
@@ -194,10 +236,13 @@ def point_in_time_join(
     — and each view then nulls matches outside its own TTL. The salted
     melt stays per view.
 
-    ``time_range`` is the spine's ``(min_ts, max_ts, n_rows)`` as
-    returned by ``_spine_time_range``; callers that already ran that
-    probe (the store facade, which also exposes the range as job
-    metadata) pass it in so the tiny aggregate runs once, not twice.
+    ``facts`` is what the join reads about the spine (``SpineFacts``:
+    ``lo``/``hi``/``n_rows``, ``hot_key_max(keys)``, ``distinct(cols)``).
+    The default, ``SpineFacts(spine, spine_timestamp_field)``, asks Spark
+    for them. The store facade passes the one it built with the spine: for
+    a pandas spine, facts computed from the pandas frame, so the join's
+    preamble runs no Spark job; for any spine, the object its job
+    metadata reads too, so the range aggregate runs at most once.
     """
     if strategy not in (
         "broadcast", "shuffle", "union_window", "union_window_salted", "auto"
@@ -223,7 +268,9 @@ def point_in_time_join(
             f"them with the view name)"
         )
 
-    lo, hi, n_rows = time_range or _spine_time_range(spine, spine_timestamp_field)
+    if facts is None:
+        facts = SpineFacts(spine, spine_timestamp_field)
+    lo, hi, n_rows = facts.lo, facts.hi, facts.n_rows
     small_spine = n_rows <= auto_broadcast_rows
     salted_keys: set[tuple] = set()
     if strategy == "auto":
@@ -268,7 +315,7 @@ def point_in_time_join(
                 salted_keys = {
                     kt
                     for kt in dict.fromkeys(tuple(v.join_keys) for v in feature_views)
-                    if _spine_hot_key_max(spine, list(kt)) > salt_partition_budget_rows
+                    if facts.hot_key_max(list(kt)) > salt_partition_budget_rows
                 }
     # Every builder reads the ORIGINAL spine and returns its winners (one
     # row per distinct spine (keys, ts)); the join-backs happen here.
@@ -281,19 +328,19 @@ def point_in_time_join(
         if strategy == "union_window_salted" or kt in salted_keys:
             winners.append((view.join_keys, _salted_melt_winners(
                 spine, view, spine_timestamp_field, full_feature_names, lo, hi,
-                prune_keys=small_spine,
+                prune_keys=small_spine, facts=facts,
             )))
         elif strategy == "union_window":
             melt_groups.setdefault(kt, []).append(view)
         else:
             winners.append((view.join_keys, _join_winners(
                 spine, view, spine_timestamp_field, full_feature_names, lo, hi,
-                broadcast_spine=(strategy == "broadcast"),
+                broadcast_spine=(strategy == "broadcast"), facts=facts,
             )))
     winners += [
         (views[0].join_keys, _melt_winners(
             spine, views, spine_timestamp_field, full_feature_names, lo, hi,
-            prune_keys=small_spine,
+            prune_keys=small_spine, facts=facts,
         ))
         for views in melt_groups.values()
     ]
@@ -358,6 +405,7 @@ def _join_winners(
     lo,
     hi,
     broadcast_spine: bool,
+    facts: SpineFacts | None = None,
 ) -> DataFrame:
     """As-of winners of one view by range join (``broadcast``/``shuffle``)."""
     feat = _prepared_feature_side([view], lo, hi)
@@ -365,8 +413,8 @@ def _join_winners(
     # Distinct (keys, ts) — the reference's per-view spine dedup CTE
     # (:626-636) — so the candidate join and window run once per unique
     # entity/timestamp, not once per spine row.
-    key_ts = [*view.join_keys, spine_ts]
-    spine_keys = spine.select(*key_ts).distinct()
+    facts = facts or SpineFacts(spine, spine_ts)
+    spine_keys = facts.distinct([*view.join_keys, spine_ts])
     if broadcast_spine:
         spine_keys = F.broadcast(spine_keys)
 
@@ -451,6 +499,7 @@ def _melt(
     lo,
     hi,
     prune_keys: bool,
+    facts: SpineFacts | None = None,
 ) -> DataFrame:
     """The melt both union-window strategies sort, for views on one
     join-key set: one tagged *arm* per distinct source (tag 0, payload
@@ -469,7 +518,9 @@ def _melt(
     knows the spine is broadcast-sized; harmless semantically (rows of
     keys absent from the spine can never match)."""
     keys = arms[0][0].join_keys
-    spine_keys = F.broadcast(spine.select(*keys).distinct())
+    facts = facts or SpineFacts(spine, spine_ts)
+    if prune_keys:
+        spine_keys = F.broadcast(facts.distinct(keys))
     parts = []
     for i, arm in enumerate(arms):
         view = arm[0]
@@ -498,7 +549,7 @@ def _melt(
                 *_arm_features(arm),
             ).alias(f"__p{i}"),
         ))
-    parts.append(spine.select(*keys, spine_ts).distinct().select(
+    parts.append(facts.distinct([*keys, spine_ts]).select(
         *keys, F.col(spine_ts).alias("__ts"), F.lit(1).alias("__tag")
     ))
     return functools.reduce(
@@ -543,6 +594,7 @@ def _melt_winners(
     lo,
     hi,
     prune_keys: bool = False,
+    facts: SpineFacts | None = None,
 ) -> DataFrame:
     """Melt as-of winners of every view on one join-key set: one
     equi-shuffle on the entity keys, one window, no range join; the caller
@@ -556,7 +608,7 @@ def _melt_winners(
     ``<=`` bound. TTL is enforced afterwards, per view, by nulling matches
     whose timestamp is older than ``spine.ts - ttl``."""
     arms = _arms(views)
-    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys)
+    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys, facts)
     w = (
         Window.partitionBy(*views[0].join_keys)
         .orderBy(F.col("__ts").asc(), F.col("__tag").asc())
@@ -583,6 +635,7 @@ def _salted_melt_winners(
     hi,
     salt_bucket_seconds: int = 86400,
     prune_keys: bool = False,
+    facts: SpineFacts | None = None,
 ) -> DataFrame:
     """Melt as-of winners of one view SALTED by time bucket — the hot-key
     scale path.
@@ -610,7 +663,7 @@ def _salted_melt_winners(
     every OTHER key's history before the bucketed shuffle).
     """
     arms = [[view]]
-    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys)
+    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys, facts)
     # NTZ-safe bucketing (round 7, hardened after review): TIMESTAMP
     # casts straight to double (epoch seconds, monotone). TIMESTAMP_NTZ
     # must NOT route through a session-zone cast — a DST spring-forward

@@ -83,12 +83,12 @@ def _partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    ev = _t(spark, sf_dir, "events")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     dest = os.path.join(tempfile.gettempdir(), f"fis_events_by_day_{tag}")
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         (
-            ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+            _t(spark, sf_dir, "events")
+            .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(dest)

@@ -18,10 +18,18 @@ the same files, so oracle comparisons stay exact. The conversion is a
 JVM-side projection inside whole-stage codegen — no UDF, no driver
 round-trip — and the footer inspection is O(1) per table, so this holds
 at 100 TB.
+
+The same footers give the Spark schema (``_footer_schema``): pyspark's
+``from_arrow_type`` per column, nanos columns as ``LongType``, every
+field nullable. Passing it through ``spark.read.schema`` spares each load
+the distributed footer read of Spark's schema inference — one job per
+load — and leaves the plan as it was. Where the files cannot be listed
+locally or the mapping is not certain to agree, the load infers.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from datetime import timezone
 
@@ -29,32 +37,25 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 
-def _first_parquet_file(path: str) -> str | None:
-    if os.path.isfile(path):
-        return path
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            if name.endswith(".parquet"):
-                return os.path.join(path, name)
-    return None
-
-
-def _nano_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as physical INT64 + logical TIMESTAMP(nanoseconds).
+def _nanos_of(schema: pq.ParquetSchema) -> list[str]:
+    """Columns stored as physical INT64 + logical TIMESTAMP(nanoseconds),
+    by path (a nested column's path joins its names with dots).
 
     Checked against the PARQUET schema, not the arrow-inferred one: legacy
     INT96 timestamps (Spark's default output format) come back from
     ``pq.read_schema`` as ``timestamp[ns]`` too, but Spark reads INT96
     natively — only true INT64-nanos columns need the raw-long shim."""
-    f = _first_parquet_file(path)
-    if f is None:
-        return []
-    try:
-        schema = pq.ParquetFile(f).schema
-    except Exception:
-        return []
     out = []
     for i in range(len(schema)):
         col = schema.column(i)
@@ -65,8 +66,158 @@ def _nano_timestamp_columns(path: str) -> list[str]:
             and getattr(lt, "type", None) == "TIMESTAMP"
             and "nanoseconds" in str(lt)
         ):
-            out.append(col.name)
+            out.append(col.path)
     return out
+
+
+# Session settings under which Spark's parquet schema inference reads a
+# footer the way ``_file_schema`` maps it; a session that differs infers.
+_FOOTER_SCHEMA_CONFS = {
+    # from_arrow_type maps a zone-less timestamp to TimestampType only
+    # while Spark does not infer TIMESTAMP_NTZ for it
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+}
+# the schema Spark stores in the files it writes, which its inference
+# prefers over the parquet types (a TIMESTAMP_NTZ column, for one)
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _data_files(path: str) -> list[str] | None:
+    """The files a parquet read of ``path`` scans, when they can be listed
+    here: a local file, or the visible files of a flat local directory
+    (Spark's own rule: names starting with ``_`` or ``.`` are hidden).
+    None for anything else — a URI, a glob, summary files, and
+    directories with subdirectories (hive partitions)."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in sorted(os.scandir(path), key=lambda e: e.name):
+        name = entry.name
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+        ):
+            continue
+        if not entry.is_file():
+            return None
+        files.append(entry.path)
+    return files
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable and no field
+    metadata — what Spark makes of any schema it reads from files."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _arrow_type_maps(t: pa.DataType) -> bool:
+    """Whether Spark reads a column of arrow type ``t`` as pyspark's
+    ``from_arrow_type`` maps it. Durations, times, unsigned and null
+    columns are stored as plain integers that Spark reads as such."""
+    if pa.types.is_dictionary(t):
+        return _arrow_type_maps(t.value_type)
+    if pa.types.is_struct(t):
+        return all(_arrow_type_maps(f.type) for f in t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return _arrow_type_maps(t.value_type)
+    if pa.types.is_map(t):
+        return _arrow_type_maps(t.key_type) and _arrow_type_maps(t.item_type)
+    if pa.types.is_decimal(t):
+        return t.precision <= 38
+    return (
+        pa.types.is_boolean(t)
+        or pa.types.is_signed_integer(t)
+        or pa.types.is_float32(t)
+        or pa.types.is_float64(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+        or pa.types.is_fixed_size_binary(t)
+        or pa.types.is_date32(t)
+        or pa.types.is_timestamp(t)
+    )
+
+
+def _file_schema(f: str) -> tuple[StructType | None, list[str]] | None:
+    """(Spark schema, nanos columns) of one parquet file from its footer;
+    the schema is None when a column does not map. None when the footer
+    cannot be read."""
+    try:
+        meta = pq.read_metadata(f)
+    except Exception:
+        return None
+    arrow = meta.schema.to_arrow_schema()
+    paths = _nanos_of(meta.schema)
+    # a nested nanos leaf stays a raw bigint, which from_arrow_type
+    # would not say; only top-level ones are converted
+    nanos = [c for c in paths if c in arrow.names]
+    if len(nanos) < len(paths) or not all(
+        _arrow_type_maps(field.type) for field in arrow
+    ):
+        return None, nanos
+    try:
+        schema = _as_nullable(
+            StructType(
+                [
+                    StructField(field.name, LongType())
+                    if field.name in nanos
+                    else StructField(field.name, from_arrow_type(field.type))
+                    for field in arrow
+                ]
+            )
+        )
+        stored = (meta.metadata or {}).get(_SPARK_ROW_SCHEMA)
+        if stored is not None and schema != _as_nullable(
+            StructType.fromJson(json.loads(stored))
+        ):
+            return None, nanos
+    except Exception:  # a type this pyspark cannot map or parse
+        return None, nanos
+    return schema, nanos
+
+
+def _footer_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType | None, list[str]]:
+    """(Spark schema, nanos columns) of the parquet table at ``path``,
+    from the footers alone — the schema Spark's inference job would
+    return, without the job.
+
+    The schema is None, and the caller infers, when the files cannot be
+    listed here (``_data_files``), a type does not map, the files'
+    footers disagree, or the session reads parquet differently from the
+    mapping (``_FOOTER_SCHEMA_CONFS``). Nothing is cached: each load
+    re-reads the footers, so a rewritten table is seen as it is now."""
+    files = _data_files(path)
+    first = _file_schema(files[0]) if files else None
+    if first is None:
+        return None, []
+    schema, nanos = first
+    if schema is not None and (
+        any(spark.conf.get(k) != v for k, v in _FOOTER_SCHEMA_CONFS.items())
+        or any(_file_schema(f) != first for f in files[1:])
+    ):
+        schema = None
+    return schema, nanos
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -75,11 +226,13 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     Nanos columns arrive as raw ``bigint`` under the session's
     ``nanosAsLong`` default and are converted back to timestamps here;
     a plain ``spark.read.parquet`` of the same file keeps them raw.
+    The schema comes from the footers when ``_footer_schema`` can derive
+    it, which spares the load Spark's schema inference job.
     """
-    nanos = _nano_timestamp_columns(path)
+    schema, nanos = _footer_schema(spark, path)
+    raw = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if not nanos:
-        return spark.read.parquet(path)
-    raw = spark.read.parquet(path)
+        return raw
     df = _convert_nanos(raw, nanos)
     # stash the pre-conversion frame so filter_ts_range can push range
     # predicates down to the parquet scan in raw-int64 space
@@ -192,28 +345,27 @@ def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
     """``spark.readStream.parquet`` with the same TIMESTAMP(NANOS) shim as
     :func:`read_parquet`.
 
-    ``readStream`` needs an explicit schema; it is taken from a batch read
-    under the ``nanosAsLong`` conf (footer-only, no data scan), so nanos
-    columns arrive as raw INT64 and are projected back to microsecond
-    timestamps exactly like the batch path — the streaming and batch
-    reads of one table therefore see bit-identical timestamps, which is
-    what lets a deterministic streaming query share its batch twin's
-    oracle.
+    ``readStream`` needs an explicit schema; it is the footer-derived
+    one (``_footer_schema``), or a batch read's inferred one where the
+    footers cannot be mapped, under the ``nanosAsLong`` conf either way,
+    so nanos columns arrive as raw INT64 and are projected back to
+    microsecond timestamps exactly like the batch path — the streaming
+    and batch reads of one table therefore see bit-identical timestamps,
+    which is what lets a deterministic streaming query share its batch
+    twin's oracle.
     """
-    nanos = _nano_timestamp_columns(path)
-    def _stream(schema) -> DataFrame:
-        # FileStreamSource requires a DIRECTORY basePath; a single-file
-        # table is streamed as its parent dir + a glob for just that file
-        reader = spark.readStream.schema(schema)
-        if os.path.isfile(path):
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            return reader.parquet(os.path.dirname(path))
-        return reader.parquet(path)
-
-    if not nanos:
-        return _stream(spark.read.parquet(path).schema)
-    raw = _stream(spark.read.parquet(path).schema)
-    return _convert_nanos(raw, nanos)
+    schema, nanos = _footer_schema(spark, path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    # FileStreamSource requires a DIRECTORY basePath; a single-file
+    # table is streamed as its parent dir + a glob for just that file
+    reader = spark.readStream.schema(schema)
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        raw = reader.parquet(os.path.dirname(path))
+    else:
+        raw = reader.parquet(path)
+    return _convert_nanos(raw, nanos) if nanos else raw
 
 
 def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -12,11 +12,13 @@ from __future__ import annotations
 import functools
 from datetime import datetime
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
-from .operators.pit_join import FeatureViewSpec, _spine_time_range, point_in_time_join
+from .operators.pit_join import FeatureViewSpec, SpineFacts, point_in_time_join
 from .operators.pull_all import time_range_scan
 from .operators.pull_latest import latest_per_key
 from .retrieval import RetrievalMetadata, SparkRetrievalJob
@@ -25,28 +27,97 @@ from .sources.data_source import SparkDataSource
 
 def _ensure_spine(
     spark: SparkSession, entity_df, timestamp_field: str | None = None
-) -> DataFrame:
+) -> tuple[DataFrame, SpineFacts]:
     """Accept a pandas DataFrame (the reference's only supported type,
     ``:360``; the SQL-string variant raised NotImplementedError at
     ``:552-555``) or a Spark DataFrame / SQL string — both lifted here.
+    Returns the Spark spine and its ``SpineFacts``, the spine facts the
+    as-of join and the job metadata read.
 
     Only the event-timestamp column is normalized with
     ``pd.to_datetime(utc=True)``, exactly like the reference
     (``_get_entity_df_event_timestamp_range``, ``:584-585``) — entity
     join keys are never touched, so string keys that happen to parse as
-    dates ("1001", "20240101") survive as strings.
+    dates ("1001", "20240101") survive as strings. The column is also
+    floored to microseconds, Spark's timestamp precision, before the
+    frame goes to Spark: the Spark spine and the pandas frame then hold
+    the same instants, and the facts come from the pandas frame
+    (``_PandasSpineFacts``) with no Spark job, as the reference computes
+    its range in pandas. A Spark DataFrame or SQL spine, or a timestamp
+    column that is not a pandas datetime, gets the Spark-probed
+    ``SpineFacts``.
     """
-    if isinstance(entity_df, DataFrame):
-        return entity_df
     if isinstance(entity_df, pd.DataFrame):
         df = entity_df.copy()
         ts_col = timestamp_field or _infer_event_timestamp_col(list(df.columns))
         if ts_col in df.columns and df[ts_col].dtype == object:
             df[ts_col] = pd.to_datetime(df[ts_col], utc=True).dt.tz_localize(None)
-        return spark.createDataFrame(df)
-    if isinstance(entity_df, str):
-        return spark.sql(entity_df)
-    raise TypeError(f"unsupported entity_df type: {type(entity_df)}")
+        in_pandas = ts_col in df.columns and _is_numpy_datetime(df[ts_col].dtype)
+        if in_pandas:
+            # floored in UTC: a zone's wall clock can be ambiguous
+            ts = df[ts_col]
+            if isinstance(ts.dtype, pd.DatetimeTZDtype):
+                ts = ts.dt.tz_convert("UTC")
+            df[ts_col] = ts.dt.floor("us")
+        spine = spark.createDataFrame(df)
+        if in_pandas:
+            return spine, _PandasSpineFacts(spine, ts_col, df)
+    elif isinstance(entity_df, DataFrame):
+        spine = entity_df
+    elif isinstance(entity_df, str):
+        spine = spark.sql(entity_df)
+    else:
+        raise TypeError(f"unsupported entity_df type: {type(entity_df)}")
+    ts_col = timestamp_field or _infer_event_timestamp_col(spine.columns)
+    return spine, SpineFacts(spine, ts_col)
+
+
+def _is_numpy_datetime(dtype) -> bool:
+    return isinstance(dtype, pd.DatetimeTZDtype) or (
+        isinstance(dtype, np.dtype) and dtype.kind == "M"
+    )
+
+
+class _PandasSpineFacts(SpineFacts):
+    """``SpineFacts`` of a spine built from a pandas frame, computed from
+    that frame. Spark stores a zone-less pandas timestamp as a wall clock
+    in the session time zone (pyspark's
+    ``_check_series_convert_timestamps_internal``) and hands one back
+    through ``DataType.fromInternal``; ``lo``/``hi`` take both steps, so
+    they equal what the Spark-probed form collects. ``distinct`` ships the
+    deduplicated pandas rows under the spine's own column types."""
+
+    def __init__(self, spine: DataFrame, ts_col: str, pdf: pd.DataFrame):
+        super().__init__(spine, ts_col)
+        self.pdf = pdf
+
+    @functools.cached_property
+    def _range(self) -> tuple:
+        ts = self.pdf[self.ts_col]
+        ts_type = self.spine.schema[self.ts_col].dataType
+        if isinstance(ts_type, TimestampType) and not isinstance(
+            ts.dtype, pd.DatetimeTZDtype
+        ):
+            zone = self.spine.sparkSession.conf.get("spark.sql.session.timeZone")
+            ts = ts.dt.tz_localize(zone, ambiguous=False)
+
+        def internal(t):
+            return None if pd.isna(t) else ts_type.fromInternal(t.value // 1000)
+
+        return internal(ts.min()), internal(ts.max()), len(self.pdf)
+
+    def hot_key_max(self, keys: list[str]) -> int:
+        if self.pdf.empty:
+            return 0
+        return int(
+            self.pdf.groupby(keys, dropna=False, observed=True, sort=False).size().max()
+        )
+
+    def distinct(self, cols: list[str]) -> DataFrame:
+        schema = StructType([self.spine.schema[c] for c in cols])
+        return self.spine.sparkSession.createDataFrame(
+            self.pdf[cols].drop_duplicates(), schema=schema
+        )
 
 
 def _infer_event_timestamp_col(columns: list[str]) -> str:
@@ -95,8 +166,9 @@ class SparkOfflineStore:
         melt, measured fastest at every spine shape incl. 50%-hot keys
         (NOTES.md "PIT strategy choice"); the explicit strategies remain
         for callers with known shapes."""
-        spine = _ensure_spine(spark, entity_df, timestamp_field=spine_timestamp_field)
-        ts_col = spine_timestamp_field or _infer_event_timestamp_col(spine.columns)
+        spine, facts = _ensure_spine(
+            spark, entity_df, timestamp_field=spine_timestamp_field
+        )
 
         # Registry join-key validation (reference :386-392): every view's
         # join keys must exist on the spine.
@@ -113,27 +185,25 @@ class SparkOfflineStore:
         ]
         keys = sorted({k for v in feature_views for k in v.join_keys})
 
-        # The spine (min, max, n_rows) probe feeds BOTH the job metadata and
-        # the PIT join's TTL prefilter and strategy choice. It runs lazily
-        # (construction stays free of Spark actions — the reference's
-        # laziness contract, :313-348) and at most once, shared between the
-        # two consumers.
-        spine_range = functools.cache(lambda: _spine_time_range(spine, ts_col))
-
+        # The spine facts feed BOTH the job metadata and the PIT join's TTL
+        # prefilter and strategy choice, from one shared object: free for a
+        # pandas spine, else one lazy aggregate (construction stays free of
+        # Spark actions — the reference's laziness contract, :313-348) run
+        # at most once.
         def evaluate() -> DataFrame:
             return point_in_time_join(
                 spine,
                 feature_views,
-                spine_timestamp_field=ts_col,
+                spine_timestamp_field=facts.ts_col,
                 full_feature_names=full_feature_names,
                 strategy=strategy,
-                time_range=spine_range(),
+                facts=facts,
             )
 
         meta = RetrievalMetadata(
             features=feature_names,
             keys=keys,
-            timestamp_range_resolver=lambda: spine_range()[:2],
+            timestamp_range_resolver=lambda: (facts.lo, facts.hi),
         )
         return SparkRetrievalJob(
             evaluate, metadata=meta, full_feature_names=full_feature_names

@@ -656,11 +656,10 @@ def test_materialize_failed_write_raises_without_blocking(spark, tmp_path):
     assert spark.read.parquet(dest).count() == 1
 
 
-def test_materialize_runs_three_jobs_and_caches_nothing(spark, tmp_path):
-    """One materialize increment is three Spark jobs: the source schema
-    read, the latest-per-key shuffle map stage and the write, which also
-    carries the row count. No re-read of the output counts it and nothing
-    is left in the cache."""
+def test_materialize_runs_two_jobs_and_caches_nothing(spark, tmp_path):
+    """One materialize increment is two Spark jobs: the latest-per-key
+    shuffle map stage and the write, which also carries the row count. No
+    re-read of the output counts it and nothing is left in the cache."""
     from datetime import datetime as TS
 
     from feast_ibm_spark.sources.data_source import SparkDataSource
@@ -687,7 +686,7 @@ def test_materialize_runs_three_jobs_and_caches_nothing(spark, tmp_path):
             )
             assert n == 2
             sc._jsc.sc().listenerBus().waitUntilEmpty()
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -1508,3 +1507,143 @@ if _HAS_HYPOTHESIS:
             ).collect()
         }
         assert got == want
+
+
+# --- spine facts from the pandas frame ---------------------------------------
+
+
+def _spine_fact_cases():
+    import numpy as np
+    import pandas as pd
+
+    base = pd.to_datetime(
+        ["2024-01-03 10:00:00", "2024-01-01 08:30:00", "2024-01-02 23:59:59.5"],
+        format="ISO8601",
+    )
+    return {
+        "naive": pd.DataFrame({"user_id": [1, 2, 1], "event_timestamp": base}),
+        "aware_non_utc": pd.DataFrame(
+            {
+                "user_id": [1, 2, 1],
+                "event_timestamp": base.tz_localize("America/New_York"),
+            }
+        ),
+        "object_offsets": pd.DataFrame(
+            {
+                "user_id": [1, 2, 1],
+                "event_timestamp": [
+                    "2024-01-03T10:00:00.000000+02:00",
+                    "2024-01-01T08:30:00.000000-05:00",
+                    "2024-01-02T23:59:59.500000+00:00",
+                ],
+            }
+        ),
+        "nat_rows": pd.DataFrame(
+            {"user_id": [1, 2, 3], "event_timestamp": [base[0], pd.NaT, base[2]]}
+        ),
+        "duplicate_key_ts": pd.DataFrame(
+            {
+                "user_id": [1, 1, 1, 2],
+                "event_timestamp": [base[0], base[0], base[1], base[0]],
+                "label": [0.1, 0.2, 0.3, 0.4],
+            }
+        ),
+        "sub_micros": pd.DataFrame(
+            {
+                "user_id": [1, 2, 1],
+                "event_timestamp": pd.to_datetime(
+                    [
+                        "2024-01-01 00:00:00.000001999",
+                        "2024-01-02 00:00:00.000000001",
+                        "2024-01-01 00:00:00.000001001",
+                    ]
+                ),
+            }
+        ),
+        "null_keys": pd.DataFrame(
+            {
+                "user_id": np.array([1.0, np.nan, np.nan, 2.0]),
+                "event_timestamp": [base[0], base[1], base[1], base[2]],
+            }
+        ),
+    }
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_pandas_spine_facts_match_spark_probe(spark):
+    """For every pandas spine shape, the facts ``_ensure_spine`` computes
+    in pandas equal the Spark-probed facts of the spine it built: range,
+    row count, hot-key max, and the distinct rows and types of every
+    column set the builders ask for."""
+    from feast_ibm_spark.operators.pit_join import SpineFacts
+    from feast_ibm_spark.store import _PandasSpineFacts, _ensure_spine
+
+    for name, pdf in _spine_fact_cases().items():
+        spine, facts = _ensure_spine(spark, pdf)
+        assert isinstance(facts, _PandasSpineFacts), name
+        probed = SpineFacts(spine, "event_timestamp")
+        assert (facts.lo, facts.hi, facts.n_rows) == (
+            probed.lo, probed.hi, probed.n_rows
+        ), name
+        assert facts.hot_key_max(["user_id"]) == probed.hot_key_max(["user_id"]), name
+        for cols in (["user_id"], ["user_id", "event_timestamp"]):
+            ours, theirs = facts.distinct(cols), probed.distinct(cols)
+            assert ours.schema == theirs.schema, name
+            assert _sorted_rows(ours) == _sorted_rows(theirs), name
+
+
+def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(spark):
+    """``get_historical_features`` gives hash-identical results for a
+    pandas spine and for the same spine passed as a Spark DataFrame; for
+    the pandas spine, building the job, reading its metadata and planning
+    the join run no Spark job."""
+    import hashlib
+    import uuid
+
+    from feast_ibm_spark.store import SparkOfflineStore, _ensure_spine
+
+    feats = spark.createDataFrame(
+        [
+            (1, TS(2024, 1, 1, 0), 1.0),
+            (1, TS(2024, 1, 2, 12), 2.0),
+            (2, TS(2024, 1, 1, 6), 3.0),
+            (2, TS(2024, 1, 3, 9), 4.0),
+        ],
+        "user_id bigint, ts timestamp, value double",
+    )
+    views = [
+        FeatureViewSpec("v", feats, ["user_id"], ["value"], "ts"),
+        FeatureViewSpec(
+            "ttl", feats, ["user_id"], ["value"], "ts", ttl_seconds=86400
+        ),
+    ]
+    sc = spark.sparkContext
+    for name, pdf in _spine_fact_cases().items():
+        if pdf["user_id"].isna().any():
+            continue  # a float key column: the bigint feature keys differ in type
+        group = f"fis_spine_facts_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pandas spine preamble")
+        try:
+            job = SparkOfflineStore.get_historical_features(
+                spark, pdf, views, full_feature_names=True
+            )
+            lo = job.metadata.min_event_timestamp
+            out = job.to_spark_df()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        spark_spine, _ = _ensure_spine(spark, pdf)
+        twin = SparkOfflineStore.get_historical_features(
+            spark, spark_spine, views, full_feature_names=True
+        )
+        assert lo == twin.metadata.min_event_timestamp, name
+
+        def digest(df):
+            return hashlib.sha256(repr(_sorted_rows(df)).encode()).hexdigest()
+
+        assert digest(out) == digest(twin.to_spark_df()), name

@@ -478,6 +478,204 @@ def test_filter_ts_range_ntz_sentinel_bounds_outside_pandas_range(spark):
     assert sorted(r.i for r in half.collect()) == [0]
 
 
+# -- footer-derived schema ---------------------------------------------------
+
+
+def _run_counting_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, read through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"fis_footer_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "footer schema job count")
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _assert_footer_schema_parity(spark, path):
+    """The footer-derived schema equals Spark's inferred one, and a load
+    through ``read_parquet`` runs no job."""
+    from feast_ibm_spark.sources.reader import (
+        _convert_nanos,
+        _footer_schema,
+        read_parquet,
+    )
+
+    schema, nanos = _footer_schema(spark, path)
+    raw = spark.read.parquet(path)
+    assert schema is not None, path
+    assert schema == raw.schema, path
+    df, jobs = _run_counting_jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0, path
+    assert df.schema == _convert_nanos(raw, nanos).schema, path
+    return nanos
+
+
+def test_footer_schema_matches_inference_on_testdata(spark, sf_dir):
+    """Every table of every scale factor next to the test scale factor."""
+    import glob
+    import os
+
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "*", "*.parquet")))
+    assert paths
+    for p in paths:
+        _assert_footer_schema_parity(spark, p)
+
+
+def test_footer_schema_matches_inference_on_fixtures(spark, tmp_path):
+    """pandas INT64 nanos (raw and converted), Spark-written INT96,
+    decimal/date/array<struct>/map columns from pyarrow and from Spark,
+    and a pandas categorical (dictionary-encoded) column."""
+    import decimal
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos_path = str(tmp_path / "nanos.parquet")
+    pd.DataFrame(
+        {
+            "k": [1, 2],
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00:00.123456789", "2024-01-02 00:00:00.000000001"]
+            ),
+            "tz": pd.to_datetime(["2024-01-01", "2024-01-02"]).tz_localize(
+                "America/New_York"
+            ),
+        }
+    ).to_parquet(nanos_path)
+    assert _assert_footer_schema_parity(spark, nanos_path) == ["ts", "tz"]
+
+    int96_path = str(tmp_path / "int96")
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        spark.sql(
+            "SELECT 1 AS k, timestamp'2024-01-01 00:00:00.123456' AS ts"
+        ).write.parquet(int96_path)
+    finally:
+        spark.conf.set(key, prev)
+    assert pq.read_metadata(
+        next(str(p) for p in tmp_path.joinpath("int96").glob("*.parquet"))
+    ).schema.column(1).physical_type == "INT96"
+    _assert_footer_schema_parity(spark, int96_path)
+
+    nested = pa.table(
+        {
+            "dec": pa.array([decimal.Decimal("1.25"), None], type=pa.decimal128(10, 2)),
+            "big": pa.array([decimal.Decimal("1"), None], type=pa.decimal128(30, 3)),
+            "d": pa.array([19723, None], type=pa.date32()),
+            "arr": pa.array(
+                [[{"a": 1, "b": "x"}], None],
+                type=pa.list_(pa.struct([("a", pa.int32()), ("b", pa.string())])),
+            ),
+            "m": pa.array([[("a", 1)], None], type=pa.map_(pa.string(), pa.int64())),
+            "i8": pa.array([1, None], type=pa.int8()),
+            "f": pa.array([1.5, None], type=pa.float32()),
+            "bin": pa.array([b"x", None], type=pa.binary()),
+        }
+    )
+    nested_path = str(tmp_path / "nested.parquet")
+    pq.write_table(nested, nested_path)
+    _assert_footer_schema_parity(spark, nested_path)
+
+    spark_path = str(tmp_path / "spark_nested")
+    spark.sql(
+        "SELECT CAST(1.25 AS DECIMAL(10,2)) dec, CAST('2024-01-01' AS DATE) d, "
+        "array(named_struct('a', 1, 'b', 'x')) arr, map('a', 1) m, "
+        "CAST(1 AS TINYINT) b, CAST(1 AS SMALLINT) s, CAST('x' AS CHAR(3)) ch, "
+        "timestamp'2024-01-01 00:00:00' ts"
+    ).write.parquet(spark_path)
+    _assert_footer_schema_parity(spark, spark_path)
+
+    cat_path = str(tmp_path / "categorical.parquet")
+    pd.DataFrame({"c": pd.Categorical(["a", "b", "a"]), "v": [1, 2, 3]}).to_parquet(
+        cat_path
+    )
+    assert pa.types.is_dictionary(pq.read_schema(cat_path).field("c").type)
+    _assert_footer_schema_parity(spark, cat_path)
+
+
+def test_footer_schema_falls_back_to_inference(spark, tmp_path):
+    """Each case the footer mapping is not sure of infers the schema: a
+    URI, a hive-partitioned directory, footers that disagree, a type that
+    does not map, a Spark-written TIMESTAMP_NTZ column, and a session that
+    infers TIMESTAMP_NTZ. Each load runs its inference job and gets the
+    schema Spark infers."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.sources.reader import _footer_schema, read_parquet
+
+    flat = str(tmp_path / "flat.parquet")
+    pd.DataFrame({"k": [1, 2], "v": [1.0, 2.0]}).to_parquet(flat)
+    assert _footer_schema(spark, flat)[0] is not None
+
+    hive = str(tmp_path / "hive")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "k bigint, day string"
+    ).write.partitionBy("day").parquet(hive)
+
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    pq.write_table(pa.table({"k": [1]}), str(mixed / "a.parquet"))
+    pq.write_table(pa.table({"k": [2], "extra": ["x"]}), str(mixed / "b.parquet"))
+
+    unmapped = str(tmp_path / "unsigned.parquet")
+    pq.write_table(pa.table({"u": pa.array([1, 2], type=pa.uint32())}), unmapped)
+
+    ntz = str(tmp_path / "ntz")
+    spark.sql("SELECT timestamp_ntz'2024-01-01 00:00:00' t").write.parquet(ntz)
+
+    def assert_infers(path):
+        assert _footer_schema(spark, path)[0] is None, path
+        df, jobs = _run_counting_jobs(spark, lambda: read_parquet(spark, path))
+        assert jobs >= 1, path
+        assert df.schema == spark.read.parquet(path).schema, path
+
+    for path in ("file://" + flat, hive, str(mixed), unmapped, ntz):
+        assert_infers(path)
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert_infers(flat)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stream_reader_takes_the_footer_schema(spark, tmp_path):
+    """``read_parquet_stream`` builds its stream from the footer schema:
+    no inference job, and the batch read's schema, nanos conversion
+    included."""
+    import pandas as pd
+
+    from feast_ibm_spark.sources.reader import read_parquet, read_parquet_stream
+
+    p = str(tmp_path / "events.parquet")
+    pd.DataFrame(
+        {
+            "k": [1, 2],
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00:00.000000001", "2024-01-02 00:00:00.000000000"]
+            ),
+        }
+    ).to_parquet(p)
+    stream, jobs = _run_counting_jobs(spark, lambda: read_parquet_stream(spark, p))
+    assert jobs == 0
+    assert stream.isStreaming
+    assert stream.schema == read_parquet(spark, p).schema
+
+
 def test_snapshot_manifest_semantics(spark, tmp_path):
     """sources/snapshots.py contract: numbered versions over immutable
     segments; append creates a NEW version while every old version
