@@ -25,7 +25,11 @@ same spine-preservation contract as the PIT join (reference ``:765-778``).
 
 Physical plan (same scale playbook as the PIT join): the right side is
 prefiltered to ``[min(left.ts) - t, max(left.ts) + t]`` via
-``filter_ts_range`` so the bound reaches the parquet scan; the deduped
+``filter_ts_range`` so the bound reaches the parquet scan. The bounds
+widen outward to whole hours (``prefilter=True``): codegen inlines them
+as literals into the compiled scan, and whole-hour literals let joins
+whose bounds share their hours reuse the compiled classes. The candidate
+join's own range condition keeps the result exact. The deduped
 ``(keys, ts)`` left side is hint-broadcast (strategy ``broadcast``) so the
 candidate join is a BroadcastHashJoin on the keys with the range predicate
 applied post-join, followed by ONE rn=1 window — Spark 4 plants a
@@ -99,7 +103,7 @@ def asof_join(
             r_lo, r_hi = lo, (hi + tol if tolerance_seconds else None)
         else:  # nearest (tolerance required above)
             r_lo, r_hi = lo - tol, hi + tol
-    r = filter_ts_range(right, right_ts, r_lo, r_hi)
+    r = filter_ts_range(right, right_ts, r_lo, r_hi, prefilter=True)
 
     keep = list(dict.fromkeys(
         [*on, right_ts, *([tiebreak] if tiebreak else []), *right_columns]

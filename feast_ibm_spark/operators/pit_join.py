@@ -62,10 +62,20 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
 
 The TTL prefilter rewrite (bound the feature side to
 ``[min_spine_ts - ttl, max_spine_ts]`` before the join, reference
-``:664-674``; a shared melt arm takes its views' widest range) is kept: Catalyst cannot derive it, and at 100 TB it is the
-difference between scanning a day and scanning a decade. It needs the
-spine's min/max timestamp (``SpineFacts``): one tiny aggregate job, or
-none when the caller holds the spine's rows (a pandas spine).
+``:664-674``; a shared melt arm takes its views' widest range) is kept:
+Catalyst cannot derive it, and at 100 TB it is the difference between
+scanning a day and scanning a decade. It needs the spine's min/max
+timestamp (``SpineFacts``): one tiny aggregate job, or none when the
+caller holds the spine's rows (a pandas spine). The bounds widen outward
+to whole hours of the feature column's time space (floor the lower,
+ceil the upper; ``filter_ts_range(prefilter=True)``). Whole-stage codegen
+inlines the bound literals into the generated scan code and Spark caches
+compiled classes by their source, so exact bounds made every spine with
+a new maximum compile its scan stage again; whole-hour bounds let every
+retrieval in the same hours reuse the compiled classes. The widening
+cannot change a result: a feature row after ``max_spine_ts`` sorts after
+every spine row (melt) or fails ``feature.ts <= spine.ts`` (range join),
+and one before ``min_spine_ts - ttl`` fails every view's TTL check.
 
 Hot-key skew (measured; pinned by test_plans.py::
 test_pit_strategies_absorb_hot_key_skew): AQE's OptimizeSkewedJoin never
@@ -365,7 +375,8 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
     only when no view in the arm has TTL 0. The widest view's range is
     exact for every view because each one post-checks its own TTL. The
     range predicate is routed through filter_ts_range so it reaches the
-    parquet scan even on nanos-timestamp sources."""
+    parquet scan even on nanos-timestamp sources, and widens there to
+    whole hours (``prefilter=True``, see the module docstring)."""
     import datetime as _dt
 
     from ..sources.reader import filter_ts_range
@@ -387,7 +398,7 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
             feat = feat.filter(dpc <= str(hi)[:10])
         if lo_bound is not None:
             feat = feat.filter(dpc >= str(lo_bound)[:10])
-    feat = filter_ts_range(feat, view.timestamp_field, lo_bound, hi)
+    feat = filter_ts_range(feat, view.timestamp_field, lo_bound, hi, prefilter=True)
     cols = [
         *view.join_keys,
         view.timestamp_field,

@@ -31,8 +31,9 @@ from __future__ import annotations
 
 import json
 import os
-from datetime import timezone
+from datetime import datetime, timedelta, timezone
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +46,8 @@ from pyspark.sql.types import (
     MapType,
     StructField,
     StructType,
+    TimestampNTZType,
+    TimestampType,
 )
 
 
@@ -246,8 +249,86 @@ def _convert_nanos(raw: DataFrame, nanos) -> DataFrame:
     )
 
 
-def filter_ts_range(df: DataFrame, ts_col: str, lo, hi) -> DataFrame:
+_HOUR_US = 3_600_000_000
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
+_MIN_US = (datetime.min - _EPOCH) // _US
+_MAX_US = (datetime.max - _EPOCH) // _US
+_INT64 = (-(2**63), 2**63 - 1)
+
+
+def _bound_us(spark: SparkSession, x, ntz: bool) -> int:
+    """A time bound as the column's internal microseconds.
+
+    ``TimestampType`` (and the nanos shim's converted column): epoch µs.
+    A datetime converts exactly as ``F.lit`` (and ``createDataFrame``)
+    convert it — pyspark's ``TimestampType().toInternal``, which reads a
+    naive datetime in the driver's zone (``SpineFacts`` hands naive
+    datetimes back through ``fromInternal``, the inverse), except that a
+    naive datetime with ``fold=1`` keeps its fold. Any other bound (an
+    ISO string, a date) parses through pandas; without an offset it
+    reads as a wall clock in the session zone, as Spark's cast does.
+
+    ``TIMESTAMP_NTZ``: zone-free wall-clock µs. An aware bound takes its
+    UTC wall clock (NTZ values are UTC wall clocks by this engine's
+    convention); a naive one is taken as is. Python datetimes cover
+    years 1-9999, so far-past/far-future sentinel bounds convert too."""
+    t, text = x, not isinstance(x, datetime)
+    if text:
+        try:
+            t = pd.Timestamp(x).to_pydatetime(warn=False)
+        except (pd.errors.OutOfBoundsDatetime, OverflowError):
+            t = datetime.fromisoformat(x)
+    if ntz:
+        if t.tzinfo is not None:
+            t = t.astimezone(timezone.utc).replace(tzinfo=None)
+        return (t - _EPOCH) // _US
+    if text and t.tzinfo is None:
+        # java.time, as Spark's cast: a wall clock in a DST gap moves
+        # forward by the gap, an overlapped one takes the earlier offset
+        jt = spark._jvm.java.time
+        instant = (
+            jt.LocalDateTime.of(
+                t.year, t.month, t.day, t.hour, t.minute, t.second,
+                t.microsecond * 1000,
+            )
+            .atZone(jt.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+            .toInstant()
+        )
+        return instant.getEpochSecond() * 1_000_000 + instant.getNano() // 1000
+    if t.tzinfo is None and t.fold:
+        # fromInternal marks the second pass of a repeated wall-clock
+        # hour with fold=1; toInternal (time.mktime) drops it and lands
+        # an hour early
+        return int(t.replace(microsecond=0).timestamp()) * 1_000_000 + t.microsecond
+    return TimestampType().toInternal(t)
+
+
+def _widen_to_hour(us: int, up: bool) -> int:
+    """``us`` floored (``up=False``) or ceiled to a whole hour of its own
+    time space; kept as is where the rounded value leaves the datetime
+    range."""
+    r = -(-us // _HOUR_US) * _HOUR_US if up else us // _HOUR_US * _HOUR_US
+    return r if _MIN_US <= r <= _MAX_US else us
+
+
+def _ntz_lit(us: int):
+    wall = _EPOCH + us * _US
+    # isoformat, NOT strftime: strftime("%Y") drops the zero-padding on
+    # years < 1000 ("1-01-01"), which Spark's NTZ cast rejects
+    return F.to_timestamp_ntz(
+        F.lit(wall.isoformat(sep=" ", timespec="microseconds"))
+    )
+
+
+def filter_ts_range(
+    df: DataFrame, ts_col: str, lo, hi, *, prefilter: bool = False
+) -> DataFrame:
     """Inclusive ``lo <= ts_col <= hi`` filter that reaches the parquet scan.
+
+    ``lo``/``hi`` may be datetimes, dates or ISO strings (µs precision);
+    ``None`` leaves that side open. Every branch converts them through
+    one function, ``_bound_us``, into the column's own time space.
 
     The nanos->timestamp projection (``timestamp_micros(c div 1000)``) is
     opaque to parquet filter pushdown: a predicate written against the
@@ -258,81 +339,53 @@ def filter_ts_range(df: DataFrame, ts_col: str, lo, hi) -> DataFrame:
     equivalent to ``lo <= trunc_us(raw) <= hi`` — and applied BEFORE the
     conversion, where it pushes down to row-group pruning. At 100 TB this
     is the difference between scanning a day and scanning the decade.
+    ``TIMESTAMP_NTZ`` columns compare against NTZ literals built from the
+    zone-free wall clock: ``F.lit(naive_datetime)`` binds the driver zone
+    and the column would coerce through the session zone, which under a
+    DST zone is non-monotone and could empty the window.
 
-    ``lo``/``hi`` may be datetime or ISO strings (µs precision).
-    Falls back to a plain timestamp BETWEEN when ``df`` did not come from
-    :func:`read_parquet` or the column is not a converted nanos column.
+    ``prefilter=True`` (the as-of operators' TTL prefilter, whose result
+    the join re-checks exactly) widens the bounds outward to whole hours
+    of the column's time space: floor ``lo``, ceil ``hi``. Whole-stage
+    codegen inlines the bound literals into the generated scan code, and
+    Spark caches compiled classes by their source, so every retrieval
+    whose bounds fall in the same hours reuses one compiled class instead
+    of compiling (and JIT-warming) a new one. Exact filters (``pull_all``,
+    ``pull_latest``, ``materialize``) keep ``prefilter=False``.
     """
-    import pandas as pd
-
     info = getattr(df, "_fis_nanos_raw", None)
-    if info is not None and ts_col in info[1]:
-        raw, nanos = info
-        cond = None
-        if lo is not None:
-            lo_us = pd.Timestamp(lo).value // 1000
-            cond = F.col(ts_col) >= F.lit(lo_us * 1000)
-        if hi is not None:
-            hi_us = pd.Timestamp(hi).value // 1000
-            c2 = F.col(ts_col) <= F.lit(hi_us * 1000 + 999)
-            cond = c2 if cond is None else (cond & c2)
-        filtered = raw.filter(cond) if cond is not None else raw
-        out = _convert_nanos(filtered, nanos)
-        out._fis_nanos_raw = (filtered, nanos)  # type: ignore[attr-defined]
-        return out
-    # TIMESTAMP_NTZ columns must compare against NTZ literals built
-    # zone-free from the wall-clock string (round-7 review fix):
-    # F.lit(naive_datetime) binds the DRIVER zone and the NTZ column
-    # would coerce through the SESSION zone — under any non-UTC session
-    # both mappings disagree (and the session one is non-monotone
-    # across DST gaps), silently emptying the TTL prefilter.
-    from pyspark.sql.types import TimestampNTZType
+    nanos = info is not None and ts_col in info[1]
+    ntz = not nanos and isinstance(df.schema[ts_col].dataType, TimestampNTZType)
 
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        # Timezone-AWARE bounds are normalized to their UTC wall clock
-        # before formatting (NTZ column values are UTC wall clocks by
-        # this engine's convention) — strftime on an aware Timestamp
-        # would silently emit the zone-LOCAL wall clock and shift the
-        # whole window by the bound's offset. Naive bounds pass through
-        # unchanged. (pandas imported at the top of this function.)
-        #
-        # pd.Timestamp only spans years 1677-2262 (int64 nanos); bounds
-        # outside that — far-past/far-future sentinels callers use as
-        # "no bound" — are formatted without pandas: datetime.isoformat
-        # covers years 1-9999 at µs precision, and an out-of-range ISO
-        # string is passed through verbatim (to_timestamp_ntz parses it
-        # directly). Only the range error is caught; a malformed bound
-        # still raises here, not as a silent NULL literal downstream.
-        def bound(x):
-            try:
-                t = pd.Timestamp(x)
-                if t.tzinfo is not None:
-                    t = t.tz_convert("UTC").tz_localize(None)
-                # isoformat, NOT strftime: pandas 2 stores far-out bounds
-                # at µs resolution instead of raising, and strftime("%Y")
-                # drops the zero-padding on years < 1000 ("1-01-01"),
-                # which Spark's NTZ cast rejects as malformed.
-                s = t.isoformat(sep=" ", timespec="microseconds")
-            except (pd.errors.OutOfBoundsDatetime, OverflowError):
-                if isinstance(x, str):
-                    s = x
-                else:
-                    t = x
-                    if t.tzinfo is not None:
-                        t = t.astimezone(timezone.utc).replace(tzinfo=None)
-                    s = t.isoformat(sep=" ", timespec="microseconds")
-            return F.to_timestamp_ntz(F.lit(s))
+    def us(x, up: bool) -> int | None:
+        if x is None:
+            return None
+        v = _bound_us(df.sparkSession, x, ntz)
+        return _widen_to_hour(v, up) if prefilter else v
+
+    lo_us, hi_us = us(lo, False), us(hi, True)
+    if nanos:
+        # raw values are int64: a bound past that range bounds nothing
+        # extra, so clamping keeps the predicate exact
+        raw, cols = info
+        lo_v = None if lo_us is None else max(lo_us * 1000, _INT64[0])
+        hi_v = None if hi_us is None else min(hi_us * 1000 + 999, _INT64[1])
+        lit = F.lit
     else:
-        def bound(x):
-            return F.lit(x).cast("timestamp")
-
+        lo_v, hi_v = lo_us, hi_us
+        lit = _ntz_lit if ntz else (lambda v: F.timestamp_micros(F.lit(v)))
     cond = None
-    if lo is not None:
-        cond = F.col(ts_col) >= bound(lo)
-    if hi is not None:
-        c2 = F.col(ts_col) <= bound(hi)
+    if lo_v is not None:
+        cond = F.col(ts_col) >= lit(lo_v)
+    if hi_v is not None:
+        c2 = F.col(ts_col) <= lit(hi_v)
         cond = c2 if cond is None else (cond & c2)
-    return df.filter(cond) if cond is not None else df
+    if not nanos:
+        return df.filter(cond) if cond is not None else df
+    filtered = raw.filter(cond) if cond is not None else raw
+    out = _convert_nanos(filtered, cols)
+    out._fis_nanos_raw = (filtered, cols)  # type: ignore[attr-defined]
+    return out
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -51,7 +51,11 @@ def _ensure_spine(
         df = entity_df.copy()
         ts_col = timestamp_field or _infer_event_timestamp_col(list(df.columns))
         if ts_col in df.columns and df[ts_col].dtype == object:
-            df[ts_col] = pd.to_datetime(df[ts_col], utc=True).dt.tz_localize(None)
+            # ISO8601 parses each string on its own; without a format
+            # pandas takes one from the first element and rejects the rest
+            df[ts_col] = pd.to_datetime(
+                df[ts_col], utc=True, format="ISO8601"
+            ).dt.tz_localize(None)
         in_pandas = ts_col in df.columns and _is_numpy_datetime(df[ts_col].dtype)
         if in_pandas:
             # floored in UTC: a zone's wall clock can be ambiguous

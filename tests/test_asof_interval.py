@@ -391,6 +391,8 @@ if _HAS_HYPOTHESIS:
         obs, full grid per key) and exact-integer truncating-division
         interpolation (NULL outside [first, last], observation-at-grid
         returns the observation)."""
+        from pyspark.sql import functions as F
+
         from feast_ibm_spark.operators.resample import (
             resample_interpolate,
             resample_locf,
@@ -401,7 +403,9 @@ if _HAS_HYPOTHESIS:
              for (k, m), v in entries.items()],
             "k bigint, ts timestamp, v bigint",
         )
-        start, end = "2024-01-01 00:00:00", "2024-01-01 10:00:00"
+        # datetime bounds read in the driver zone, like the data's
+        # (ISO strings would read in the session zone)
+        start, end = F.lit(T0), F.lit(T0 + dt.timedelta(hours=10))
 
         want_locf, want_interp = _brute_resample(entries)
         got_locf = {

@@ -1647,3 +1647,238 @@ def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(spark):
             return hashlib.sha256(repr(_sorted_rows(df)).encode()).hexdigest()
 
         assert digest(out) == digest(twin.to_spark_df()), name
+
+
+def test_ensure_spine_parses_mixed_shape_iso_strings(spark):
+    """An object-dtype spine timestamp column whose ISO strings differ in
+    shape (offset vs none, fraction vs none, date only) parses element
+    by element, each to its UTC instant."""
+    import pandas as pd
+
+    from feast_ibm_spark.store import _ensure_spine
+
+    cases = {
+        ("2024-01-03T10:00:00+02:00", "2024-01-02T23:59:59.500000+00:00"): [
+            "2024-01-03 08:00:00", "2024-01-02 23:59:59.500000"],
+        ("2024-01-01 00:00:00.5", "2024-01-02"): [
+            "2024-01-01 00:00:00.500000", "2024-01-02 00:00:00"],
+    }
+    for strings, want in cases.items():
+        pdf = pd.DataFrame({"user_id": [1, 2], "event_timestamp": list(strings)})
+        spine, facts = _ensure_spine(spark, pdf)
+        got = [
+            r.u for r in spine.select(
+                F.unix_micros("event_timestamp").alias("u")
+            ).collect()
+        ]
+        assert got == [pd.Timestamp(w, tz="UTC").value // 1000 for w in want]
+        assert facts.n_rows == 2
+
+
+# --- whole-hour as-of prefilter bounds ----------------------------------------
+
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
+
+
+def _us(s: str) -> int:
+    """An ISO wall clock as µs since the epoch: the UTC instant for a
+    TIMESTAMP column, the zone-free wall clock for TIMESTAMP_NTZ."""
+    return (datetime.fromisoformat(s) - _EPOCH) // _US
+
+
+# (name, session zone, ttl/tolerance seconds, spine rows (k, ts),
+#  feature rows (k, ts)). Every case places feature rows in the margins
+# the whole-hour widening adds: (hi, ceil(hi)], [floor(lo - ttl), lo - ttl)
+# and [floor(lo), lo).
+_WIDEN_CASES = [
+    ("spine_max_on_the_hour", "UTC", 3600,
+     [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 12:00:00")],
+     [(1, "2024-01-01 08:59:59.999999"), (1, "2024-01-01 09:00:00"),
+      (2, "2024-01-01 12:00:00"), (2, "2024-01-01 12:00:00.000001"),
+      (2, "2024-01-01 13:00:00")]),
+    ("rows_in_widened_margins", "UTC", 3600,
+     [(1, "2024-01-01 10:20:00"), (2, "2024-01-01 12:30:00"),
+      (3, "2024-01-01 10:20:00")],
+     [(1, "2024-01-01 09:10:00"), (1, "2024-01-01 10:05:00"),
+      (1, "2024-01-01 10:25:00"), (2, "2024-01-01 12:00:00"),
+      (2, "2024-01-01 12:45:00"), (2, "2024-01-01 13:00:00"),
+      (2, "2024-01-01 13:45:00"), (3, "2024-01-01 09:10:00")]),
+    # wall clocks inside the America/New_York spring-forward gap
+    # (02:00-03:00 on 2024-03-10)
+    ("dst_gap_bound", "America/New_York", 1500,
+     [(1, "2024-03-10 02:30:00"), (2, "2024-03-10 01:40:00")],
+     [(1, "2024-03-10 02:02:00"), (1, "2024-03-10 02:10:00"),
+      (1, "2024-03-10 02:45:00"), (1, "2024-03-10 03:00:00"),
+      (2, "2024-03-10 01:05:00"), (2, "2024-03-10 01:20:00"),
+      (2, "2024-03-10 01:55:00")]),
+    # instants in New York's repeated hour (05:00-07:00 UTC on
+    # 2024-11-03 is 01:00-02:00 twice): a driver in that zone collects
+    # the spine maximum as a naive datetime with fold=1
+    ("dst_fold_bound", "America/New_York", 1800,
+     [(1, "2024-11-03 06:30:00"), (2, "2024-11-03 05:10:00")],
+     [(1, "2024-11-03 06:20:00"), (1, "2024-11-03 06:40:00"),
+      (2, "2024-11-03 04:35:00"), (2, "2024-11-03 04:50:00")]),
+]
+
+
+def _widen_frames(spark, tmp_path, kind, spine_rows, feat_rows):
+    """(spine, feature source) of one case as parquet-backed frames
+    whose time column is a TIMESTAMP (``micros``), a raw TIMESTAMP(NANOS)
+    column converted by ``read_parquet`` (``nanos``) or TIMESTAMP_NTZ."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.sources.reader import read_parquet
+
+    fid = list(range(len(feat_rows)))
+    path = str(tmp_path / f"{kind}_feat_{len(list(tmp_path.iterdir()))}")
+    if kind == "ntz":
+        spark.createDataFrame(
+            [(k, s, float(i)) for i, (k, s) in zip(fid, feat_rows)],
+            "k bigint, s string, v double",
+        ).select("k", F.to_timestamp_ntz("s").alias("ts"), "v").write.parquet(path)
+        feat = spark.read.parquet(path)
+        spine = spark.createDataFrame(
+            [(k, i, s) for i, (k, s) in enumerate(spine_rows)],
+            "k bigint, sid bigint, s string",
+        ).select("k", "sid", F.to_timestamp_ntz("s").alias("event_timestamp"))
+        return spine, feat
+    # a nanos tail below the microsecond truncates away on read
+    ts = (
+        pa.array([_us(s) for _, s in feat_rows], pa.timestamp("us", tz="UTC"))
+        if kind == "micros"
+        else pa.array([_us(s) * 1000 + 500 for _, s in feat_rows],
+                      pa.timestamp("ns", tz="UTC"))
+    )
+    pq.write_table(
+        pa.table({"k": [k for k, _ in feat_rows], "ts": ts,
+                  "v": [float(i) for i in fid]}),
+        path + ".parquet", version="2.6", coerce_timestamps=None,
+    )
+    spine = spark.createDataFrame(
+        [(k, i, _us(s)) for i, (k, s) in enumerate(spine_rows)],
+        "k bigint, sid bigint, u bigint",
+    ).select("k", "sid", F.timestamp_micros("u").alias("event_timestamp"))
+    return spine, read_parquet(spark, path + ".parquet")
+
+
+def _brute_widen(spine_rows, feat_rows, mode, tol_s):
+    """Per spine row: the feature id the as-of semantics pick (PIT with
+    TTL ``tol_s`` or ``asof_join`` in ``mode`` with that tolerance)."""
+    tol = tol_s * 1_000_000
+    out = {}
+    for sid, (k, s) in enumerate(spine_rows):
+        st = _us(s)
+        cands = []
+        for fid, (fk, f) in enumerate(feat_rows):
+            d = _us(f) - st
+            if fk != k:
+                continue
+            if mode in ("pit", "backward"):
+                ok = -tol <= d <= 0
+            elif mode == "forward":
+                ok = 0 <= d <= tol
+            else:
+                ok = abs(d) <= tol
+            if ok:
+                cands.append((abs(d), _us(f), fid))
+        if mode in ("pit", "backward"):
+            best = max(cands, key=lambda c: c[1], default=None)
+        else:  # forward: earliest; nearest: closest, then earlier
+            best = min(cands, default=None)
+        out[sid] = None if best is None else float(best[2])
+    return out
+
+
+@pytest.mark.parametrize("kind", ["micros", "nanos", "ntz"])
+def test_prefilter_whole_hour_widening_is_exact(spark, tmp_path, kind):
+    """The as-of prefilters widen their bounds to whole hours of the
+    column's time space; results must equal the brute-force oracle for
+    rows in every widened margin, a spine maximum on the hour and bounds
+    in a DST gap or repeated hour, under three PIT strategies and every
+    ``asof_join`` direction. The scan still carries the bounds."""
+    from feast_ibm_spark.operators.asof import asof_join
+    from feast_ibm_spark.plans.inspect import pushed_filters
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for name, zone, tol, spine_rows, feat_rows in _WIDEN_CASES:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            spine, feat = _widen_frames(spark, tmp_path, kind, spine_rows, feat_rows)
+            view = FeatureViewSpec("fv", feat, ["k"], ["v"], "ts", ttl_seconds=tol)
+            runs = {
+                s: ("pit", point_in_time_join(spine, [view], strategy=s))
+                for s in ("union_window", "union_window_salted", "broadcast")
+            }
+            for d in ("backward", "forward", "nearest"):
+                runs[d] = (d, asof_join(
+                    spine, feat, ["k"], "event_timestamp", "ts", ["v"],
+                    direction=d, tolerance_seconds=tol,
+                ))
+            for run, (mode, out) in runs.items():
+                got = {r.sid: r.v for r in out.collect()}
+                assert got == _brute_widen(spine_rows, feat_rows, mode, tol), (
+                    kind, name, run)
+                # pushed_filters splits entries on commas
+                fs = pushed_filters(out)
+                assert "LessThanOrEqual(ts" in fs, (kind, name, run, fs)
+                if mode in ("pit", "backward", "nearest"):
+                    assert "GreaterThanOrEqual(ts" in fs, (kind, name, run, fs)
+            if kind == "nanos":
+                # the PIT upper bound: ceil(hi) to the hour, in raw nanos
+                hour = 3_600_000_000
+                hi = max(_us(s) for _, s in spine_rows)
+                bound = -(-hi // hour) * hour * 1000 + 999
+                fs = ", ".join(pushed_filters(runs["union_window"][1]))
+                assert f"LessThanOrEqual(ts, {bound})" in fs, (name, fs)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_warm_training_set_with_a_new_spine_maximum_compiles_nothing(spark, tmp_path):
+    """Two retrievals whose spine maxima differ inside one hour plan the
+    same generated code: after a warm-up, the second adds nothing to
+    Spark's codegen compilation count. Exact bounds inline each new
+    maximum as a literal into the scan stage and compile it again."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.sources.reader import read_parquet
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({
+        "user_id": [i % 5 for i in range(40)],
+        "ts": pa.array(
+            [_us("2024-01-01 00:00:00") + i * 1_800_000_000 for i in range(40)],
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "value": [float(i) for i in range(40)],
+    }), path)
+
+    def retrieve(spine_max: str) -> int:
+        spine = pd.DataFrame({
+            "user_id": [1, 2, 3],
+            "event_timestamp": pd.to_datetime(
+                ["2024-01-01 09:15:00", "2024-01-01 14:00:00", spine_max],
+                format="ISO8601",
+            ),
+        })
+        views = [
+            FeatureViewSpec("v", read_parquet(spark, path), ["user_id"],
+                            ["value"], "ts"),
+            FeatureViewSpec("t", read_parquet(spark, path), ["user_id"],
+                            ["value"], "ts", ttl_seconds=86400),
+        ]
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        SparkOfflineStore.get_historical_features(
+            spark, spine, views, full_feature_names=True
+        ).to_arrow()
+        return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+    retrieve("2024-01-01 16:05:00")
+    retrieve("2024-01-01 16:20:00")
+    assert retrieve("2024-01-01 16:47:12.5") == 0

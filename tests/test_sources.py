@@ -384,9 +384,10 @@ def test_filter_ts_range_nanos_boundaries_randomized(spark, tmp_path):
 
     for _ in range(10):
         a, b = sorted(rng.sample(ns_vals, 2))
-        # bounds at exact row microseconds (worst case for inclusivity)
-        lo = pd.Timestamp(a // 1000 * 1000)
-        hi = pd.Timestamp(b // 1000 * 1000)
+        # bounds at exact row microseconds (worst case for inclusivity);
+        # aware, since a naive bound reads in the driver's zone
+        lo = pd.Timestamp(a // 1000 * 1000, tz="UTC")
+        hi = pd.Timestamp(b // 1000 * 1000, tz="UTC")
         got = sorted(
             r.i for r in filter_ts_range(df, "ts", lo, hi).collect()
         )
@@ -395,6 +396,64 @@ def test_filter_ts_range_nanos_boundaries_randomized(spark, tmp_path):
             if lo.value <= (v // 1000) * 1000 <= hi.value
         ]
         assert got == want
+
+
+def test_nanos_prefilter_reads_naive_bounds_in_the_driver_zone(spark, tmp_path):
+    """Naive datetime bounds convert as ``F.lit`` converts them, in the
+    driver's zone, on every branch of ``filter_ts_range``: the spine
+    facts hand them over that way. Under a New York driver the nanos
+    branch once read them as UTC, dropping the 08:00 and 11:00 rows for
+    a 12:00 UTC spine. The repeated hour's second pass (fold=1) keeps
+    its fold."""
+    import os
+    import time
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.operators.pit_join import FeatureViewSpec
+    from feast_ibm_spark.sources.reader import read_parquet
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    cases = [  # (feature rows, spine timestamp, expected feature)
+        (["2024-01-01 08:00:00", "2024-01-01 11:00:00"], "2024-01-01 12:00:00", 2.0),
+        # 06:30 UTC is New York's second 01:30 on 2024-11-03
+        (["2024-11-03 05:00:00", "2024-11-03 06:20:00"], "2024-11-03 06:30:00", 2.0),
+    ]
+    paths = {}
+    for i, (rows, _, _) in enumerate(cases):
+        for unit, scale in (("ns", 1), ("us", 1000)):
+            p = str(tmp_path / f"{unit}{i}.parquet")
+            pq.write_table(pa.table({
+                "k": [1, 1],
+                "ts": pa.array([pd.Timestamp(r).value // scale for r in rows],
+                               pa.timestamp(unit, tz="UTC")),
+                "v": [1.0, 2.0],
+            }), p, version="2.6", coerce_timestamps=None)
+            paths[i, unit] = p
+
+    old = os.environ.get("TZ")
+    try:
+        for zone in ("UTC", "America/New_York"):
+            os.environ["TZ"] = zone
+            time.tzset()
+            for (i, unit), p in paths.items():
+                _, spine_ts, want = cases[i]
+                spine = pd.DataFrame(
+                    {"k": [1], "event_timestamp": [pd.Timestamp(spine_ts)]}
+                )
+                view = FeatureViewSpec("fv", read_parquet(spark, p), ["k"], ["v"], "ts")
+                got = SparkOfflineStore.get_historical_features(
+                    spark, spine, [view]
+                ).to_df()["v"].tolist()
+                assert got == [want], (zone, unit, spine_ts)
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 def test_filter_ts_range_ntz_fallback_is_zone_free(spark):
