@@ -9,16 +9,21 @@ row with equal entity keys and the greatest ``feature.ts`` satisfying
 keys ``:692-694``). Ties on ``feature.ts`` are broken by greatest
 ``created_timestamp_column`` when configured (dedup CTE ``:703-712``,
 window ordering ``:725-729``). The spine is the source of truth: every
-spine row survives via a final LEFT join (``:765-778``), with NULL features
-on no match. ``full_feature_names`` prefixes outputs ``<view>__<feature>``
+spine row survives with NULL features on no match — the reference's final
+LEFT join (``:765-778``). Here the first melt group's spine arm is the
+spine itself, so its window emits the result rows directly and only the
+other key-set groups and strategies join back. The result rows therefore
+come in key-partition order, not the spine's order (at scale the join-back
+shuffled too). ``full_feature_names`` prefixes outputs ``<view>__<feature>``
 (``:660-662``, ``:770-773``).
 
 Deliberate fixes vs the reference (documented compat deltas):
 - Row-id collision hazard: the reference concatenates key casts with NO
   separator (``:611-619``) so entities ("ab","c") and ("a","bc") collide.
-  We join winners back on the actual (keys, ts) columns instead of a
-  synthetic string id — collision-free and cheaper (no giant string column
-  through the shuffle).
+  The spine's own rows ride the first melt and the other winners join
+  back on the actual (keys, ts) columns instead of a synthetic string id
+  — collision-free and cheaper (no giant string column through the
+  shuffle).
 - The reference's dedup + latest + join-back triple (``:703-756``) folds
   into ONE window (order by ts DESC, created DESC) carrying all feature
   columns — two fewer self-joins.
@@ -36,7 +41,10 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
   TTL enforced by post-checking the matched timestamp. No join blowup even
   when both sides are huge and many feature rows precede each spine row.
   ONE melt per join-key set, not per view: views on the same keys union
-  into one melt (one exchange, one Window, one join-back). Views that
+  into one melt (one exchange, one Window). The first set's melt carries
+  the spine's rows (every column, duplicates too) and emits the result;
+  each later set's melt carries the spine's distinct (keys, ts) and its
+  winners join back. Views that
   also share a source — equal timestamp/created/partition columns, equal
   column names after ``field_mapping``, and ``sameResult`` analyzed
   source plans — share one *arm*: one scan and one payload, prefiltered
@@ -163,8 +171,11 @@ class SpineFacts:
     """What the as-of join needs to know about its spine: ``lo``/``hi``
     (min/max spine timestamp, for the TTL prefilter), ``n_rows`` (the key
     prune and salt gates), ``hot_key_max(keys)`` (the salt gate) and
-    ``distinct(cols)`` (the spine's distinct ``cols`` rows, which every
-    builder melts or joins against).
+    ``distinct(cols)`` (the spine's distinct ``cols`` rows: its keys for
+    the melt's key prune, and its ``(keys, ts)`` for the builders that
+    return winners — every melt group but the first, the salted melt and
+    the ``broadcast``/``shuffle`` range joins; the first melt group melts
+    the spine's own rows).
 
     This form asks Spark: ``lo``, ``hi`` and ``n_rows`` come from one
     ``_spine_time_range`` aggregate, run on first use and at most once;
@@ -235,16 +246,20 @@ def point_in_time_join(
     All spine columns
     (including label/pass-through columns, reference
     ``tests/test_integration.py:160``) survive to the output, followed by
-    the features in view order. An output name that repeats, or that
-    equals a spine column, raises ``ValueError`` (Feast's
-    ``FeatureNameCollisionError``).
+    the features in view order. Every spine row survives, duplicates
+    too; a row whose key or timestamp is NULL gets NULL features. The
+    rows come back in key-partition order, not the spine's. An output
+    name that repeats, or that equals a spine column, raises
+    ``ValueError`` (Feast's ``FeatureNameCollisionError``).
 
     The melt strategies run once per join-key set: every view on the
-    same keys goes through one union, one exchange, one Window (one
-    ``last`` per source arm) and one join-back. Views with the same
-    source share an arm — one scan prefiltered to their widest TTL range
-    — and each view then nulls matches outside its own TTL. The salted
-    melt stays per view.
+    same keys goes through one union, one exchange and one Window (one
+    ``last`` per source arm). The first set's melt carries the spine's
+    own rows and its window emits the result; each later set, the
+    salted melt and the range-join strategies return winners that LEFT
+    join back onto it. Views with the same source share an arm — one
+    scan prefiltered to their widest TTL range — and each view then
+    nulls matches outside its own TTL. The salted melt stays per view.
 
     ``facts`` is what the join reads about the spine (``SpineFacts``:
     ``lo``/``hi``/``n_rows``, ``hot_key_max(keys)``, ``distinct(cols)``).
@@ -327,10 +342,12 @@ def point_in_time_join(
                     for kt in dict.fromkeys(tuple(v.join_keys) for v in feature_views)
                     if facts.hot_key_max(list(kt)) > salt_partition_budget_rows
                 }
-    # Every builder reads the ORIGINAL spine and returns its winners (one
-    # row per distinct spine (keys, ts)); the join-backs happen here.
-    # Feeding one builder's joined output to the next as its spine would
-    # re-embed each earlier plan several times over: exponential in views.
+    # Every builder reads the ORIGINAL spine. The first melt group melts
+    # the spine itself and returns the spine with its features; every
+    # other builder returns its winners (one row per distinct spine
+    # (keys, ts)), joined back here. Feeding one builder's joined output
+    # to the next as its spine would re-embed each earlier plan several
+    # times over: exponential in views.
     winners: list[tuple[list[str], DataFrame]] = []
     melt_groups: dict[tuple, list[FeatureViewSpec]] = {}
     for view in feature_views:
@@ -347,24 +364,30 @@ def point_in_time_join(
                 spine, view, spine_timestamp_field, full_feature_names, lo, hi,
                 broadcast_spine=(strategy == "broadcast"), facts=facts,
             )))
-    winners += [
-        (views[0].join_keys, _melt_winners(
-            spine, views, spine_timestamp_field, full_feature_names, lo, hi,
-            prune_keys=small_spine, facts=facts,
-        ))
-        for views in melt_groups.values()
-    ]
     out = spine
-    # Final LEFT joins — spine is the source of truth (:765-778). Joining
-    # on the real (keys, ts) columns avoids the reference's synthetic
-    # concatenated row id and its collision hazard (:611-619).
+    for i, views in enumerate(melt_groups.values()):
+        w = _melt_winners(
+            spine, views, spine_timestamp_field, full_feature_names, lo, hi,
+            prune_keys=small_spine, facts=facts, carry_spine=(i == 0),
+        )
+        if i == 0:
+            out = w
+        else:
+            winners.append((views[0].join_keys, w))
+    # Final LEFT joins of the other builders' winners — the spine is the
+    # source of truth (:765-778). Joining on the real (keys, ts) columns
+    # avoids the reference's synthetic concatenated row id and its
+    # collision hazard (:611-619).
     for keys, w in winners:
         out = out.join(w, on=[*keys, spine_timestamp_field], how="left")
     # using-joins move join keys first and key-set groups join back in
     # group order: restore spine columns, then features in view order
-    return out.select(
-        *[F.col("`" + c.replace("`", "``") + "`") for c in [*spine_cols, *names]]
-    )
+    return out.select(*[_col(c) for c in [*spine_cols, *names]])
+
+
+def _col(name: str):
+    """The column called ``name``, whatever characters it holds."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
@@ -379,7 +402,7 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
     whole hours (``prefilter=True``, see the module docstring)."""
     import datetime as _dt
 
-    from ..sources.reader import filter_ts_range
+    from ..sources.reader import bound_date, filter_ts_range
 
     view = arm[0]
     feat = view.source
@@ -390,14 +413,17 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
         lo_bound = lo - _dt.timedelta(seconds=max(v.ttl_seconds for v in arm))
     if view.date_partition_column is not None:
         # Reference :665-667 / :671-673: string compare on the partition
-        # column using the date slice ([:10]) of the timestamp bounds.
-        # Day truncation only WIDENS the window (floor of lo, day of hi),
-        # so results are unchanged; Catalyst prunes directories.
+        # column using the date of the timestamp bounds — in the session
+        # zone (a wall clock for NTZ), where the bounds' instants fall,
+        # not the driver's. Day truncation only WIDENS the window (floor
+        # of lo, day of hi), so results are unchanged; Catalyst prunes
+        # directories.
         dpc = F.col(view.date_partition_column)
+        ntz = isinstance(feat.schema[view.timestamp_field].dataType, TimestampNTZType)
         if hi is not None:
-            feat = feat.filter(dpc <= str(hi)[:10])
+            feat = feat.filter(dpc <= bound_date(feat.sparkSession, hi, ntz))
         if lo_bound is not None:
-            feat = feat.filter(dpc >= str(lo_bound)[:10])
+            feat = feat.filter(dpc >= bound_date(feat.sparkSession, lo_bound, ntz))
     feat = filter_ts_range(feat, view.timestamp_field, lo_bound, hi, prefilter=True)
     cols = [
         *view.join_keys,
@@ -511,13 +537,20 @@ def _melt(
     hi,
     prune_keys: bool,
     facts: SpineFacts | None = None,
+    carry_spine: bool = False,
 ) -> DataFrame:
     """The melt both union-window strategies sort, for views on one
     join-key set: one tagged *arm* per distinct source (tag 0, payload
     ``__p<i>`` = matched ts + the arm's features, the other arms'
-    payloads null) unioned with the spine's distinct (keys, ts) rows
-    (tag 1, null payloads), the spine timestamp and feature timestamps
-    all renamed ``__ts``.
+    payloads null) unioned with a spine arm (tag 1, null payloads), the
+    spine timestamp and feature timestamps all renamed ``__ts``.
+
+    The spine arm is the spine's distinct (keys, ts) rows, or, with
+    ``carry_spine``, the spine's own rows: every row, duplicates too,
+    with its other columns in one struct ``__spine`` so that no spine
+    column name can meet the melt's own (``__ts``, ``__tag``, ``__p<i>``,
+    ``__m<i>``). A key or the timestamp whose type the union would widen
+    rides in ``__spine`` as well, so it comes back unchanged.
 
     ``prune_keys`` (round 4): broadcast LEFT SEMI the spine's key set onto
     the feature side before the melt. For a SELECTIVE spine (the typical
@@ -560,11 +593,27 @@ def _melt(
                 *_arm_features(arm),
             ).alias(f"__p{i}"),
         ))
-    parts.append(facts.distinct([*keys, spine_ts]).select(
-        *keys, F.col(spine_ts).alias("__ts"), F.lit(1).alias("__tag")
-    ))
+    if carry_spine:
+        # keys and timestamp come back from the melt's own columns unless
+        # an arm's type differs from the spine's and the union widens them
+        own = {**{k: k for k in keys}, spine_ts: "__ts"}
+        widened = {
+            c for c, m in own.items() for p in parts
+            if p.schema[m].dataType != spine.schema[c].dataType
+        }
+        carried = [c for c in spine.columns if c not in own or c in widened]
+        spine_arm = spine.select(
+            *keys,
+            F.col(spine_ts).alias("__ts"),
+            F.lit(1).alias("__tag"),
+            F.struct(*map(_col, carried)).alias("__spine"),
+        )
+    else:
+        spine_arm = facts.distinct([*keys, spine_ts]).select(
+            *keys, F.col(spine_ts).alias("__ts"), F.lit(1).alias("__tag")
+        )
     return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), [*parts, spine_arm]
     )
 
 
@@ -573,16 +622,29 @@ def _ttl_checked_winners(
     spine_ts: str,
     full_feature_names: bool,
     matched: DataFrame,
+    spine_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Finish a melt: ``matched`` holds one row per distinct spine
-    (keys, ``__ts``) with each arm's carried match in ``__m<i>``. Each
-    view nulls its arm's match when older than ``spine.ts - ttl`` (TTL
-    != 0 only). Returns the winners: keys, spine ts, and every view's
-    features, for one join-back onto the spine."""
+    """Finish a melt: ``matched`` holds one row per spine arm row (keys,
+    ``__ts``) with each arm's carried match in ``__m<i>``. Each view
+    nulls its arm's match when older than ``spine.ts - ttl`` (TTL != 0
+    only). Returns the winners: keys, spine ts, and every view's
+    features, for one join-back onto the spine.
+
+    With ``spine_cols`` (a melt with ``carry_spine``) it returns the
+    spine's columns instead, unpacked from ``__spine`` where they rode
+    there, and a row whose key or timestamp is NULL gets NULL features,
+    as the join-back it replaces would give it."""
     keys = arms[0][0].join_keys
+    valid = None
+    if spine_cols is not None:
+        valid = functools.reduce(
+            lambda a, b: a & b, [F.col(c).isNotNull() for c in [*keys, "__ts"]]
+        )
     feats = []
     for i, arm in enumerate(arms):
         match = F.col(f"__m{i}")
+        if valid is not None:
+            match = F.when(valid, match)
         for view in arm:
             m = match
             if view.ttl_seconds:
@@ -594,7 +656,16 @@ def _ttl_checked_winners(
                 m[c].alias(_out_name(view, c, full_feature_names))
                 for c in view.features
             ]
-    return matched.select(*keys, F.col("__ts").alias(spine_ts), *feats)
+    if spine_cols is None:
+        return matched.select(*keys, F.col("__ts").alias(spine_ts), *feats)
+    carried = set(matched.schema["__spine"].dataType.fieldNames())
+
+    def spine_col(c: str):
+        if c in carried:
+            return F.col("__spine").getField(c).alias(c)
+        return F.col("__ts").alias(c) if c == spine_ts else _col(c)
+
+    return matched.select(*map(spine_col, spine_cols), *feats)
 
 
 def _melt_winners(
@@ -606,10 +677,14 @@ def _melt_winners(
     hi,
     prune_keys: bool = False,
     facts: SpineFacts | None = None,
+    carry_spine: bool = False,
 ) -> DataFrame:
     """Melt as-of winners of every view on one join-key set: one
     equi-shuffle on the entity keys, one window, no range join; the caller
-    joins them back onto the spine once.
+    joins them back onto the spine once. With ``carry_spine`` the spine's
+    own rows ride the melt (``_melt``) and the window emits the result
+    rows themselves — the spine's columns and the views' features, in
+    key-partition order — so nothing is joined back.
 
     Sort each key partition of the melt (``_melt``) by (ts, tag) and carry
     each arm's latest feature row forward with ``last(__p<i>,
@@ -619,7 +694,7 @@ def _melt_winners(
     ``<=`` bound. TTL is enforced afterwards, per view, by nulling matches
     whose timestamp is older than ``spine.ts - ttl``."""
     arms = _arms(views)
-    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys, facts)
+    melted = _melt(spine, arms, spine_ts, lo, hi, prune_keys, facts, carry_spine)
     w = (
         Window.partitionBy(*views[0].join_keys)
         .orderBy(F.col("__ts").asc(), F.col("__tag").asc())
@@ -629,12 +704,16 @@ def _melt_winners(
         *views[0].join_keys,
         "__ts",
         "__tag",
+        *(["__spine"] if carry_spine else []),
         *[
             F.last(f"__p{i}", ignorenulls=True).over(w).alias(f"__m{i}")
             for i in range(len(arms))
         ],
     ).filter(F.col("__tag") == 1)
-    return _ttl_checked_winners(arms, spine_ts, full_feature_names, carried)
+    return _ttl_checked_winners(
+        arms, spine_ts, full_feature_names, carried,
+        spine.columns if carry_spine else None,
+    )
 
 
 def _salted_melt_winners(

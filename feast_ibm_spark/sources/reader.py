@@ -304,6 +304,22 @@ def _bound_us(spark: SparkSession, x, ntz: bool) -> int:
     return TimestampType().toInternal(t)
 
 
+def bound_date(spark: SparkSession, x, ntz: bool) -> str:
+    """The ``yyyy-MM-dd`` date of time bound ``x``, converted as
+    ``_bound_us`` converts it: the date of the instant in the session
+    zone, or of the wall clock for ``TIMESTAMP_NTZ``."""
+    us = _bound_us(spark, x, ntz)
+    if ntz:
+        return (_EPOCH + us * _US).date().isoformat()
+    jt = spark._jvm.java.time
+    return (
+        jt.Instant.ofEpochSecond(us // 1_000_000, us % 1_000_000 * 1000)
+        .atZone(jt.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+        .toLocalDate()
+        .toString()
+    )
+
+
 def _widen_to_hour(us: int, up: bool) -> int:
     """``us`` floored (``up=False``) or ceiled to a whole hour of its own
     time space; kept as is where the rounded value leaves the datetime

@@ -6,6 +6,7 @@ we execute and assert results — including the reference's canonical
 computed from raw inputs, which the mocked reference test never actually
 did."""
 
+from collections import Counter
 from datetime import datetime, timedelta
 
 import pytest
@@ -192,12 +193,17 @@ def test_pit_join_rejects_output_name_collisions(spark):
 
 
 def _brute_force_pit(spine_rows, feat_rows, ttl):
-    """Per-row oracle (FIXTURES.md §6)."""
+    """Per-row oracle (FIXTURES.md §6). A NULL key (or key part) or a
+    NULL spine timestamp matches nothing, as SQL equality does."""
+
+    def null(k):
+        return k is None or (isinstance(k, tuple) and None in k)
+
     out = {}
     for k, sts in spine_rows:
         best = None
         for fk, fts, created, v in feat_rows:
-            if fk != k or fts > sts:
+            if null(k) or sts is None or null(fk) or fk != k or fts > sts:
                 continue
             if ttl and fts < sts - timedelta(seconds=ttl):
                 continue
@@ -234,26 +240,42 @@ def test_pit_join_randomized_against_brute_force(spark, strategy, ttl):
          rng.choice(instants) + timedelta(seconds=i), float(i))
         for i in range(120)
     ]
+    # a NULL-key feature row at every instant
+    feat_rows += [(None, t, t, -float(i)) for i, t in enumerate(instants)]
     spine_rows = [(rng.randint(1, 6), rng.choice(instants)) for _ in range(40)]
     spine_rows = list(dict.fromkeys(spine_rows))
+    spine_rows += [(None, instants[9]), (3, None), (None, None)]
+    # pass-through columns named like the melt's internals, an array
+    # column, and exact duplicate rows, each of which must survive
+    full = [
+        (k, ts, f"s{i}", i % 3, float(i), [i, -i])
+        for i, (k, ts) in enumerate(spine_rows)
+    ]
+    full += full[:2] + full[-2:]
 
     feat = spark.createDataFrame(
         feat_rows, "k bigint, event_timestamp timestamp, created timestamp, v double"
     )
-    spine = spark.createDataFrame(spine_rows, "k bigint, event_timestamp timestamp")
+    # an int spine key against bigint feature keys: the melt's union
+    # widens it, and the output still carries the spine's own type
+    spine = spark.createDataFrame(
+        full,
+        "k int, event_timestamp timestamp, __ts string, __tag int, "
+        "__p0 double, tags array<bigint>",
+    )
     view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp",
                            created_timestamp_column="created", ttl_seconds=ttl)
     kwargs = _AUTO_BRANCHES.get(strategy)
     if kwargs is not None:
         strategy = "auto"
-    got = {
-        (r.k, r.event_timestamp): r.v
-        for r in point_in_time_join(
-            spine, [view], strategy=strategy, **(kwargs or {})
-        ).collect()
-    }
+    out = point_in_time_join(spine, [view], strategy=strategy, **(kwargs or {}))
+    assert out.schema[:6] == spine.schema
+    assert out.columns == [*spine.columns, "v"]
+    got = Counter((*r[:5], tuple(r[5]), r[6]) for r in out.collect())
     expected = _brute_force_pit(spine_rows, feat_rows, ttl)
-    assert got == expected
+    assert got == Counter(
+        (*r[:5], tuple(r[5]), expected[r[:2]]) for r in full
+    )
 
 
 @pytest.mark.parametrize(
@@ -297,6 +319,13 @@ def test_pit_join_multiview_randomized_against_brute_force(spark, tmp_path, stra
     shared_rows += [(20, 1, instants[0], created(120), -1.0, "old"),
                     (21, 1, instants[3], created(121), -2.0, "mid")]
     spine_rows += [(20, 1, instants[6]), (21, 1, instants[6])]
+    # NULL key parts on both sides, a NULL spine timestamp and an exact
+    # duplicate: under the melt strategies the first key set (k) rides
+    # the melt and the second (k, r) joins back; every spine row survives
+    shared_rows += [(None, 1, instants[8], created(122), -3.0, "nk"),
+                    (5, None, instants[8], created(123), -4.0, "nr")]
+    spine_rows += [(None, 1, instants[9]), (5, None, instants[9]),
+                   (5, 1, None), spine_rows[0]]
 
     path = str(tmp_path / "shared")
     spark.createDataFrame(
@@ -1622,8 +1651,6 @@ def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(spark):
     ]
     sc = spark.sparkContext
     for name, pdf in _spine_fact_cases().items():
-        if pdf["user_id"].isna().any():
-            continue  # a float key column: the bigint feature keys differ in type
         group = f"fis_spine_facts_{uuid.uuid4().hex}"
         sc.setJobGroup(group, "pandas spine preamble")
         try:
@@ -1882,3 +1909,92 @@ def test_warm_training_set_with_a_new_spine_maximum_compiles_nothing(spark, tmp_
     retrieve("2024-01-01 16:05:00")
     retrieve("2024-01-01 16:20:00")
     assert retrieve("2024-01-01 16:47:12.5") == 0
+
+
+# --- date-partition cut in the session zone -----------------------------------
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+def test_pit_date_partition_cut_uses_the_session_zone(spark, tmp_path, zone):
+    """The ``date_partition_column`` cut takes the date of each bound in
+    the session zone, where the source writes its ``ds`` partitions, not
+    in the driver's zone. A feature row at 01:00 UTC and a spine row at
+    02:00 UTC on 2024-01-05 must match under any driver zone (CI runs
+    this file again under a New York driver, whose date of the bound is
+    2024-01-04) and any session zone (in Los Angeles both instants fall
+    on 2024-01-04, a day before the driver's UTC date of the TTL bound)."""
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        path = str(tmp_path / "by_ds")
+        spark.createDataFrame(
+            [(1, "2024-01-05 01:00:00+00:00", 1.0)], "k bigint, s string, v double"
+        ).select(
+            "k", F.to_timestamp("s").alias("ts"), "v"
+        ).withColumn("ds", F.date_format("ts", "yyyy-MM-dd")).write.partitionBy(
+            "ds"
+        ).parquet(path)
+        spine = spark.createDataFrame(
+            [(1, "2024-01-05 02:00:00+00:00")], "k bigint, s string"
+        ).select("k", F.to_timestamp("s").alias("event_timestamp"))
+        view = FeatureViewSpec("fv", spark.read.parquet(path), ["k"], ["v"], "ts",
+                               ttl_seconds=3600, date_partition_column="ds")
+        assert point_in_time_join(spine, [view]).first().v == 1.0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+# --- the spine rides the melt -------------------------------------------------
+
+
+def test_training_set_runs_three_jobs_and_joins_nothing_back(spark, tmp_path):
+    """A pandas-spine retrieval over two views of one parquet source is
+    three Spark jobs: the key-prune broadcast, the melt's shuffle map
+    stage and the window stage that emits the result rows. The spine's
+    own rows ride the melt, so the plan has no LEFT join back onto it."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.plans.inspect import explain_str
+    from feast_ibm_spark.sources.reader import read_parquet
+    from feast_ibm_spark.store import SparkOfflineStore
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({
+        "user_id": [i % 5 for i in range(40)],
+        "ts": pa.array(
+            [_us("2024-01-01 00:00:00") + i * 1_800_000_000 for i in range(40)],
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "value": [float(i) for i in range(40)],
+    }), path)
+    spine = pd.DataFrame({
+        "user_id": [1, 2, 3, 9, 1],
+        "event_timestamp": pd.to_datetime(
+            ["2024-01-01 09:15:00", "2024-01-01 14:00:00", "2024-01-01 16:05:00",
+             "2024-01-01 10:00:00", "2024-01-01 09:15:00"],
+            format="ISO8601",
+        ),
+        "label": [0.1, 0.2, 0.3, 0.4, 0.1],
+    })
+    views = [
+        FeatureViewSpec("v", read_parquet(spark, path), ["user_id"], ["value"], "ts"),
+        FeatureViewSpec("t", read_parquet(spark, path), ["user_id"], ["value"], "ts",
+                        ttl_seconds=3600),
+    ]
+    sc = spark.sparkContext
+    try:
+        for i in range(3):
+            group = f"test_training_set_job_count_{i}"
+            sc.setJobGroup(group, "training set job count")
+            job = SparkOfflineStore.get_historical_features(
+                spark, spine, views, full_feature_names=True
+            )
+            assert job.to_arrow().num_rows == len(spine)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "LeftOuter" not in explain_str(job.to_spark_df())

@@ -246,9 +246,10 @@ def test_pit_melt_one_exchange_per_key_set(spark, sf_dir):
     assert _melt_shape(single) == (["user_id"], 1, 1)
     assert _melt_shape(same_keys) == (["user_id"], 1, 1), explain_str(same_keys)
     assert _melt_shape(two_keys) == (["event_id", "user_id"], 2, 2)
-    # the one-view melt plan: spine distinct, key-prune distinct, melt
-    # window, and the join-back's two sides
-    assert count_shuffles(single) == count_shuffles(same_keys) == 5
+    # the one-view melt plan: the key-prune distinct and the melt window;
+    # the spine's own rows ride the melt, so no (keys, ts) distinct and
+    # no join-back remain
+    assert count_shuffles(single) == count_shuffles(same_keys) == 2
 
 
 def test_pit_join_views_with_distinct_timestamp_fields(spark, events):
