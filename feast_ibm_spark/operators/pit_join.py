@@ -68,22 +68,27 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
   buckets (see ``_salted_melt_winners``). Use when one key
   exceeds an executor's partition budget under the plain melt.
 
-The TTL prefilter rewrite (bound the feature side to
-``[min_spine_ts - ttl, max_spine_ts]`` before the join, reference
-``:664-674``; a shared melt arm takes its views' widest range) is kept:
-Catalyst cannot derive it, and at 100 TB it is the difference between
-scanning a day and scanning a decade. It needs the spine's min/max
-timestamp (``SpineFacts``): one tiny aggregate job, or none when the
-caller holds the spine's rows (a pandas spine). The bounds widen outward
-to whole hours of the feature column's time space (floor the lower,
-ceil the upper; ``filter_ts_range(prefilter=True)``). Whole-stage codegen
-inlines the bound literals into the generated scan code and Spark caches
-compiled classes by their source, so exact bounds made every spine with
-a new maximum compile its scan stage again; whole-hour bounds let every
-retrieval in the same hours reuse the compiled classes. The widening
-cannot change a result: a feature row after ``max_spine_ts`` sorts after
-every spine row (melt) or fails ``feature.ts <= spine.ts`` (range join),
-and one before ``min_spine_ts - ttl`` fails every view's TTL check.
+The TTL prefilter rewrite (bound the feature side to ``[min_spine_ts -
+ttl, max_spine_ts]`` before the join, reference ``:664-674``; a shared
+melt arm takes its views' widest range) is kept: Catalyst cannot derive
+it, and at 100 TB it is the difference between scanning a day and
+scanning a decade. It needs the spine's min/max timestamp
+(``SpineFacts``): one tiny aggregate job, or none when the caller holds
+the spine's rows (a pandas spine). The bounds are instants, as the
+reference's ``pd.to_datetime(..., utc=True)`` range is (``:584-585``):
+aware UTC for a TIMESTAMP spine, so ``min_spine_ts - ttl`` is exact
+across a DST change whatever the driver's zone, and a TIMESTAMP_NTZ
+feature column compares against their UTC wall clock. The bounds widen
+outward to whole hours of the feature column's time space (floor the
+lower, ceil the upper; ``filter_ts_range(prefilter=True)``). Whole-stage
+codegen inlines the bound literals into the generated scan code and
+Spark caches compiled classes by their source, so exact bounds made
+every spine with a new maximum compile its scan stage again; whole-hour
+bounds let every retrieval in the same hours reuse the compiled classes.
+The widening cannot change a result: a feature row after
+``max_spine_ts`` sorts after every spine row (melt) or fails
+``feature.ts <= spine.ts`` (range join), and one before ``min_spine_ts -
+ttl`` fails every view's TTL check.
 
 Hot-key skew (measured; pinned by test_plans.py::
 test_pit_strategies_absorb_hot_key_skew): AQE's OptimizeSkewedJoin never
@@ -108,6 +113,8 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
+
+from .asof import SpineFacts, asof_winners
 
 
 @dataclass
@@ -140,75 +147,8 @@ class FeatureViewSpec:
     bucketed_on: list[str] | None = None
 
 
-def _spine_time_range(spine: DataFrame, ts_col: str):
-    """(min_ts, max_ts, n_rows) of the spine in ONE tiny aggregate job —
-    the count rides along free for the ``auto`` strategy choice."""
-    row = spine.agg(
-        F.min(ts_col).alias("lo"),
-        F.max(ts_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    return row["lo"], row["hi"], row["n"]
-
-
 def _out_name(view: FeatureViewSpec, feat: str, full_feature_names: bool) -> str:
     return f"{view.name}__{feat}" if full_feature_names else feat
-
-
-def _spine_hot_key_max(spine: DataFrame, keys: list[str]) -> int:
-    """Max spine rows on any single key combination — one tiny two-stage
-    aggregate (per-key counts combine map-side; the reduce is a single
-    max over one row per distinct key). ``auto`` uses this histogram to
-    decide plain-melt vs salted-melt per view; it is only run when the
-    spine's TOTAL row count (already known, free, from the range
-    aggregate) exceeds the partition budget — a spine smaller than the
-    budget cannot contain a key above it."""
-    row = spine.groupBy(*keys).count().agg(F.max("count").alias("m")).first()
-    return int(row["m"] or 0)
-
-
-class SpineFacts:
-    """What the as-of join needs to know about its spine: ``lo``/``hi``
-    (min/max spine timestamp, for the TTL prefilter), ``n_rows`` (the key
-    prune and salt gates), ``hot_key_max(keys)`` (the salt gate) and
-    ``distinct(cols)`` (the spine's distinct ``cols`` rows: its keys for
-    the melt's key prune, and its ``(keys, ts)`` for the builders that
-    return winners — every melt group but the first, the salted melt and
-    the ``broadcast``/``shuffle`` range joins; the first melt group melts
-    the spine's own rows).
-
-    This form asks Spark: ``lo``, ``hi`` and ``n_rows`` come from one
-    ``_spine_time_range`` aggregate, run on first use and at most once;
-    ``hot_key_max`` runs ``_spine_hot_key_max``; ``distinct`` is
-    ``spine.select(*cols).distinct()``, planned into the join. A caller
-    that already holds the spine's rows (``store._ensure_spine`` for a
-    pandas spine) passes a subclass that answers from them instead."""
-
-    def __init__(self, spine: DataFrame, ts_col: str):
-        self.spine = spine
-        self.ts_col = ts_col
-
-    @functools.cached_property
-    def _range(self) -> tuple:
-        return _spine_time_range(self.spine, self.ts_col)
-
-    @property
-    def lo(self):
-        return self._range[0]
-
-    @property
-    def hi(self):
-        return self._range[1]
-
-    @property
-    def n_rows(self) -> int:
-        return self._range[2]
-
-    def hot_key_max(self, keys: list[str]) -> int:
-        return _spine_hot_key_max(self.spine, keys)
-
-    def distinct(self, cols: list[str]) -> DataFrame:
-        return self.spine.select(*cols).distinct()
 
 
 def point_in_time_join(
@@ -243,6 +183,11 @@ def point_in_time_join(
     one key's spine rows exceed the budget — the whale-key partition
     bound, measurement-backed (NOTES.md round 7 "hot-SPINE salted-melt
     crossover"). ``salt_partition_budget_rows=None`` disables the probe.
+    ``shuffle`` has never beaten the melt: interleaved runs of
+    ``pit_join_shuffle`` against ``pit_join_union_window`` at sf0.1 and
+    on its 10x copy lost 9/9 pairs at both scales (0.71 vs 0.48 s and
+    0.89 vs 0.50 s median, 3-4x the shuffle bytes; NOTES.md "One as-of
+    core"). It stays for callers that want AQE to pick the join.
     All spine columns
     (including label/pass-through columns, reference
     ``tests/test_integration.py:160``) survive to the output, followed by
@@ -361,7 +306,7 @@ def point_in_time_join(
             melt_groups.setdefault(kt, []).append(view)
         else:
             winners.append((view.join_keys, _join_winners(
-                spine, view, spine_timestamp_field, full_feature_names, lo, hi,
+                view, spine_timestamp_field, full_feature_names, lo, hi,
                 broadcast_spine=(strategy == "broadcast"), facts=facts,
             )))
     out = spine
@@ -435,64 +380,34 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
 
 
 def _join_winners(
-    spine: DataFrame,
     view: FeatureViewSpec,
     spine_ts: str,
     full_feature_names: bool,
     lo,
     hi,
     broadcast_spine: bool,
-    facts: SpineFacts | None = None,
+    facts: SpineFacts,
 ) -> DataFrame:
-    """As-of winners of one view by range join (``broadcast``/``shuffle``)."""
-    feat = _prepared_feature_side([view], lo, hi)
-
-    # Distinct (keys, ts) — the reference's per-view spine dedup CTE
-    # (:626-636) — so the candidate join and window run once per unique
-    # entity/timestamp, not once per spine row.
-    facts = facts or SpineFacts(spine, spine_ts)
+    """As-of winners of one view by range join (``broadcast``/``shuffle``):
+    the shared builder (``asof.asof_winners``), backward with the TTL as
+    its tolerance and ``created`` DESC as its tiebreak (the reference's
+    dedup/latest/cleaned CTE chain ``:703-756`` in one window), over the
+    spine's distinct (keys, ts) — the per-view spine dedup CTE
+    (``:626-636``) — so the join and window run once per unique
+    entity/timestamp, not once per spine row."""
     spine_keys = facts.distinct([*view.join_keys, spine_ts])
     if broadcast_spine:
         spine_keys = F.broadcast(spine_keys)
-
-    f = feat.alias("f")
-    s = spine_keys.alias("s")
-    cond = F.col(f"f.{view.timestamp_field}") <= F.col(f"s.{spine_ts}")
-    if view.ttl_seconds:
-        cond = cond & (
-            F.col(f"f.{view.timestamp_field}")
-            >= F.col(f"s.{spine_ts}") - F.expr(f"INTERVAL {view.ttl_seconds} SECOND")
-        )
-    for k in view.join_keys:
-        cond = cond & (F.col(f"f.{k}") == F.col(f"s.{k}"))
-
-    cand = f.join(s, cond, "inner")
-
-    # One window replaces the reference's dedup/latest/cleaned CTE chain
-    # (:703-756): latest feature ts, tie-broken by created DESC.
-    order = [F.col(f"f.{view.timestamp_field}").desc()]
-    if view.created_timestamp_column:
-        order.append(F.col(f"f.{view.created_timestamp_column}").desc())
-    w = Window.partitionBy(
-        *[F.col(f"s.{k}") for k in view.join_keys], F.col(f"s.{spine_ts}")
-    ).orderBy(*order)
-
-    winners = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            *[F.col(f"s.{k}").alias(k) for k in view.join_keys],
-            F.col(f"s.{spine_ts}").alias(spine_ts),
-            *[
-                F.col(f"f.{feat_col}").alias(_out_name(view, feat_col, full_feature_names))
-                for feat_col in view.features
-            ],
-        )
+    winners = asof_winners(
+        spine_keys, _prepared_feature_side([view], lo, hi), view.join_keys,
+        spine_ts, view.timestamp_field, view.features, "backward",
+        view.ttl_seconds, view.created_timestamp_column,
+    ).toDF(  # positional: a feature may share a key's or ts's name
+        *view.join_keys, spine_ts,
+        *[_out_name(view, f, full_feature_names) for f in view.features],
     )
-    if broadcast_spine:
-        # winners has at most one row per distinct spine (keys, ts): small.
-        winners = F.broadcast(winners)
-    return winners
+    # at most one row per distinct spine (keys, ts): small
+    return F.broadcast(winners) if broadcast_spine else winners
 
 
 def _arm_features(arm: list[FeatureViewSpec]) -> list[str]:

@@ -20,7 +20,9 @@ from pyspark.sql import DataFrame
 
 class RetrievalMetadata:
     """Feature names, join keys, and the spine's event-timestamp range
-    (reference ``RetrievalMetadata`` use at ``:417``, ``:470-475``).
+    (reference ``RetrievalMetadata`` use at ``:417``, ``:470-475``); for
+    a TIMESTAMP spine the range is aware UTC, as the reference's
+    ``pd.to_datetime(..., utc=True)`` gives it (``:584-585``).
 
     The min/max timestamps may be supplied eagerly OR as a zero-arg
     ``timestamp_range_resolver`` that is invoked (once) on first access —

@@ -262,12 +262,11 @@ def _bound_us(spark: SparkSession, x, ntz: bool) -> int:
 
     ``TimestampType`` (and the nanos shim's converted column): epoch µs.
     A datetime converts exactly as ``F.lit`` (and ``createDataFrame``)
-    convert it — pyspark's ``TimestampType().toInternal``, which reads a
-    naive datetime in the driver's zone (``SpineFacts`` hands naive
-    datetimes back through ``fromInternal``, the inverse), except that a
-    naive datetime with ``fold=1`` keeps its fold. Any other bound (an
-    ISO string, a date) parses through pandas; without an offset it
-    reads as a wall clock in the session zone, as Spark's cast does.
+    convert it — pyspark's ``TimestampType().toInternal``: an aware one
+    (``SpineFacts`` bounds of a TIMESTAMP spine are aware UTC) exactly, a
+    naive one in the driver's zone. Any other bound (an ISO string, a
+    date) parses through pandas; without an offset it reads as a wall
+    clock in the session zone, as Spark's cast does.
 
     ``TIMESTAMP_NTZ``: zone-free wall-clock µs. An aware bound takes its
     UTC wall clock (NTZ values are UTC wall clocks by this engine's
@@ -296,11 +295,6 @@ def _bound_us(spark: SparkSession, x, ntz: bool) -> int:
             .toInstant()
         )
         return instant.getEpochSecond() * 1_000_000 + instant.getNano() // 1000
-    if t.tzinfo is None and t.fold:
-        # fromInternal marks the second pass of a repeated wall-clock
-        # hour with fold=1; toInternal (time.mktime) drops it and lands
-        # an hour early
-        return int(t.replace(microsecond=0).timestamp()) * 1_000_000 + t.microsecond
     return TimestampType().toInternal(t)
 
 

@@ -86,10 +86,10 @@ class _PandasSpineFacts(SpineFacts):
     """``SpineFacts`` of a spine built from a pandas frame, computed from
     that frame. Spark stores a zone-less pandas timestamp as a wall clock
     in the session time zone (pyspark's
-    ``_check_series_convert_timestamps_internal``) and hands one back
-    through ``DataType.fromInternal``; ``lo``/``hi`` take both steps, so
-    they equal what the Spark-probed form collects. ``distinct`` ships the
-    deduplicated pandas rows under the spine's own column types."""
+    ``_check_series_convert_timestamps_internal``); ``lo``/``hi`` localize
+    it there and convert to UTC, the instants the Spark-probed form
+    collects. ``distinct`` ships the deduplicated pandas rows under the
+    spine's own column types."""
 
     def __init__(self, spine: DataFrame, ts_col: str, pdf: pd.DataFrame):
         super().__init__(spine, ts_col)
@@ -98,17 +98,16 @@ class _PandasSpineFacts(SpineFacts):
     @functools.cached_property
     def _range(self) -> tuple:
         ts = self.pdf[self.ts_col]
-        ts_type = self.spine.schema[self.ts_col].dataType
-        if isinstance(ts_type, TimestampType) and not isinstance(
-            ts.dtype, pd.DatetimeTZDtype
-        ):
-            zone = self.spine.sparkSession.conf.get("spark.sql.session.timeZone")
-            ts = ts.dt.tz_localize(zone, ambiguous=False)
+        if isinstance(self.spine.schema[self.ts_col].dataType, TimestampType):
+            if not isinstance(ts.dtype, pd.DatetimeTZDtype):
+                zone = self.spine.sparkSession.conf.get("spark.sql.session.timeZone")
+                ts = ts.dt.tz_localize(zone, ambiguous=False)
+            ts = ts.dt.tz_convert("UTC")
 
-        def internal(t):
-            return None if pd.isna(t) else ts_type.fromInternal(t.value // 1000)
+        def bound(t):
+            return None if pd.isna(t) else t.to_pydatetime()
 
-        return internal(ts.min()), internal(ts.max()), len(self.pdf)
+        return bound(ts.min()), bound(ts.max()), len(self.pdf)
 
     def hot_key_max(self, keys: list[str]) -> int:
         if self.pdf.empty:

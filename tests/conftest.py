@@ -1,4 +1,5 @@
 import os
+import time
 
 import pytest
 
@@ -12,6 +13,18 @@ def spark():
     spark = get_spark(app_name="feast-ibm-spark-tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def new_york_driver(monkeypatch):
+    """The driver's zone pinned to America/New_York for one test, on any
+    host: pyspark's ``toInternal``/``fromInternal`` read and write naive
+    datetimes in it, so a time bound that leaks the driver's zone shows."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
 
 
 @pytest.fixture(scope="session")

@@ -54,6 +54,7 @@ def _brute_asof(left_rows, right_rows, direction, tol_s):
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_asof_matches_brute_force_randomized(spark, direction):
+    """Both strategies, every direction, against the brute-force oracle."""
     rng = random.Random(f"asof-{direction}")
     for trial in range(3):
         keys = ["a", "b", "c"]
@@ -71,17 +72,46 @@ def test_asof_matches_brute_force_randomized(spark, direction):
         right = spark.createDataFrame(
             right_rows, "k string, rts timestamp, rid long, val double"
         )
-        got = asof_join(
-            left, right, on=["k"], left_ts="lts", right_ts="rts",
-            right_columns=["val"], direction=direction,
-            tolerance_seconds=tol, tiebreak="rid",
-        ).collect()
         expect = _brute_asof(left_rows, right_rows, direction, tol)
-        # duplicated (k, lts) left rows each get the winner; compare per row
-        assert len(got) == len(left_rows)
-        for row in got:
-            assert expect[(row["k"], row["lts"])] == row["val"], (
-                direction, trial, row)
+        for strategy in ("broadcast", "shuffle"):
+            got = asof_join(
+                left, right, on=["k"], left_ts="lts", right_ts="rts",
+                right_columns=["val"], direction=direction,
+                tolerance_seconds=tol, tiebreak="rid", strategy=strategy,
+            ).collect()
+            # duplicated (k, lts) left rows each get the winner; compare
+            # per row
+            assert len(got) == len(left_rows)
+            for row in got:
+                assert expect[(row["k"], row["lts"])] == row["val"], (
+                    direction, strategy, trial, row)
+
+
+def test_asof_shuffle_strategy_broadcasts_nothing(spark):
+    """``shuffle`` is for a left side too big to broadcast: with
+    automatic broadcasts off, its plan holds no broadcast at all — not
+    of the distinct left keys, not of the winners joined back."""
+    left = spark.createDataFrame(
+        [("a", _ts(100)), ("b", _ts(5))], "k string, lts timestamp"
+    )
+    right = spark.createDataFrame(
+        [("a", _ts(1), 1, 1.0), ("b", _ts(2), 2, 2.0)],
+        "k string, rts timestamp, rid long, val double",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for direction in ("backward", "forward", "nearest"):
+            out = asof_join(left, right, ["k"], "lts", "rts", ["val"],
+                            direction=direction, tolerance_seconds=3600,
+                            tiebreak="rid", strategy="shuffle")
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastExchange" not in plan, (direction, plan)
+        got = {r.k: r.val for r in out.collect()}
+        assert got == {"a": None, "b": 2.0}
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_asof_no_tolerance_unbounded(spark):

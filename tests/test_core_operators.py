@@ -7,7 +7,7 @@ computed from raw inputs, which the mocked reference test never actually
 did."""
 
 from collections import Counter
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -950,9 +950,10 @@ def test_pit_salted_melt_multi_bucket_carry(spark, ttl):
     view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp",
                            created_timestamp_column="created", ttl_seconds=ttl)
 
-    lo, hi, _ = __import__(
-        "feast_ibm_spark.operators.pit_join", fromlist=["_spine_time_range"]
-    )._spine_time_range(spine, "event_timestamp")
+    from feast_ibm_spark.operators.pit_join import SpineFacts
+
+    facts = SpineFacts(spine, "event_timestamp")
+    lo, hi = facts.lo, facts.hi
     salted = _salted_melt_winners(
         spine, view, "event_timestamp", False, lo, hi,
         salt_bucket_seconds=3600,  # 10+ buckets over the data span
@@ -1422,8 +1423,8 @@ def test_pit_salted_melt_ntz_is_monotone_across_dst_gap(spark):
     carry pass. The zone-free wall-clock decomposition keeps bucketing
     monotone: the salted melt must match the plain melt exactly."""
     from feast_ibm_spark.operators.pit_join import (
+        SpineFacts,
         _salted_melt_winners,
-        _spine_time_range,
     )
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -1441,7 +1442,8 @@ def test_pit_salted_melt_ntz_is_monotone_across_dst_gap(spark):
         ).select("k", F.to_timestamp_ntz("s").alias("event_timestamp"))
         view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp")
 
-        lo, hi, _ = _spine_time_range(spine, "event_timestamp")
+        facts = SpineFacts(spine, "event_timestamp")
+        lo, hi = facts.lo, facts.hi
         salted = _salted_melt_winners(
             spine, view, "event_timestamp", False, lo, hi,
             salt_bucket_seconds=900,  # buckets small enough to split the gap
@@ -1595,6 +1597,16 @@ def _spine_fact_cases():
                 "event_timestamp": [base[0], base[1], base[1], base[2]],
             }
         ),
+        # the minimum a day after New York's spring-forward change, the
+        # maximum in its repeated hour (06:30 UTC is the second 01:30)
+        "dst": pd.DataFrame(
+            {
+                "user_id": [1, 2],
+                "event_timestamp": pd.to_datetime(
+                    ["2024-03-10 16:00:00", "2024-11-03 06:30:00"]
+                ),
+            }
+        ),
     }
 
 
@@ -1602,11 +1614,12 @@ def _sorted_rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-def test_pandas_spine_facts_match_spark_probe(spark):
+def test_pandas_spine_facts_match_spark_probe(spark, new_york_driver):
     """For every pandas spine shape, the facts ``_ensure_spine`` computes
     in pandas equal the Spark-probed facts of the spine it built: range,
     row count, hot-key max, and the distinct rows and types of every
-    column set the builders ask for."""
+    column set the builders ask for. The driver is in New York, so the
+    probe reads back naive driver-zone datetimes, folds included."""
     from feast_ibm_spark.operators.pit_join import SpineFacts
     from feast_ibm_spark.store import _PandasSpineFacts, _ensure_spine
 
@@ -1624,22 +1637,32 @@ def test_pandas_spine_facts_match_spark_probe(spark):
             assert _sorted_rows(ours) == _sorted_rows(theirs), name
 
 
-def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(spark):
+def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(
+    spark, new_york_driver
+):
     """``get_historical_features`` gives hash-identical results for a
     pandas spine and for the same spine passed as a Spark DataFrame; for
     the pandas spine, building the job, reading its metadata and planning
-    the join run no Spark job."""
+    the join run no Spark job. ``min_event_timestamp`` is the aware UTC
+    minimum ``pd.to_datetime(utc=True)`` gives (floored to µs), and the
+    ``dst`` spine's 1-day TTL reaches back 24 h of instants across New
+    York's spring-forward change, with the driver in New York."""
     import hashlib
     import uuid
 
+    import pandas as pd
+
     from feast_ibm_spark.store import SparkOfflineStore, _ensure_spine
 
+    utc = timezone.utc
     feats = spark.createDataFrame(
         [
-            (1, TS(2024, 1, 1, 0), 1.0),
-            (1, TS(2024, 1, 2, 12), 2.0),
-            (2, TS(2024, 1, 1, 6), 3.0),
-            (2, TS(2024, 1, 3, 9), 4.0),
+            (1, TS(2024, 1, 1, 0, tzinfo=utc), 1.0),
+            (1, TS(2024, 1, 2, 12, tzinfo=utc), 2.0),
+            (2, TS(2024, 1, 1, 6, tzinfo=utc), 3.0),
+            (2, TS(2024, 1, 3, 9, tzinfo=utc), 4.0),
+            (1, TS(2024, 3, 9, 16, 30, tzinfo=utc), 5.0),
+            (2, TS(2024, 11, 3, 6, 10, tzinfo=utc), 6.0),
         ],
         "user_id bigint, ts timestamp, value double",
     )
@@ -1664,6 +1687,13 @@ def test_pandas_spine_matches_spark_spine_and_runs_no_preamble_job(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        want = pd.to_datetime(
+            pdf["event_timestamp"], utc=True, format="ISO8601"
+        ).min().floor("us")
+        assert lo.utcoffset() == timedelta(0) and lo == want, (name, lo)
+        if name == "dst":
+            got = {(r.user_id, r.v__value, r.ttl__value) for r in out.collect()}
+            assert got == {(1, 5.0, 5.0), (2, 6.0, 6.0)}, got
         spark_spine, _ = _ensure_spine(spark, pdf)
         twin = SparkOfflineStore.get_historical_features(
             spark, spark_spine, views, full_feature_names=True
@@ -1746,13 +1776,24 @@ _WIDEN_CASES = [
      [(1, "2024-11-03 06:30:00"), (2, "2024-11-03 05:10:00")],
      [(1, "2024-11-03 06:20:00"), (1, "2024-11-03 06:40:00"),
       (2, "2024-11-03 04:35:00"), (2, "2024-11-03 04:50:00")]),
+    # a 1-day TTL or tolerance across New York's 2024-03-10 spring-forward
+    # change spans 24 h of instants, 23 h of a New York driver's wall clock
+    ("dst_ttl_across_spring_forward", "UTC", 86400,
+     [(1, "2024-03-10 16:00:00")],
+     [(1, "2024-03-09 15:59:59"), (1, "2024-03-09 16:00:00"),
+      (1, "2024-03-09 16:30:00")]),
+    ("dst_tolerance_across_spring_forward", "UTC", 86400,
+     [(1, "2024-03-09 16:00:00")],
+     [(1, "2024-03-08 16:00:00"), (1, "2024-03-10 15:30:00"),
+      (1, "2024-03-10 16:00:01")]),
 ]
 
 
 def _widen_frames(spark, tmp_path, kind, spine_rows, feat_rows):
     """(spine, feature source) of one case as parquet-backed frames
     whose time column is a TIMESTAMP (``micros``), a raw TIMESTAMP(NANOS)
-    column converted by ``read_parquet`` (``nanos``) or TIMESTAMP_NTZ."""
+    column converted by ``read_parquet`` (``nanos``) or TIMESTAMP_NTZ;
+    ``mixed`` is a TIMESTAMP spine against a TIMESTAMP_NTZ source."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1760,34 +1801,37 @@ def _widen_frames(spark, tmp_path, kind, spine_rows, feat_rows):
 
     fid = list(range(len(feat_rows)))
     path = str(tmp_path / f"{kind}_feat_{len(list(tmp_path.iterdir()))}")
-    if kind == "ntz":
+    if kind in ("ntz", "mixed"):
         spark.createDataFrame(
             [(k, s, float(i)) for i, (k, s) in zip(fid, feat_rows)],
             "k bigint, s string, v double",
         ).select("k", F.to_timestamp_ntz("s").alias("ts"), "v").write.parquet(path)
         feat = spark.read.parquet(path)
+    if kind == "ntz":
         spine = spark.createDataFrame(
             [(k, i, s) for i, (k, s) in enumerate(spine_rows)],
             "k bigint, sid bigint, s string",
         ).select("k", "sid", F.to_timestamp_ntz("s").alias("event_timestamp"))
         return spine, feat
-    # a nanos tail below the microsecond truncates away on read
-    ts = (
-        pa.array([_us(s) for _, s in feat_rows], pa.timestamp("us", tz="UTC"))
-        if kind == "micros"
-        else pa.array([_us(s) * 1000 + 500 for _, s in feat_rows],
-                      pa.timestamp("ns", tz="UTC"))
-    )
-    pq.write_table(
-        pa.table({"k": [k for k, _ in feat_rows], "ts": ts,
-                  "v": [float(i) for i in fid]}),
-        path + ".parquet", version="2.6", coerce_timestamps=None,
-    )
+    if kind != "mixed":
+        # a nanos tail below the microsecond truncates away on read
+        ts = (
+            pa.array([_us(s) for _, s in feat_rows], pa.timestamp("us", tz="UTC"))
+            if kind == "micros"
+            else pa.array([_us(s) * 1000 + 500 for _, s in feat_rows],
+                          pa.timestamp("ns", tz="UTC"))
+        )
+        pq.write_table(
+            pa.table({"k": [k for k, _ in feat_rows], "ts": ts,
+                      "v": [float(i) for i in fid]}),
+            path + ".parquet", version="2.6", coerce_timestamps=None,
+        )
+        feat = read_parquet(spark, path + ".parquet")
     spine = spark.createDataFrame(
         [(k, i, _us(s)) for i, (k, s) in enumerate(spine_rows)],
         "k bigint, sid bigint, u bigint",
     ).select("k", "sid", F.timestamp_micros("u").alias("event_timestamp"))
-    return spine, read_parquet(spark, path + ".parquet")
+    return spine, feat
 
 
 def _brute_widen(spine_rows, feat_rows, mode, tol_s):
@@ -1818,19 +1862,26 @@ def _brute_widen(spine_rows, feat_rows, mode, tol_s):
     return out
 
 
-@pytest.mark.parametrize("kind", ["micros", "nanos", "ntz"])
-def test_prefilter_whole_hour_widening_is_exact(spark, tmp_path, kind):
+@pytest.mark.parametrize("kind", ["micros", "nanos", "ntz", "mixed"])
+def test_prefilter_whole_hour_widening_is_exact(
+    spark, tmp_path, kind, new_york_driver
+):
     """The as-of prefilters widen their bounds to whole hours of the
     column's time space; results must equal the brute-force oracle for
-    rows in every widened margin, a spine maximum on the hour and bounds
-    in a DST gap or repeated hour, under three PIT strategies and every
-    ``asof_join`` direction. The scan still carries the bounds."""
+    rows in every widened margin, a spine maximum on the hour, bounds in
+    a DST gap or repeated hour and a TTL or tolerance across a DST
+    change, under three PIT strategies and every ``asof_join`` direction,
+    with the driver in New York. The scan still carries the bounds.
+    ``mixed`` (a TIMESTAMP spine, a TIMESTAMP_NTZ source) runs under the
+    engine's UTC session, where NTZ values are UTC wall clocks."""
     from feast_ibm_spark.operators.asof import asof_join
     from feast_ibm_spark.plans.inspect import pushed_filters
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         for name, zone, tol, spine_rows, feat_rows in _WIDEN_CASES:
+            if kind == "mixed" and zone != "UTC":
+                continue
             spark.conf.set("spark.sql.session.timeZone", zone)
             spine, feat = _widen_frames(spark, tmp_path, kind, spine_rows, feat_rows)
             view = FeatureViewSpec("fv", feat, ["k"], ["v"], "ts", ttl_seconds=tol)

@@ -3,7 +3,7 @@ objects (feast itself is not installed in this environment; the adapter
 defers all feast imports, so ducks with the right attributes exercise the
 full mapping + execution path)."""
 
-from datetime import datetime as TS, timedelta
+from datetime import datetime as TS, timedelta, timezone
 from types import SimpleNamespace
 
 import pandas as pd
@@ -14,6 +14,10 @@ from feast_ibm_spark.feast_adapter import (
     _source_to_engine,
     _view_to_spec,
 )
+
+# the feature rows are UTC instants, as the pandas spines' naive
+# timestamps read in the engine's UTC session zone
+UTC = timezone.utc
 
 
 def _duck_source(tmp_path_or_table):
@@ -32,9 +36,9 @@ def _duck_source(tmp_path_or_table):
 def _duck_view(spark):
     feat = spark.createDataFrame(
         [
-            (1001, TS(2021, 4, 12, 10, 0), TS(2021, 4, 12, 10, 0), 1.0),
-            (1001, TS(2021, 4, 12, 8, 0), TS(2021, 4, 12, 8, 0), 0.5),
-            (1002, TS(2021, 4, 12, 8, 0), TS(2021, 4, 12, 8, 0), 2.0),
+            (1001, TS(2021, 4, 12, 10, 0, tzinfo=UTC), TS(2021, 4, 12, 10, 0, tzinfo=UTC), 1.0),
+            (1001, TS(2021, 4, 12, 8, 0, tzinfo=UTC), TS(2021, 4, 12, 8, 0, tzinfo=UTC), 0.5),
+            (1002, TS(2021, 4, 12, 8, 0, tzinfo=UTC), TS(2021, 4, 12, 8, 0, tzinfo=UTC), 2.0),
         ],
         "driver_id bigint, event_timestamp timestamp, created timestamp, conv_rate double",
     )

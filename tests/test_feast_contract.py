@@ -25,12 +25,16 @@ from __future__ import annotations
 import inspect
 import json
 import os
-from datetime import datetime as TS, timedelta
+from datetime import datetime as TS, timedelta, timezone
 
 import pandas as pd
 
 from feast_ibm_spark.feast_adapter import SparkFeastOfflineStore
 from feast_ibm_spark.retrieval import SparkRetrievalJob
+
+# the feature rows are UTC instants, as the pandas spines' naive
+# timestamps read in the engine's UTC session zone
+UTC = timezone.utc
 
 CONTRACT = json.load(
     open(os.path.join(os.path.dirname(__file__), "fixtures",
@@ -92,10 +96,10 @@ def _driver_scenario(spark):
     3-driver entity frame, PIT-expected conv_rate values."""
     feat = spark.createDataFrame(
         [
-            (1001, TS(2021, 4, 12, 10, 0), TS(2021, 4, 12, 10, 0), 1.0),
-            (1001, TS(2021, 4, 12, 8, 0), TS(2021, 4, 12, 8, 0), 0.5),
-            (1002, TS(2021, 4, 12, 7, 0), TS(2021, 4, 12, 7, 0), 2.0),
-            (1003, TS(2021, 4, 12, 16, 0), TS(2021, 4, 12, 16, 0), 3.0),
+            (1001, TS(2021, 4, 12, 10, 0, tzinfo=UTC), TS(2021, 4, 12, 10, 0, tzinfo=UTC), 1.0),
+            (1001, TS(2021, 4, 12, 8, 0, tzinfo=UTC), TS(2021, 4, 12, 8, 0, tzinfo=UTC), 0.5),
+            (1002, TS(2021, 4, 12, 7, 0, tzinfo=UTC), TS(2021, 4, 12, 7, 0, tzinfo=UTC), 2.0),
+            (1003, TS(2021, 4, 12, 16, 0, tzinfo=UTC), TS(2021, 4, 12, 16, 0, tzinfo=UTC), 3.0),
         ],
         "driver_id bigint, event_timestamp timestamp, created timestamp, "
         "conv_rate double",

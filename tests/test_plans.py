@@ -954,8 +954,8 @@ def test_pit_auto_escalates_to_salted_on_hot_spine(spark):
     from feast_ibm_spark.operators import pit_join as pj
 
     small = spine.limit(100)
-    orig = pj._spine_hot_key_max
-    pj._spine_hot_key_max = lambda *a, **k: (_ for _ in ()).throw(
+    orig = pj.SpineFacts.hot_key_max
+    pj.SpineFacts.hot_key_max = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("histogram probe must not run below the budget")
     )
     try:
@@ -964,7 +964,7 @@ def test_pit_auto_escalates_to_salted_on_hot_spine(spark):
         )
         plan_small = out._jdf.queryExecution().executedPlan().toString()
     finally:
-        pj._spine_hot_key_max = orig
+        pj.SpineFacts.hot_key_max = orig
     assert "__carry_in" not in plan_small
 
 

@@ -399,12 +399,14 @@ def test_filter_ts_range_nanos_boundaries_randomized(spark, tmp_path):
 
 
 def test_nanos_prefilter_reads_naive_bounds_in_the_driver_zone(spark, tmp_path):
-    """Naive datetime bounds convert as ``F.lit`` converts them, in the
-    driver's zone, on every branch of ``filter_ts_range``: the spine
-    facts hand them over that way. Under a New York driver the nanos
-    branch once read them as UTC, dropping the 08:00 and 11:00 rows for
-    a 12:00 UTC spine. The repeated hour's second pass (fold=1) keeps
-    its fold."""
+    """A pandas spine retrieves the same rows under a UTC and a New York
+    driver, on the nanos and the micros branch of ``filter_ts_range``.
+    Under a New York driver the nanos branch once read naive bounds as
+    UTC, dropping the 08:00 and 11:00 rows for a 12:00 UTC spine, and a
+    spine maximum in the repeated hour (06:30 UTC is New York's second
+    01:30) once landed an hour early. The spine facts now hand over
+    aware UTC bounds; a naive datetime bound still converts as ``F.lit``
+    converts it, in the driver's zone."""
     import os
     import time
 
