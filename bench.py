@@ -169,7 +169,11 @@ def time_query(spark, name: str, sf_dir: str, n_runs: int):
         t0 = time.time()
         df = qd.fn(spark, sf_dir)
         build_s = time.time() - t0
-        # full materialization without driver transfer of payloads
+        # the result's row count, without driver transfer of payloads. Not
+        # a full materialization: Catalyst prunes what the count cannot
+        # see (the melt's Window and join-back vanish from
+        # pit_join_union_window's plan), so an A/B of plan shapes writes
+        # every column with df.write.format("noop") instead
         n = df.count()
         wall = time.time() - t0
         runs.append((wall, {"build_s": build_s, **spark_counters(spark, group)}))

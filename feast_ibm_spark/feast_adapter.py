@@ -103,16 +103,6 @@ def _view_to_spec(
         getattr(f, "name", f)
         for f in (getattr(view, "features", None) or getattr(view, "schema", []))
     ]
-    # physical-design introspection: a catalog table bucketed on the
-    # join keys lets the PIT auto strategy pick the zero-feature-shuffle
-    # broadcast plan (sources/bucketed.py; pit_join.FeatureViewSpec)
-    bucketed_on = None
-    if src.table is not None:
-        from .sources.bucketed import bucket_spec
-
-        spec = bucket_spec(spark, src.table)
-        if spec is not None:
-            bucketed_on = spec[0]
     return FeatureViewSpec(
         name=view.name,
         source=src.load(spark),
@@ -122,7 +112,6 @@ def _view_to_spec(
         created_timestamp_column=src.created_timestamp_column,
         ttl_seconds=ttl_seconds,
         field_mapping={},  # already applied by SparkDataSource.load
-        bucketed_on=bucketed_on,
     )
 
 

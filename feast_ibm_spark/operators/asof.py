@@ -25,8 +25,9 @@ Every left row survives (LEFT join), NULL right columns on no match —
 same spine-preservation contract as the PIT join (reference ``:765-778``).
 
 Both as-of operators share this module's core: ``SpineFacts``, the one
-spine probe, and ``asof_winners``, the one range-join builder (the PIT
-``broadcast``/``shuffle`` strategies call it backward, TTL as tolerance).
+spine probe, ``asof_winners``, the one range-join builder (the PIT
+``range_join`` strategy calls it backward, TTL as tolerance), and
+``BROADCAST_ROWS``, the spine size up to which both broadcast it.
 
 Physical plan (same scale playbook as the PIT join): the right side is
 prefiltered to ``[min(left.ts) - t, max(left.ts) + t]`` via
@@ -34,15 +35,16 @@ prefiltered to ``[min(left.ts) - t, max(left.ts) + t]`` via
 widen outward to whole hours (``prefilter=True``): codegen inlines them
 as literals into the compiled scan, and whole-hour literals let joins
 whose bounds share their hours reuse the compiled classes. The candidate
-join's own range condition keeps the result exact. The deduped
-``(keys, ts)`` left side is hint-broadcast (strategy ``broadcast``) so the
-candidate join is a BroadcastHashJoin on the keys with the range predicate
-applied post-join, followed by ONE rn=1 window — Spark 4 plants a
-map-side Partial WindowGroupLimit before the window's exchange, so at most
-one candidate per (key, ts) group per task crosses the wire; the winners
-(one row per distinct left (keys, ts)) are hint-broadcast into the final
-LEFT join too. Strategy ``shuffle`` is for a left side too big to
-broadcast: it hints neither join and lets AQE choose from runtime sizes.
+join's own range condition keeps the result exact. A left side of at
+most ``BROADCAST_ROWS`` rows (its count comes from the same aggregate as
+the bounds, so sizing costs no job) has its deduped ``(keys, ts)``
+hint-broadcast, so the candidate join is a BroadcastHashJoin on the keys
+with the range predicate applied post-join, followed by ONE rn=1 window —
+Spark 4 plants a map-side Partial WindowGroupLimit before the window's
+exchange, so at most one candidate per (key, ts) group per task crosses
+the wire; the winners (one row per distinct left (keys, ts)) are
+hint-broadcast into the final LEFT join too. A larger left side hints
+neither join and lets AQE choose from runtime sizes.
 
 Timestamp arithmetic is done in exact INTERVAL subtraction (day-time
 intervals carry integer microseconds) — never float seconds — so the
@@ -65,6 +67,10 @@ from pyspark.sql.window import Window
 from ..sources.reader import filter_ts_range
 
 _DIRECTIONS = ("backward", "forward", "nearest")
+
+# Spine (left side) rows up to which the as-of range join broadcasts it;
+# also the default of ``point_in_time_join(auto_broadcast_rows=)``.
+BROADCAST_ROWS = 5_000_000
 
 
 class SpineFacts:
@@ -193,7 +199,6 @@ def asof_join(
     direction: str = "backward",
     tolerance_seconds: int = 0,
     tiebreak: str | None = None,
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """As-of join ``right`` onto ``left``.
 
@@ -202,17 +207,17 @@ def asof_join(
     be empty for a keyless (global-timeline) as-of join. ``tiebreak``
     names a unique right column ordering equal-distance / equal-timestamp
     candidates (descending); required for deterministic output when
-    ``right_ts`` is not unique per key.
+    ``right_ts`` is not unique per key. A left side of at most
+    ``BROADCAST_ROWS`` rows is broadcast (module docstring).
     """
     if direction not in _DIRECTIONS:
         raise ValueError(f"direction must be one of {_DIRECTIONS}")
     if direction == "nearest" and not tolerance_seconds:
         raise ValueError("nearest requires a tolerance_seconds bound")
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy: {strategy}")
 
     facts = SpineFacts(left, left_ts)
     lo, hi = facts.lo, facts.hi
+    broadcast = facts.n_rows <= BROADCAST_ROWS
     tol = timedelta(seconds=tolerance_seconds)
 
     # Prefilter the right side to the reachable window before the join —
@@ -229,13 +234,13 @@ def asof_join(
 
     key_ts = [*on, left_ts]
     left_keys = facts.distinct(key_ts)
-    if strategy == "broadcast":
+    if broadcast:
         left_keys = F.broadcast(left_keys)
     winners = asof_winners(
         left_keys, r, on, left_ts, right_ts, right_columns,
         direction, tolerance_seconds, tiebreak,
     )
-    if strategy == "broadcast":
+    if broadcast:
         # at most one winner row per distinct (keys, ts): left never
         # shuffles for the join-back
         winners = F.broadcast(winners)

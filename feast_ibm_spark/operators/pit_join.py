@@ -29,12 +29,14 @@ Deliberate fixes vs the reference (documented compat deltas):
   columns — two fewer self-joins.
 
 Physical strategies (chosen for 100 TB; see SURVEY.md §4):
-- ``broadcast``  — hint-broadcast the deduped spine; the PIT range join
-  becomes a BroadcastHashJoin on the entity keys with the range predicate
-  as a post-join filter, then one window per spine row. Right when
-  spine ≪ features (the common Feast case).
-- ``shuffle``    — no hint; AQE picks SMJ/broadcast at runtime from real
-  sizes and splits skewed keys.
+- ``range_join`` — the as-of range join (``asof.asof_winners``): an equi
+  join on the entity keys with the range predicate as a post-join filter,
+  then one window per distinct spine (keys, ts). The spine's row count
+  sizes it: at or under ``auto_broadcast_rows`` (the gate every PIT
+  broadcast decision uses) the deduped spine and the winners are
+  hint-broadcast, so the join is a BroadcastHashJoin and the feature side
+  never shuffles on the key; above it neither is hinted and AQE picks
+  the join from runtime sizes, so a large spine is never broadcast.
 - ``union_window`` ("melt") — tag + union spine and feature rows, ONE
   shuffle on the entity key, sort by (ts, tag), and take
   ``last(features, ignorenulls=True)`` over an unbounded-preceding window;
@@ -55,9 +57,10 @@ Physical strategies (chosen for 100 TB; see SURVEY.md §4):
   rows / 50%-hot key): melt beats broadcast/shuffle at BOTH a selective
   300-row spine (0.35s vs 0.85/0.75s) and a full-key 37.5k-row spine
   (0.45s vs 3.4/3.3s), hot key included — so ``auto`` melts by default
-  (one carve-out: sources bucketed on the join keys go broadcast, whose
-  feature lineage then plans with zero exchanges; the melt's spine union
-  would discard the bucketed distribution — measured, test-pinned).
+  (one carve-out: sources whose plan is hash-partitioned on the join keys
+  — bucketed tables — take the broadcast range join, whose feature
+  lineage then plans with zero exchanges; the melt's spine union would
+  discard the bucketed distribution — measured, test-pinned).
   With a broadcast-sized spine the melt adds a LEFT SEMI key prune of the
   feature side (``prune_keys``) so the window shuffle carries only the
   requested keys' history — the property that matters at 100 TB, where
@@ -92,12 +95,12 @@ ttl`` fails every view's TTL check.
 
 Hot-key skew (measured; pinned by test_plans.py::
 test_pit_strategies_absorb_hot_key_skew): AQE's OptimizeSkewedJoin never
-fires on the ``shuffle`` strategy's candidate join — the rule matches only
+fires on the range join's shuffle side — the rule matches only
 SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) and the spine side always
 carries its dedup aggregate between the shuffle and the join — so a hot
 entity key lands in one sorted partition (spills, completes, straggles at
-extreme scale). For skewed spines prefer ``broadcast``: the feature side
-never shuffles on the key, and Spark 4 plants a map-side Partial
+extreme scale). The broadcast side absorbs it: the feature side never
+shuffles on the key, and Spark 4 plants a map-side Partial
 WindowGroupLimit before the rn=1 window's exchange, shipping at most one
 row per (key, ts) group per task — the hot key's fanout never crosses the
 wire. ``union_window`` concentrates each key in one window partition;
@@ -114,7 +117,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
-from .asof import SpineFacts, asof_winners
+from .asof import BROADCAST_ROWS, SpineFacts, asof_winners
 
 
 @dataclass
@@ -137,14 +140,6 @@ class FeatureViewSpec:
     # PartitionFilters: row-group pruning alone cannot skip directories
     # whose timestamp column is not itself the partition key.
     date_partition_column: str | None = None
-    # Columns the source table is hash-bucketed on (sources/bucketed.py
-    # ``bucket_spec`` reads them from the catalog). When they cover the
-    # join keys, the feature side already carries hashpartitioning(keys)
-    # from the scan, so the BROADCAST strategy runs with ZERO feature-side
-    # exchanges (measured: 8 -> 6 whole-plan exchanges; the remaining two
-    # are the spine's own) — and ``auto`` prefers it over the melt, whose
-    # union discards the bucketed distribution (measured: no saving).
-    bucketed_on: list[str] | None = None
 
 
 def _out_name(view: FeatureViewSpec, feat: str, full_feature_names: bool) -> str:
@@ -158,14 +153,16 @@ def point_in_time_join(
     full_feature_names: bool = False,
     strategy: str = "auto",
     facts: SpineFacts | None = None,
-    auto_broadcast_rows: int = 5_000_000,
+    auto_broadcast_rows: int = BROADCAST_ROWS,
     salt_partition_budget_rows: int | None = 4_000_000,
 ) -> DataFrame:
     """Join every FeatureView onto the spine as-of the spine timestamp.
 
     ``strategy``: ``auto`` (the default on every entry point) |
-    ``broadcast`` | ``shuffle`` | ``union_window`` |
-    ``union_window_salted`` (see module docstring). ``auto`` (re-derived
+    ``range_join`` | ``union_window`` | ``union_window_salted`` (see
+    module docstring). ``range_join`` broadcasts the spine side when the
+    spine has at most ``auto_broadcast_rows`` rows and shuffles it
+    otherwise. ``auto`` (re-derived
     round 4 from the skew benchmark, NOTES.md "PIT strategy choice"):
     the melt is the winning
     physical shape at every measured spine size — it never multiplies
@@ -183,11 +180,13 @@ def point_in_time_join(
     one key's spine rows exceed the budget — the whale-key partition
     bound, measurement-backed (NOTES.md round 7 "hot-SPINE salted-melt
     crossover"). ``salt_partition_budget_rows=None`` disables the probe.
-    ``shuffle`` has never beaten the melt: interleaved runs of
-    ``pit_join_shuffle`` against ``pit_join_union_window`` at sf0.1 and
-    on its 10x copy lost 9/9 pairs at both scales (0.71 vs 0.48 s and
-    0.89 vs 0.50 s median, 3-4x the shuffle bytes; NOTES.md "One as-of
-    core"). It stays for callers that want AQE to pick the join.
+    With every column materialized (a ``noop`` write; a ``count()``
+    prunes the melt's Window and join away and times less work), the
+    range join's two sides tie and both beat the plain melt on one spine
+    row per key: median 0.66 s broadcast, 0.67 s shuffle, 0.98 s melt at
+    sf0.1, and 1.03, 0.88 and 1.75 s on its 10x copy (NOTES.md "Does
+    ``shuffle`` ever beat the melt?"). The pandas-spine ``training_set``
+    shape still wants the melt, so ``auto``'s choices stand.
     All spine columns
     (including label/pass-through columns, reference
     ``tests/test_integration.py:160``) survive to the output, followed by
@@ -214,9 +213,7 @@ def point_in_time_join(
     preamble runs no Spark job; for any spine, the object its job
     metadata reads too, so the range aggregate runs at most once.
     """
-    if strategy not in (
-        "broadcast", "shuffle", "union_window", "union_window_salted", "auto"
-    ):
+    if strategy not in ("auto", "range_join", "union_window", "union_window_salted"):
         raise ValueError(f"unknown strategy: {strategy}")
     if salt_partition_budget_rows is not None and salt_partition_budget_rows <= 0:
         raise ValueError(
@@ -245,24 +242,15 @@ def point_in_time_join(
     salted_keys: set[tuple] = set()
     if strategy == "auto":
         # bucketed carve-out: when every view's source is bucketed on its
-        # join keys, the broadcast strategy's feature lineage needs no
+        # join keys, the broadcast range join's feature lineage needs no
         # exchange at all — strictly better than the melt, which unions
         # the spine in and thereby discards the bucketed distribution.
-        # The carve-out still BROADCASTS the spine's distinct key set (and
-        # the winners frame), so it is gated on auto_broadcast_rows like
-        # every other broadcast decision: a spine above the cap falls back
-        # to the melt even over bucketed sources — losing the bucketed
-        # distribution beats a driver/executor OOM on the broadcast build.
-        if (
-            feature_views
-            and small_spine
-            and all(
-                v.bucketed_on is not None
-                and set(v.bucketed_on) <= set(v.join_keys)
-                for v in feature_views
-            )
-        ):
-            strategy = "broadcast"
+        # Only a broadcast-sized spine takes it: the gain is the broadcast
+        # side's exchange-free feature lineage, and a larger spine would
+        # run the shuffle side, whose hot keys AQE cannot split (module
+        # docstring), so it melts even over bucketed sources.
+        if feature_views and small_spine and all(map(_bucketed_on_keys, feature_views)):
+            strategy = "range_join"
         else:
             strategy = "union_window"
             # Hot-spine escalation (round 7, VERDICT r6 item 3): a key
@@ -307,7 +295,7 @@ def point_in_time_join(
         else:
             winners.append((view.join_keys, _join_winners(
                 view, spine_timestamp_field, full_feature_names, lo, hi,
-                broadcast_spine=(strategy == "broadcast"), facts=facts,
+                broadcast_spine=small_spine, facts=facts,
             )))
     out = spine
     for i, views in enumerate(melt_groups.values()):
@@ -330,6 +318,25 @@ def point_in_time_join(
     return out.select(*[_col(c) for c in [*spine_cols, *names]])
 
 
+def _bucketed_on_keys(view: FeatureViewSpec) -> bool:
+    """Whether the view's source comes out of its scan hash-partitioned on
+    join keys alone (a table bucketed on them): its planned
+    ``outputPartitioning`` is a ``HashPartitioning`` over attributes that
+    ``field_mapping`` names as join keys. Planning runs no job. The
+    ``sparkPlan``, not the ``executedPlan``: the preparation rule
+    ``DisableUnnecessaryBucketedScan`` drops the bucketing of a bare scan
+    that nothing above it uses yet."""
+    part = view.source._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    exprs = part.expressions()
+    return all(
+        e.getClass().getSimpleName() == "AttributeReference"
+        and view.field_mapping.get(e.name(), e.name()) in view.join_keys
+        for e in map(exprs.apply, range(exprs.size()))
+    )
+
+
 def _col(name: str):
     """The column called ``name``, whatever characters it holds."""
     return F.col("`" + name.replace("`", "``") + "`")
@@ -342,20 +349,27 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
     ts <= max_spine_ts always; lower bound ts >= min_spine_ts - max(ttl)
     only when no view in the arm has TTL 0. The widest view's range is
     exact for every view because each one post-checks its own TTL. The
-    range predicate is routed through filter_ts_range so it reaches the
-    parquet scan even on nanos-timestamp sources, and widens there to
-    whole hours (``prefilter=True``, see the module docstring)."""
+    range predicate is routed through filter_ts_range, on the source
+    before its ``field_mapping`` rename and partition filter, so it
+    reaches the parquet scan even on nanos-timestamp sources, and widens
+    there to whole hours (``prefilter=True``, see the module docstring)."""
     import datetime as _dt
 
     from ..sources.reader import bound_date, filter_ts_range
 
     view = arm[0]
-    feat = view.source
-    if view.field_mapping:
-        feat = feat.withColumnsRenamed(view.field_mapping)
     lo_bound = None
     if lo is not None and all(v.ttl_seconds for v in arm):
         lo_bound = lo - _dt.timedelta(seconds=max(v.ttl_seconds for v in arm))
+    # the range filter goes on the source as loaded, before any rename or
+    # filter: a nanos source's raw-space pushdown rides only that frame
+    src_ts = next(
+        (c for c, m in view.field_mapping.items() if m == view.timestamp_field),
+        view.timestamp_field,
+    )
+    feat = filter_ts_range(view.source, src_ts, lo_bound, hi, prefilter=True)
+    if view.field_mapping:
+        feat = feat.withColumnsRenamed(view.field_mapping)
     if view.date_partition_column is not None:
         # Reference :665-667 / :671-673: string compare on the partition
         # column using the date of the timestamp bounds — in the session
@@ -369,7 +383,6 @@ def _prepared_feature_side(arm: list[FeatureViewSpec], lo, hi) -> DataFrame:
             feat = feat.filter(dpc <= bound_date(feat.sparkSession, hi, ntz))
         if lo_bound is not None:
             feat = feat.filter(dpc >= bound_date(feat.sparkSession, lo_bound, ntz))
-    feat = filter_ts_range(feat, view.timestamp_field, lo_bound, hi, prefilter=True)
     cols = [
         *view.join_keys,
         view.timestamp_field,
@@ -388,13 +401,15 @@ def _join_winners(
     broadcast_spine: bool,
     facts: SpineFacts,
 ) -> DataFrame:
-    """As-of winners of one view by range join (``broadcast``/``shuffle``):
+    """As-of winners of one view by range join (``range_join``):
     the shared builder (``asof.asof_winners``), backward with the TTL as
     its tolerance and ``created`` DESC as its tiebreak (the reference's
     dedup/latest/cleaned CTE chain ``:703-756`` in one window), over the
     spine's distinct (keys, ts) — the per-view spine dedup CTE
     (``:626-636``) — so the join and window run once per unique
-    entity/timestamp, not once per spine row."""
+    entity/timestamp, not once per spine row. ``broadcast_spine`` (the
+    spine is broadcast-sized) hints both the distinct spine and the
+    winners."""
     spine_keys = facts.distinct([*view.join_keys, spine_ts])
     if broadcast_spine:
         spine_keys = F.broadcast(spine_keys)

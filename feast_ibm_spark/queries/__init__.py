@@ -54,11 +54,11 @@ QUERIES: dict[str, QueryDef] = {
     "pull_latest_per_key": QueryDef(q_pull_latest_per_key, ORACLE_PULL_LATEST,
                                     "A1+J2->W1 latest per key"),
     "pit_join_ttl": QueryDef(q_pit_join_ttl, ORACLE_PIT_TTL,
-                             "J1 flagship as-of join, TTL=1d (broadcast)"),
+                             "J1 flagship as-of join, TTL=1d (range join)"),
     "pit_join_nottl": QueryDef(q_pit_join_nottl, ORACLE_PIT_NOTTL,
                                "J1 as-of join, TTL=0 (no lower bound)"),
     "pit_join_shuffle": QueryDef(q_pit_join_shuffle, ORACLE_PIT_TTL,
-                                 "as-of join via the sort-merge strategy"),
+                                 "as-of join via the range join's shuffle side"),
     "pit_join_union_window": QueryDef(q_pit_join_union_window, ORACLE_PIT_TTL,
                                       "J1 via melt/union-window strategy"),
     "pit_join_multiview": QueryDef(q_pit_join_multiview, ORACLE_PIT_MULTIVIEW,

@@ -97,7 +97,7 @@ def _pit_spine(ev: DataFrame) -> DataFrame:
     )
 
 
-def _pit_query(spark, sf_dir, ttl, strategy):
+def _pit_query(spark, sf_dir, ttl, strategy, **kwargs):
     ev = _t(spark, sf_dir, "events")
     spine = _pit_spine(ev)
     view = FeatureViewSpec(
@@ -109,15 +109,15 @@ def _pit_query(spark, sf_dir, ttl, strategy):
         created_timestamp_column="event_id",  # unique tiebreak
         ttl_seconds=ttl,
     )
-    return point_in_time_join(spine, [view], strategy=strategy)
+    return point_in_time_join(spine, [view], strategy=strategy, **kwargs)
 
 
 def q_pit_join_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pit_query(spark, sf_dir, PIT_TTL, "broadcast")
+    return _pit_query(spark, sf_dir, PIT_TTL, "range_join")
 
 
 def q_pit_join_nottl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pit_query(spark, sf_dir, 0, "broadcast")
+    return _pit_query(spark, sf_dir, 0, "range_join")
 
 
 def q_pit_join_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,10 +127,10 @@ def q_pit_join_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pit_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics via the shuffle (sort-merge range join) strategy —
-    the middle path when the spine outgrows a broadcast but stays far
-    smaller than the feature table. Same oracle must match."""
-    return _pit_query(spark, sf_dir, PIT_TTL, "shuffle")
+    """Same semantics via the range join's shuffle side (pinned by
+    ``auto_broadcast_rows=0``): the path a spine too big to broadcast
+    takes, AQE picking the join. Same oracle must match."""
+    return _pit_query(spark, sf_dir, PIT_TTL, "range_join", auto_broadcast_rows=0)
 
 
 def _oracle_pit(ttl_clause: str) -> str:
@@ -450,7 +450,7 @@ def q_streaming_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain_writer(
             streaming_pit_join(spine_stream, [view], sink=_sink,
-                               strategy="broadcast"),
+                               strategy="range_join"),
             "streaming_pit_join",
         )
     return spark.read.parquet(out_dir)

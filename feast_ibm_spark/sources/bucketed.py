@@ -16,6 +16,12 @@ of physical-design lever owning the engine makes available.
 
 ``sortBy`` on the same key additionally persists within-bucket order, so
 sort-merge joins skip their sort stage too.
+
+A bucketed table needs no label for the PIT join either: the planned
+scan of ``spark.table(name)`` reports ``hashpartitioning(bucket_cols)``
+as its output partitioning (through renames and filters too), and
+``point_in_time_join``'s ``auto`` strategy reads that from the source's
+plan to take the zero-feature-exchange range join.
 """
 
 from __future__ import annotations
@@ -56,19 +62,3 @@ def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str) -> bool
     cat = spark.catalog
     return cat.tableExists(table_a) and cat.tableExists(table_b)
 
-
-def bucket_spec(spark: SparkSession, table: str) -> tuple[list[str], int] | None:
-    """(bucket_columns, n_buckets) of a catalog table, or None when the
-    table is unbucketed/absent. Read from DESCRIBE EXTENDED (public SQL
-    surface, no internal catalog APIs) so callers — e.g. the PIT join's
-    ``auto`` strategy — can detect that a feature table already pays its
-    key shuffle at write time."""
-    if not spark.catalog.tableExists(table):
-        return None
-    rows = {r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()}
-    if "Num Buckets" not in rows:
-        return None
-    n = int(rows["Num Buckets"])
-    cols = [c.strip(" `") for c in rows["Bucket Columns"].strip("[]").split(",")]
-    return cols, n

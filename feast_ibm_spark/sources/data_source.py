@@ -124,7 +124,9 @@ class SparkDataSource:
         reference ``:306-310``, ``:222-226``), with field_mapping applied."""
         df = self._load_raw(spark)
         if self.field_mapping:
-            df = df.withColumnsRenamed(self.field_mapping)
+            from .reader import rename_columns
+
+            df = rename_columns(df, self.field_mapping)
         return df
 
     def _load_raw(self, spark: SparkSession) -> DataFrame:

@@ -234,13 +234,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """
     schema, nanos = _footer_schema(spark, path)
     raw = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    if not nanos:
-        return raw
+    return _nanos_frame(raw, nanos) if nanos else raw
+
+
+def _nanos_frame(raw: DataFrame, nanos) -> DataFrame:
+    """``raw`` with its ``nanos`` columns converted, and the
+    pre-conversion frame stashed so that ``filter_ts_range`` can push
+    range predicates down to the parquet scan in raw-int64 space. Any
+    DataFrame call on the result drops the stash."""
     df = _convert_nanos(raw, nanos)
-    # stash the pre-conversion frame so filter_ts_range can push range
-    # predicates down to the parquet scan in raw-int64 space
     df._fis_nanos_raw = (raw, set(nanos))  # type: ignore[attr-defined]
     return df
+
+
+def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+    """``df.withColumnsRenamed(mapping)`` that keeps a nanos load's
+    stash (``_nanos_frame``): the raw frame is renamed and converted."""
+    info = getattr(df, "_fis_nanos_raw", None)
+    if info is None:
+        return df.withColumnsRenamed(mapping)
+    raw, cols = info
+    return _nanos_frame(
+        raw.withColumnsRenamed(mapping), [mapping.get(c, c) for c in cols]
+    )
 
 
 def _convert_nanos(raw: DataFrame, nanos) -> DataFrame:
@@ -392,10 +408,7 @@ def filter_ts_range(
         cond = c2 if cond is None else (cond & c2)
     if not nanos:
         return df.filter(cond) if cond is not None else df
-    filtered = raw.filter(cond) if cond is not None else raw
-    out = _convert_nanos(filtered, cols)
-    out._fis_nanos_raw = (filtered, cols)  # type: ignore[attr-defined]
-    return out
+    return _nanos_frame(raw.filter(cond) if cond is not None else raw, cols)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

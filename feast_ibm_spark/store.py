@@ -167,8 +167,11 @@ class SparkOfflineStore:
 
         ``strategy="auto"`` (the operator's default too): the key-pruned
         melt, measured fastest at every spine shape incl. 50%-hot keys
-        (NOTES.md "PIT strategy choice"); the explicit strategies remain
-        for callers with known shapes."""
+        (NOTES.md "PIT strategy choice"), or the broadcast range join when
+        every view's source is bucketed on its join keys; the explicit
+        strategies (``range_join``, ``union_window``,
+        ``union_window_salted``) remain for callers with known shapes.
+        The range join sizes itself from the spine's row count."""
         spine, facts = _ensure_spine(
             spark, entity_df, timestamp_field=spine_timestamp_field
         )

@@ -9,7 +9,7 @@ disallows directly on a streaming DataFrame (no window functions, no
 arbitrary multi-join chains). The standard scale pattern is
 ``foreachBatch``: every micro-batch of spine rows is a *bounded batch
 DataFrame*, so the full batch engine — including the engine's own
-``point_in_time_join`` with its auto/broadcast/shuffle/union_window
+``point_in_time_join`` with its auto/range_join/union_window
 strategies, TTL prefilter, and created-ts tiebreak — runs unchanged per
 trigger. Feature tables are re-resolved from source every batch, so a
 concurrent materialize job updating them is picked up on the next

@@ -53,8 +53,11 @@ def _brute_asof(left_rows, right_rows, direction, tol_s):
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-def test_asof_matches_brute_force_randomized(spark, direction):
-    """Both strategies, every direction, against the brute-force oracle."""
+def test_asof_matches_brute_force_randomized(spark, monkeypatch, direction):
+    """Both sides of the broadcast gate (the shuffle side by lowering
+    ``BROADCAST_ROWS`` below the left side's rows), every direction,
+    against the brute-force oracle."""
+    from feast_ibm_spark.operators import asof
     rng = random.Random(f"asof-{direction}")
     for trial in range(3):
         keys = ["a", "b", "c"]
@@ -73,11 +76,12 @@ def test_asof_matches_brute_force_randomized(spark, direction):
             right_rows, "k string, rts timestamp, rid long, val double"
         )
         expect = _brute_asof(left_rows, right_rows, direction, tol)
-        for strategy in ("broadcast", "shuffle"):
+        for strategy, rows in (("broadcast", asof.BROADCAST_ROWS), ("shuffle", 0)):
+            monkeypatch.setattr(asof, "BROADCAST_ROWS", rows)
             got = asof_join(
                 left, right, on=["k"], left_ts="lts", right_ts="rts",
                 right_columns=["val"], direction=direction,
-                tolerance_seconds=tol, tiebreak="rid", strategy=strategy,
+                tolerance_seconds=tol, tiebreak="rid",
             ).collect()
             # duplicated (k, lts) left rows each get the winner; compare
             # per row
@@ -87,10 +91,13 @@ def test_asof_matches_brute_force_randomized(spark, direction):
                     direction, strategy, trial, row)
 
 
-def test_asof_shuffle_strategy_broadcasts_nothing(spark):
-    """``shuffle`` is for a left side too big to broadcast: with
+def test_asof_shuffle_strategy_broadcasts_nothing(spark, monkeypatch):
+    """A left side above ``BROADCAST_ROWS`` is too big to broadcast: with
     automatic broadcasts off, its plan holds no broadcast at all — not
-    of the distinct left keys, not of the winners joined back."""
+    of the distinct left keys, not of the winners joined back. At or
+    under the constant, both are broadcast."""
+    from feast_ibm_spark.operators import asof
+
     left = spark.createDataFrame(
         [("a", _ts(100)), ("b", _ts(5))], "k string, lts timestamp"
     )
@@ -102,12 +109,18 @@ def test_asof_shuffle_strategy_broadcasts_nothing(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        for direction in ("backward", "forward", "nearest"):
+        def plan(direction):
             out = asof_join(left, right, ["k"], "lts", "rts", ["val"],
                             direction=direction, tolerance_seconds=3600,
-                            tiebreak="rid", strategy="shuffle")
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastExchange" not in plan, (direction, plan)
+                            tiebreak="rid")
+            return out, out._jdf.queryExecution().executedPlan().toString()
+
+        monkeypatch.setattr(asof, "BROADCAST_ROWS", 2)
+        assert plan("backward")[1].count("BroadcastExchange") == 2
+        monkeypatch.setattr(asof, "BROADCAST_ROWS", 1)
+        for direction in ("backward", "forward", "nearest"):
+            out, text = plan(direction)
+            assert "BroadcastExchange" not in text, (direction, text)
         got = {r.k: r.val for r in out.collect()}
         assert got == {"a": None, "b": 2.0}
     finally:

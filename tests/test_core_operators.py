@@ -113,7 +113,8 @@ def test_latest_per_key_keep_ties_compat(spark):
 @pytest.mark.parametrize("strategy", ["broadcast", "shuffle", "union_window"])
 def test_pit_join_driver_stats(spark, strategy):
     spine, view = _driver_stats(spark)
-    out = point_in_time_join(spine, [view], strategy=strategy).orderBy("driver_id")
+    out = point_in_time_join(spine, [view], **_strategy_kwargs(strategy)).orderBy(
+        "driver_id")
     rows = out.collect()
     assert [r.driver_id for r in rows] == [1001, 1002, 1003, 1004]
     by_id = {r.driver_id: r for r in rows}
@@ -130,7 +131,7 @@ def test_pit_join_driver_stats(spark, strategy):
 def test_pit_join_ttl_zero_means_no_lower_bound(spark, strategy):
     spine, view = _driver_stats(spark)
     view.ttl_seconds = 0  # reference :669, :688-690
-    out = point_in_time_join(spine, [view], strategy=strategy)
+    out = point_in_time_join(spine, [view], **_strategy_kwargs(strategy))
     by_id = {r.driver_id: r for r in out.collect()}
     assert by_id[1003].conv_rate == 3.0  # latest still wins even without bound
 
@@ -150,7 +151,7 @@ def test_pit_join_inclusive_asof_bound(spark):
         [(1, TS(2024, 1, 2))], "k bigint, event_timestamp timestamp"
     )
     view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp")
-    for strategy in ("broadcast", "union_window"):
+    for strategy in ("range_join", "union_window"):
         assert point_in_time_join(spine, [view], strategy=strategy).first().v == 42.0
 
 
@@ -183,7 +184,7 @@ def test_pit_join_rejects_output_name_collisions(spark):
                                  ["label_driver_reported_satisfaction"],
                                  "event_timestamp")
     with pytest.raises(ValueError, match="label_driver_reported_satisfaction"):
-        point_in_time_join(spine, [label_view], strategy="broadcast")
+        point_in_time_join(spine, [label_view], strategy="range_join")
 
     out = point_in_time_join(spine, [view, twin], full_feature_names=True)
     assert out.columns[-4:] == [
@@ -221,6 +222,21 @@ _AUTO_BRANCHES = {
     "auto_no_prune": {"auto_broadcast_rows": 0},  # melt, no key prune
     "auto_salted": {"salt_partition_budget_rows": 1},  # salted escalation
 }
+# strategy="range_join" down each side of its spine-row gate
+_RANGE_JOIN_SIDES = {
+    "broadcast": {},
+    "shuffle": {"auto_broadcast_rows": 0},
+}
+
+
+def _strategy_kwargs(name: str) -> dict:
+    """``point_in_time_join`` keyword arguments of a parametrized strategy
+    name: a range-join side, an ``auto`` branch, or a strategy as is."""
+    if name in _RANGE_JOIN_SIDES:
+        return {"strategy": "range_join", **_RANGE_JOIN_SIDES[name]}
+    if name in _AUTO_BRANCHES:
+        return {"strategy": "auto", **_AUTO_BRANCHES[name]}
+    return {"strategy": name}
 
 
 @pytest.mark.parametrize(
@@ -265,10 +281,7 @@ def test_pit_join_randomized_against_brute_force(spark, strategy, ttl):
     )
     view = FeatureViewSpec("fv", feat, ["k"], ["v"], "event_timestamp",
                            created_timestamp_column="created", ttl_seconds=ttl)
-    kwargs = _AUTO_BRANCHES.get(strategy)
-    if kwargs is not None:
-        strategy = "auto"
-    out = point_in_time_join(spine, [view], strategy=strategy, **(kwargs or {}))
+    out = point_in_time_join(spine, [view], **_strategy_kwargs(strategy))
     assert out.schema[:6] == spine.schema
     assert out.columns == [*spine.columns, "v"]
     got = Counter((*r[:5], tuple(r[5]), r[6]) for r in out.collect())
@@ -355,10 +368,8 @@ def test_pit_join_multiview_randomized_against_brute_force(spark, tmp_path, stra
                         field_mapping={"x_raw": "x"}),
         shared_view("e", ["k", "r"], ["w"], 7200),
     ]
-    kwargs = _AUTO_BRANCHES.get(strategy)
     out = point_in_time_join(
-        spine, views, full_feature_names=True,
-        strategy="auto" if kwargs is not None else strategy, **(kwargs or {}),
+        spine, views, full_feature_names=True, **_strategy_kwargs(strategy)
     )
     assert out.columns == [
         "k", "r", "event_timestamp", "a__v", "a__w", "c__v", "b__w", "d__x", "e__w"
@@ -429,7 +440,8 @@ def test_pit_join_strategies_on_ntz_timestamps(spark, strategy):
                            ttl_seconds=3600)
     got = {
         (r.k, r.event_timestamp): r.v
-        for r in point_in_time_join(spine, [view], strategy=strategy).collect()
+        for r in point_in_time_join(
+            spine, [view], **_strategy_kwargs(strategy)).collect()
     }
     expected = _brute_force_pit(spine_rows, feat_rows, 3600)
     assert got == expected
@@ -522,7 +534,7 @@ if _HAS_HYPOTHESIS:
             unique=True,
         ),
         ttl=st.sampled_from([0, 7200]),
-        strategy=st.sampled_from(["broadcast", "union_window"]),
+        strategy=st.sampled_from(["broadcast", "shuffle", "union_window"]),
     )
     @settings(
         max_examples=12,
@@ -555,7 +567,7 @@ if _HAS_HYPOTHESIS:
         got = {
             (r.k, r.event_timestamp): r.v
             for r in point_in_time_join(
-                spine_df, [view], strategy=strategy
+                spine_df, [view], **_strategy_kwargs(strategy)
             ).collect()
         }
         assert got == _brute_force_pit(spine_rows, feat_rows, ttl)
@@ -815,7 +827,8 @@ def test_pit_join_composite_keys(spark, strategy):
     view = FeatureViewSpec("fv", feat, ["region", "uid"], ["v"], "event_timestamp")
     got = {
         (r.region, r.uid): r.v
-        for r in point_in_time_join(spine, [view], strategy=strategy).collect()
+        for r in point_in_time_join(
+            spine, [view], **_strategy_kwargs(strategy)).collect()
     }
     assert got == {("us", 1): 1.0, ("eu", 1): 3.0, ("eu", 2): None}
 
@@ -958,7 +971,7 @@ def test_pit_salted_melt_multi_bucket_carry(spark, ttl):
         spine, view, "event_timestamp", False, lo, hi,
         salt_bucket_seconds=3600,  # 10+ buckets over the data span
     )
-    expected = point_in_time_join(spine, [view], strategy="broadcast")
+    expected = point_in_time_join(spine, [view], strategy="range_join")
     assert sorted(map(tuple, salted.collect())) == sorted(
         map(tuple, expected.collect())
     )
@@ -1887,7 +1900,7 @@ def test_prefilter_whole_hour_widening_is_exact(
             view = FeatureViewSpec("fv", feat, ["k"], ["v"], "ts", ttl_seconds=tol)
             runs = {
                 s: ("pit", point_in_time_join(spine, [view], strategy=s))
-                for s in ("union_window", "union_window_salted", "broadcast")
+                for s in ("union_window", "union_window_salted", "range_join")
             }
             for d in ("backward", "forward", "nearest"):
                 runs[d] = (d, asof_join(

@@ -14,6 +14,7 @@ rows outside TTL, and a created-timestamp tie, so every semantic branch of
 the as-of join is exercised, not mocked.
 """
 
+import functools
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -21,6 +22,7 @@ import pytest
 from pandas.testing import assert_frame_equal
 
 from feast_ibm_spark.operators.pit_join import FeatureViewSpec
+from feast_ibm_spark import store
 from feast_ibm_spark.store import SparkOfflineStore
 
 T = datetime  # brevity
@@ -113,8 +115,14 @@ def _run(spark, strategy: str, full_feature_names: bool = False) -> pd.DataFrame
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "shuffle", "union_window"])
-def test_driver_stats_matches_reference_expected_df(spark, strategy):
-    got = _run(spark, strategy)
+def test_driver_stats_matches_reference_expected_df(spark, monkeypatch, strategy):
+    """``broadcast`` and ``shuffle`` are the two sides of ``range_join``'s
+    spine-row gate; the store passes no row cap, so the shuffle side
+    lowers the operator's to 0."""
+    if strategy == "shuffle":
+        monkeypatch.setattr(store, "point_in_time_join", functools.partial(
+            store.point_in_time_join, auto_broadcast_rows=0))
+    got = _run(spark, "union_window" if strategy == "union_window" else "range_join")
     expected = _expected_pdf()
     assert_frame_equal(
         got[list(expected.columns)], expected, check_dtype=False
@@ -122,7 +130,7 @@ def test_driver_stats_matches_reference_expected_df(spark, strategy):
 
 
 def test_driver_stats_full_feature_names(spark):
-    got = _run(spark, "broadcast", full_feature_names=True)
+    got = _run(spark, "range_join", full_feature_names=True)
     assert list(got.columns) == [
         "driver_id",
         "event_timestamp",

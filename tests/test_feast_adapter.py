@@ -14,6 +14,8 @@ from feast_ibm_spark.feast_adapter import (
     _source_to_engine,
     _view_to_spec,
 )
+from feast_ibm_spark.operators.pit_join import point_in_time_join
+from feast_ibm_spark.plans.inspect import explain_str
 
 # the feature rows are UTC instants, as the pandas spines' naive
 # timestamps read in the engine's UTC session zone
@@ -123,9 +125,10 @@ def test_adapter_pull_latest(spark):
 
 
 def test_view_to_spec_detects_bucketed_source(spark):
-    """A table-backed source that is bucketed in the catalog flows its
-    bucket columns into FeatureViewSpec.bucketed_on, activating the PIT
-    auto strategy's zero-feature-shuffle broadcast carve-out."""
+    """A table-backed source that is bucketed on the join key takes the
+    PIT auto strategy's zero-feature-shuffle range-join carve-out with no
+    label on the spec: the join reads the bucketing from the source's
+    plan."""
     import shutil
 
     from feast_ibm_spark.sources.bucketed import write_bucketed
@@ -154,4 +157,12 @@ def test_view_to_spec_detects_bucketed_source(spark):
     spec = _view_to_spec(spark, view,
                          {"driver": SimpleNamespace(name="driver",
                                                     join_key="driver_id")})
-    assert spec.bucketed_on == ["driver_id"]
+    assert not hasattr(spec, "bucketed_on")  # no label on the spec
+    spine = spark.createDataFrame(
+        [(1001, TS(2021, 4, 13))],
+        "driver_id bigint, event_timestamp timestamp",
+    )
+    out = point_in_time_join(spine, [spec])
+    # WindowGroupLimit marks the range join's window; the melt has none
+    assert "WindowGroupLimit" in explain_str(out)
+    assert [r.conv_rate for r in out.collect()] == [1.0]

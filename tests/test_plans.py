@@ -56,7 +56,7 @@ def test_pit_join_broadcast_strategy_broadcasts(spark, events):
     view = FeatureViewSpec(
         "v", events, ["user_id"], ["value"], "ts", ttl_seconds=86400
     )
-    out = point_in_time_join(spine, [view], strategy="broadcast")
+    out = point_in_time_join(spine, [view], strategy="range_join")
     assert has_broadcast_join(out)
     text = explain_str(out)
     assert "CartesianProduct" not in text
@@ -161,24 +161,25 @@ def test_pit_join_date_partition_column_prunes_directories(
 
 
 def test_pit_strategies_absorb_hot_key_skew(spark):
-    """Hot-key behavior of the three PIT physical strategies, pinned on a
+    """Hot-key behavior of the PIT range join's two sides (broadcast and
+    shuffle, by ``auto_broadcast_rows``) and the melt, pinned on a
     spine whose source routes 50% of ALL events to one user (sf0.01:
     ~42k rows on one key).
 
     Measured findings (NOTES.md "PIT skew"):
-    - AQE's OptimizeSkewedJoin can NEVER split the shuffle strategy's
+    - AQE's OptimizeSkewedJoin can NEVER split the shuffle side's
       candidate join: the rule pattern-matches SMJ(Sort(ShuffleStage),
       Sort(ShuffleStage)), but the spine side always has the dedup
       aggregate (A2, reference :626-636) between its shuffle and the join
       — verified with forceOptimizeSkewedJoin=true and 16KB thresholds.
       The hot key is instead absorbed by the in-partition sort (spills,
       completes; a straggler at extreme scale).
-    - The broadcast strategy is the skew-resilient path: the feature side
+    - The broadcast side is the skew-resilient path: the feature side
       never shuffles on the key (BroadcastHashJoin against the spine), and
       the rn=1 window runs a map-side PARTIAL WindowGroupLimit before its
       exchange — each task ships at most one row per (key, ts) group, so
       a hot key's fanout never crosses the wire.
-    All three strategies must return identical results on the skewed input.
+    All three must return identical results on the skewed input.
     """
     ev = load_table(spark, "/root/testdata/sf0.01", "events")
     skewed = ev.withColumn(
@@ -192,8 +193,12 @@ def test_pit_strategies_absorb_hot_key_skew(spark):
     )
     results = {}
     plans = {}
-    for strat in ("broadcast", "shuffle", "union_window"):
-        out = point_in_time_join(spine, [view], strategy=strat)
+    for strat, kwargs in (
+        ("broadcast", {"strategy": "range_join"}),
+        ("shuffle", {"strategy": "range_join", "auto_broadcast_rows": 0}),
+        ("union_window", {"strategy": "union_window"}),
+    ):
+        out = point_in_time_join(spine, [view], **kwargs)
         results[strat] = sorted(map(tuple, out.collect()))
         plans[strat] = out._jdf.queryExecution().executedPlan().toString()
     assert results["shuffle"] == results["broadcast"]
@@ -596,14 +601,16 @@ def test_auto_pit_melts_with_key_pruning(spark, events):
 
 def test_bucketed_feature_table_elides_pit_window_exchange(spark, sf_dir):
     """A feature table bucketed on its join key already carries
-    hashpartitioning(key) out of the scan: the broadcast PIT strategy's
+    hashpartitioning(key) out of the scan: the broadcast range join's
     feature lineage then plans WITHOUT the window exchange (measured two
     fewer Exchanges whole-plan than the identical raw-parquet run), and
-    auto's bucketed carve-out picks broadcast over the melt — whose
-    spine union would discard the bucketed distribution."""
+    auto's bucketed carve-out, read from the source's plan with no label
+    on the view, picks the range join over the melt — whose spine union
+    would discard the bucketed distribution. With bucketed reads off the
+    scan carries no partitioning, and auto melts."""
     import re
 
-    from feast_ibm_spark.sources.bucketed import bucket_spec, write_bucketed
+    from feast_ibm_spark.sources.bucketed import write_bucketed
 
     import shutil
 
@@ -616,9 +623,6 @@ def test_bucketed_feature_table_elides_pit_window_exchange(spark, sf_dir):
     write_bucketed(ev, "pit_bucketed_feat", ["user_id"], 8,
                    sort_cols=["user_id", "ts"])
     bt = spark.table("pit_bucketed_feat")
-    spec = bucket_spec(spark, "pit_bucketed_feat")
-    assert spec == (["user_id"], 8)
-    assert bucket_spec(spark, "no_such_table_xyz") is None
 
     from datetime import datetime as TS
     spine = spark.createDataFrame(
@@ -628,20 +632,53 @@ def test_bucketed_feature_table_elides_pit_window_exchange(spark, sf_dir):
     def n_exchanges(feats):
         view = FeatureViewSpec("v", feats, ["user_id"], ["value"], "ts",
                                ttl_seconds=30 * 86400)
-        out = point_in_time_join(spine, [view], strategy="broadcast")
+        out = point_in_time_join(spine, [view], strategy="range_join")
         out.collect()
         return len(re.findall(
             r"Exchange", out._jdf.queryExecution().executedPlan().toString()))
 
     assert n_exchanges(bt) < n_exchanges(ev)
 
-    # auto carve-out: bucketed_on covering the join keys -> broadcast plan
-    # (WindowGroupLimit is broadcast's map-side marker; the melt has none)
+    # auto carve-out: a source bucketed on the join keys -> the broadcast
+    # range join (WindowGroupLimit is its map-side marker; the melt has
+    # none), through a rename too
     bview = FeatureViewSpec("v", bt, ["user_id"], ["value"], "ts",
-                            ttl_seconds=30 * 86400, bucketed_on=["user_id"])
+                            ttl_seconds=30 * 86400)
     auto_out = point_in_time_join(spine, [bview], strategy="auto")
     auto_plan = auto_out._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in auto_plan, auto_plan[:2000]
+    renamed = FeatureViewSpec(
+        "v", bt.withColumnRenamed("user_id", "uid"), ["user_id"], ["value"],
+        "ts", ttl_seconds=30 * 86400, field_mapping={"uid": "user_id"})
+    assert "WindowGroupLimit" in explain_str(
+        point_in_time_join(spine, [renamed], strategy="auto"))
+    from feast_ibm_spark.operators.pit_join import _bucketed_on_keys
+
+    # the probe plans the source and runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("pit_bucketing_probe", "bucketing probe")
+    try:
+        assert _bucketed_on_keys(FeatureViewSpec(
+            "v", spark.table("pit_bucketed_feat"), ["user_id"], [], "ts"))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not sc.statusTracker().getJobIdsForGroup("pit_bucketing_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # bucketed on a column that is not a join key, or not bucketed at all
+    assert not _bucketed_on_keys(FeatureViewSpec("v", bt, ["value"], [], "ts"))
+    assert not _bucketed_on_keys(FeatureViewSpec("v", ev, ["user_id"], [], "ts"))
+    # bucketed reads off: the scan is unpartitioned and auto melts
+    key = "spark.sql.sources.bucketing.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        off = FeatureViewSpec("v", spark.table("pit_bucketed_feat"), ["user_id"],
+                              ["value"], "ts", ttl_seconds=30 * 86400)
+        off_plan = explain_str(point_in_time_join(spine, [off], strategy="auto"))
+    finally:
+        spark.conf.set(key, old)
+    assert "WindowGroupLimit" not in off_plan, off_plan[:2000]
 
     # round-5 guard: a spine ABOVE auto_broadcast_rows must NOT take the
     # carve-out even over bucketed sources — broadcasting a huge spine's

@@ -398,6 +398,60 @@ def test_filter_ts_range_nanos_boundaries_randomized(spark, tmp_path):
         assert got == want
 
 
+def test_nanos_range_pushdown_survives_renames_and_partition_filters(spark, tmp_path):
+    """The raw-nanos range predicate reaches the parquet scan behind a
+    ``field_mapping`` rename in ``SparkDataSource.load`` and behind the
+    PIT join's own rename and date-partition filter: ``PushedFilters``
+    holds both raw-space bounds, not just ``IsNotNull``. Each of these
+    once dropped the pre-conversion frame ``filter_ts_range`` needs."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_ibm_spark.operators.pit_join import FeatureViewSpec, point_in_time_join
+    from feast_ibm_spark.operators.pull_all import time_range_scan
+    from feast_ibm_spark.plans.inspect import pushed_filters
+    from feast_ibm_spark.sources.reader import read_parquet
+
+    stamps = [pd.Timestamp(f"2024-01-0{d} 10:00", tz="UTC") for d in (1, 2, 3)]
+    p = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({
+        "k": [1, 1, 1],
+        "ts": pa.array([t.value + 7 for t in stamps], pa.timestamp("ns")),
+        "v": [1.0, 2.0, 3.0],
+        "ds": [t.strftime("%Y-%m-%d") for t in stamps],
+    }), p, version="2.6", coerce_timestamps=None)
+    lo, hi = stamps[1] - pd.Timedelta(hours=1), stamps[1]
+    raw_bounds = [f"GreaterThanOrEqual(ts, {lo.value})",
+                  f"LessThanOrEqual(ts, {hi.value + 999})"]
+
+    def assert_raw_pushdown(df, case):
+        fs = ", ".join(pushed_filters(df))
+        for bound in raw_bounds:
+            assert bound in fs, (case, fs)
+
+    src = SparkDataSource(path=p, timestamp_field="event_ts",
+                          field_mapping={"ts": "event_ts", "v": "x"})
+    scan = time_range_scan(src.load(spark), ["k"], ["x"], "event_ts", lo, hi)
+    assert_raw_pushdown(scan, "load field_mapping")
+    assert [r.x for r in scan.collect()] == [2.0]
+
+    spine = spark.createDataFrame(
+        [(1, stamps[1].to_pydatetime())], "k bigint, event_timestamp timestamp")
+    views = {
+        "view field_mapping": FeatureViewSpec(
+            "fv", read_parquet(spark, p), ["k"], ["x"], "event_ts",
+            ttl_seconds=3600, field_mapping={"ts": "event_ts", "v": "x"}),
+        "date partition filter": FeatureViewSpec(
+            "fv", read_parquet(spark, p), ["k"], ["v"], "ts",
+            ttl_seconds=3600, date_partition_column="ds"),
+    }
+    for case, view in views.items():
+        out = point_in_time_join(spine, [view], strategy="union_window")
+        assert_raw_pushdown(out, case)
+        assert [r[-1] for r in out.collect()] == [2.0], case
+
+
 def test_nanos_prefilter_reads_naive_bounds_in_the_driver_zone(spark, tmp_path):
     """A pandas spine retrieves the same rows under a UTC and a New York
     driver, on the nanos and the micros branch of ``filter_ts_range``.
